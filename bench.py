@@ -219,10 +219,16 @@ def main() -> None:
     # in OPTIMIZATION_r12.md + BENCH_NOTES.md; the env flag is read per
     # query construction (sources/catalog.py), so scoping it around the
     # probe loop is exact.
+    # The probe also pins spark.sql.shuffle.partitions to 32, the value
+    # every earlier round's probe ran with before partitions followed
+    # SPARK_GRAFT_CPUS (2x cores), so probe normalization stays valid at
+    # any core count; restored afterwards like the rebalance flag.
     probe_members = ("q_tpch_q1", "q_topk", "q_groupby_agg")
     probe: dict[str, float] = {}
     prev_rebalance = os.environ.get("SPARK_GRAFT_SCAN_REBALANCE")
+    prev_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     os.environ["SPARK_GRAFT_SCAN_REBALANCE"] = "off"
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
         for name in probe_members:
             best = float("inf")
@@ -236,6 +242,7 @@ def main() -> None:
             del os.environ["SPARK_GRAFT_SCAN_REBALANCE"]
         else:
             os.environ["SPARK_GRAFT_SCAN_REBALANCE"] = prev_rebalance
+        spark.conf.set("spark.sql.shuffle.partitions", prev_partitions)
 
     # Two runs per query, report the min: run 1 pays one-time plan/codegen
     # compilation for that query shape; run 2 is steady-state execution —
@@ -290,9 +297,10 @@ def main() -> None:
         "queries": probe,
         "total_best_sec": round(sum(probe.values()), 3),
         # Probe plans are pinned to the pre-r12 shape (scan rebalance
-        # off) so probe normalization is comparable across ALL rounds;
-        # see the probe loop above.
+        # off, 32 shuffle partitions) so probe normalization is
+        # comparable across ALL rounds; see the probe loop above.
         "scan_rebalance": "off",
+        "shuffle_partitions": 32,
         # These keys run 3x in the probe BEFORE the headline loop, so
         # their queries_cold entries above are steady-state, not cold —
         # cross-round cold comparisons must exclude them mechanically

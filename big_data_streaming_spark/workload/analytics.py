@@ -5585,7 +5585,7 @@ def q_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consumption. The distributed job is the transition-count aggregate
 # (two window passes + one hash agg — the 100 TB-heavy part); the
 # chain solve touches ≤30 collected scalars (bounded-collect rule,
-# PCA/BPE precedent). The oracle replays the identical integer
+# PCA precedent). The oracle replays the identical integer
 # iteration as unrolled MATERIALIZED CTEs (5 runs × 25 steps on ≤5-row
 # frames).
 _MKV_S = 10**12

@@ -33,6 +33,8 @@ Scale notes:
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -620,12 +622,14 @@ def q_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # has no lookarounds, so that form is not portable; for natural text the
 # difference only appears in degenerate runs like 'a b a b'.
 #
-# Scale: the state is the WORD VOCABULARY (w, freq, sym), aggregated
-# from the corpus ONCE and persisted — iterations never touch the
-# corpus again. Pair counting is a zip_with explode + combinable sum;
-# the per-iteration driver collect is the single winning pair (bounded-
-# scalar rule, SURVEY §4.3.8). At 100 TB: corpus → vocab is the only
-# heavy aggregate; 32k merges × tiny vocab-sized jobs after that.
+# Scale: the corpus is touched by ONE distributed aggregate, corpus →
+# word vocabulary (w, freq), which crosses to the driver once. The merges
+# then run in memory on a w → sym map: every merge depends on the
+# previous argmax, so each step is a global barrier, and a Spark job per
+# step would pay fixed job overhead for a vocabulary-sized computation.
+# Word-count-then-merge-in-memory is how standard BPE trainers work. The
+# driver-memory bound is the vocabulary, the same one q_bpe_tokens'
+# broadcast of the trained vocabulary already imposes.
 _BPE_MERGES = 8
 
 
@@ -673,70 +677,60 @@ def _bpe_oracle(n: int = _BPE_MERGES) -> str:
     return "".join(parts) + "\n    " + selects
 
 
+def _bpe_pairs(sym: str) -> list[tuple[str, str]]:
+    tk = sym.split(" ")
+    return list(zip(tk, tk[1:]))
+
+
 def bpe_train(
     df: DataFrame, text_col: str = "text", n_merges: int = _BPE_MERGES
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Run ``n_merges`` BPE merge iterations; return (merge_log,
+    """Run up to ``n_merges`` BPE merge iterations; return (merge_log,
     final_vocab) where merge_log is [(step, left, right, merged,
     pair_count)] and final_vocab is the (w, freq, sym) DataFrame after
     all merges — the segmentation table ``q_bpe_tokens`` applies.
-    Distributed pair counts; only the single winning pair crosses to
-    the driver per iteration."""
-    words = (
-        df.select(F.explode(F.split(text_col, " ")).alias("w"))
+    Training stops early once no adjacent pair is left.
+
+    The word vocabulary is aggregated in Spark and collected once; the
+    merges run in memory on it, with pair counts kept incrementally
+    (only words containing the winning pair are re-counted)."""
+    freq = {
+        r["w"]: r["freq"]
+        for r in df.select(F.explode(F.split(text_col, " ")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn(
-            "sym",
-            F.concat(
-                F.array_join(
-                    # Spark's sequence(1, 0) is the DESCENDING [1, 0], not
-                    # [] — an empty token (dirty whitespace) would grow two
-                    # phantom symbols and diverge from DuckDB's range(1,1)=[]
-                    # and the Python reference (review finding). Guard it.
-                    F.expr(
-                        "CASE WHEN length(w) = 0 THEN CAST(array() AS ARRAY<STRING>)"
-                        " ELSE transform(sequence(1, length(w)), i -> substr(w, i, 1))"
-                        " END"
-                    ),
-                    " ",
-                ),
-                F.lit(" </w>"),
-            ),
-        )
-        .persist()
-    )
+        .collect()
+    }
+    # An empty token (dirty whitespace) becomes ' </w>', i.e. the symbols
+    # ['', '</w>'].
+    sym = {w: " ".join(w) + " </w>" for w in freq}
+    counts: Counter = Counter()
+    for w, s in sym.items():
+        for p in _bpe_pairs(s):
+            counts[p] += freq[w]
     merges: list[tuple[int, str, str, str, int]] = []
-    cur = words
     for step in range(1, n_merges + 1):
-        pairs = (
-            cur.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(split(sym, ' '), 1, size(split(sym, ' ')) - 1),"
-                        " slice(split(sym, ' '), 2, size(split(sym, ' ')) - 1),"
-                        " (a, b) -> struct(a AS l, b AS r))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        top = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()[0]
-        l, r, cnt = top["l"], top["r"], int(top["cnt"])
+        if not counts:
+            break
+        (l, r), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((step, l, r, l + r, cnt))
-        cur = cur.withColumn(
-            "sym",
-            F.trim(
-                F.replace(
-                    F.concat(F.lit(" "), F.col("sym"), F.lit(" ")),
-                    F.lit(f" {l} {r} "),
-                    F.lit(f" {l}{r} "),
-                )
-            ),
-        ).localCheckpoint()
-    return merges, cur
+        old, new = f" {l} {r} ", f" {l}{r} "
+        for w, s in sym.items():
+            padded = f" {s} "
+            if old not in padded:
+                continue
+            for p in _bpe_pairs(s):
+                counts[p] -= freq[w]
+            # Spark's and DuckDB's trim strip spaces only, not all whitespace
+            sym[w] = s = padded.replace(old, new).strip(" ")
+            for p in _bpe_pairs(s):
+                counts[p] += freq[w]
+        counts = +counts  # drop pairs whose count fell to zero
+    vocab = df.sparkSession.createDataFrame(
+        [(w, freq[w], s) for w, s in sym.items()],
+        "w string, freq bigint, sym string",
+    )
+    return merges, vocab
 
 
 @_q("q_bpe_train", _bpe_oracle())

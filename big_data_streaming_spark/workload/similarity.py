@@ -1740,7 +1740,7 @@ def q_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # radius. Scale: per step ONE broadcast of the new center's 64
 # components against the exploded corpus (O(n·dims) grouped rows), the
 # running min-distance relation localCheckpoints per step, and the
-# argmax collects ONE row (BPE precedent) — never a pairwise n² join.
+# argmax collects ONE row — never a pairwise n² join.
 _KC_PICKS = 8
 _KC_SCALE = 10_000
 

@@ -3150,7 +3150,7 @@ def q_doc_langmix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # template (the q_pagerank discipline: per-round text cannot drift).
 # Spark side: the shingle relation is computed once and persisted;
 # each round is one anti-join + one aggregate + a 1-row collect (the
-# BPE bounded-scalar rule, 10 rows total). Zero-gain docs drop out of
+# bounded-scalar rule, SURVEY §4.3.8; 10 rows total). Zero-gain docs drop out of
 # the scoring relation identically in both engines. 100 TB: gains are
 # posting-list aggregates; the candidate pool is pre-filtered (top-N
 # by doc stats) before the greedy loop, and lazy evaluation bounds

@@ -51,14 +51,17 @@ def main() -> None:
     rc = 0
     for name in keys:
         s = qs[name](spark, sf_dir).toPandas()
-        sv = sorted(map(str, s[sorted(s.columns)].astype(str).values.tolist()))
+        # Columns in case-insensitive order on both sides, as the column-set
+        # check below compares them: a case difference in one name must not
+        # misalign the value lists.
+        sv = sorted(map(str, s[sorted(s.columns, key=str.lower)].astype(str).values.tolist()))
         if name not in oracles:
             h = hashlib.md5("\n".join(sv).encode()).hexdigest()[:16]
             print(json.dumps({"key": name, "rows": len(s), "row_hash": h,
                               "status": "rows-only"}))
             continue
         o = con.execute(oracles[name]).fetch_df()
-        ov = sorted(map(str, o[sorted(o.columns)].astype(str).values.tolist()))
+        ov = sorted(map(str, o[sorted(o.columns, key=str.lower)].astype(str).values.tolist()))
         ok = (
             len(s) == len(o)
             and sorted(c.lower() for c in s.columns)
