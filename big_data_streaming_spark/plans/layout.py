@@ -15,20 +15,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-KLINE_PARTITION_KEYS = ("coin", "interval", "year", "month")
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_keys: Sequence[str] = KLINE_PARTITION_KEYS,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Curated-layer layout: directory-partitioned by the routing keys.
-    Pruning applies to any equality/range predicate on the keys."""
-    df.write.format(fmt).mode(mode).partitionBy(*partition_keys).save(path)
-
 
 def write_bucketed(
     df: DataFrame,
@@ -47,19 +33,6 @@ def write_bucketed(
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.mode("overwrite").saveAsTable(table)
-
-
-def repartition_for_join(
-    left: DataFrame, right: DataFrame, key: str, partitions: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Pre-shuffle both sides identically so a chain of operations on the
-    same key (join → groupBy → window) reuses ONE exchange instead of
-    re-shuffling per stage."""
-    # The DataFrames carry their own session — getActiveSession() is None
-    # on threads that never touched one (e.g. foreachBatch callbacks).
-    spark = left.sparkSession
-    n = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return left.repartition(n, key), right.repartition(n, key)
 
 
 def write_with_bloom_filters(

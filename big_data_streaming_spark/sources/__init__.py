@@ -1,3 +1,3 @@
-from big_data_streaming_spark.sources.catalog import load_table, load_tables
+from big_data_streaming_spark.sources.catalog import load_table
 
-__all__ = ["load_table", "load_tables"]
+__all__ = ["load_table"]

@@ -18,8 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
-from big_data_streaming_spark.schemas import TESTDATA_TABLES
-
 
 def _ensure_session_confs(spark: SparkSession) -> None:
     """The caller may hand us a session built elsewhere (the correctness
@@ -170,13 +168,3 @@ def load_table(
     _ensure_session_confs(spark)
     df = normalize_raw_timestamps(spark.read.parquet(path), path)
     return _rebalance_unsplittable(spark, df, path) if rebalance else df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for ``spark.sql`` use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

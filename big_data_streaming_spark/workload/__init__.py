@@ -10,11 +10,24 @@ Each submodule defines two dicts:
 
 The registry is consumed by ``__spark_entry__.py`` (driver contract) and by
 ``bench.py``/tests.
+
+Registry order is part of the driver contract: the driver's correctness
+gate checks only the first 50 entries of ``queries()``. The order is
+computed from the driver's own reports, the ``CORRECTNESS_r<N>.json``
+files at the repo root: oracle-bearing keys first, then by last green
+round (the round ``N`` of a key's latest row if that row matched with no
+error, else 0 — so never-checked and red keys lead), then module order.
+The window therefore rotates to the least recently confirmed keys each
+time the driver commits a new report. With no reports the order is module
+order, rows-only keys last.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Collection, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,684 +57,27 @@ _MODULES = (
     _geo,
 )
 
-# Registry order is part of the driver contract: the driver's correctness
-# gate checks the FIRST 50 entries of ``queries()`` and stops. Round 1
-# concatenated modules naively, which pushed every text/dedup/similarity/
-# streaming key past position 49 — 33 queries got zero driver signal
-# (VERDICT.md round 1, "Next round" #1). ``_CHECK_FIRST`` pins the window
-# with a rotation policy: queries that have never received a driver
-# correctness row come FIRST (the round-1 unchecked 33, the 4 reworked
-# canonicalizer fixes, and anything added since the last snapshot), then
-# a small set of load-bearing already-green anchors. Everything else —
-# all green in CORRECTNESS_r01 — fills the tail in module order. The
-# round-2 window is FULL (exactly the 50 highest-priority round-1
-# first-timers); queries added later in round 2 therefore queue in the
-# rotation-candidate block below the window and are first in line for
-# the round-3 window (they are all green under the in-repo gate replica
-# at sf0.001/0.01/0.1 — the driver row is confirmation, not discovery).
-#
-# ROUND-3 ROTATION (executed): CORRECTNESS_r02 came back 47 green + 3
-# declared rows-only, zero failures — all 50 round-2 window keys moved to
-# the tail. The round-3 window promotes, per the round-2 TODO's priority
-# order: (1) the round-2-finale wave (ER, streaming top-k, gate-checked
-# sessionizer, nearest as-of, TWAP/realized-vol, corrupt quarantine),
-# (2) the rows-only keys' value-checked audit twins, (3) the third-wave +
-# completion operators (q_ohlc_bars … q_kanonymity), (4) the first three
-# TPC-H completion queries to fill the window to exactly 50.
-#
-# ROUND-6 ROTATION (executed per the TODO + VERDICT.md r5 task 1):
-# CORRECTNESS_r05 came back 49 green + 1 rows-only-by-design
-# (q_dedup_simhash, ran 25 rows), 0 red. All 50 r5 window keys move to
-# the tail ("driver-checked in round 5" block). The new window promotes,
-# in the TODO's priority order: (1) q_zipf_audit, (2) the round-3
-# additions (q_bollinger … q_monotonic_audit, 34 keys), (3) the first 15
-# round-4 additions (q_winnow_fingerprint … q_rendezvous_shards) to fill
-# the window to exactly 50. All 50 are full-oracle (zero rows-only slots
-# used; the contract test allows <=3).
-#
-# ROUND-7 ROTATION (executed per the TODO + VERDICT.md r6 task 1):
-# CORRECTNESS_r06 came back 50/50 full-green (zero rows-only slots used,
-# zero red). All 50 r6 window keys move to the tail ("driver-checked in
-# round 6" block). The new window promotes the first 50 of the remaining
-# round-4 additions (q_rle_advisor … q_ab_power) — all full-oracle,
-# gate-green at sf0.001/0.01/0.1.
-#
-# ROUND-8 ROTATION (executed per the TODO + VERDICT.md r7 task 1):
-# CORRECTNESS_r07 came back 50/50 full-green (zero rows-only slots used,
-# zero red). All 50 r7 window keys move to the tail ("driver-checked in
-# round 7" block). The new window promotes the next 50 of the remaining
-# round-4 additions (q_quantile_sketch_audit … q_missingness) — all
-# full-oracle, gate-green at sf0.001/0.01/0.1.
-#
-# ROUND-9 ROTATION (executed per the TODO + VERDICT.md r8 task 1):
-# CORRECTNESS_r08 came back 50/50 full-green (zero rows-only slots used,
-# zero red). All 50 r8 window keys move to the tail ("driver-checked in
-# round 8" block). The new window promotes the first 50 of the remaining
-# round-4 additions (q_rbo … q_daypart_interaction) — all full-oracle,
-# gate-green at sf0.001/0.01/0.1.
-#
-# ROUND-10 ROTATION (executed per the TODO + VERDICT.md r9 task 1):
-# CORRECTNESS_r09 came back 50/50 full-green (zero rows-only slots used,
-# zero red). All 50 r9 window keys move to the tail ("driver-checked in
-# round 9" block). The new window promotes the last two round-4
-# additions (q_temporal_integrity, q_monthly_swing) + the first 48
-# round-5 additions (q_geo_grid … q_crosstab_residuals) — all
-# full-oracle, gate-green at sf0.001/0.01/0.1, and pre-audited by the
-# round-9 replica campaign (tests/test_r10window_audit{,2,3,4}.py).
-#
-# ROUND-11 ROTATION TODO: once CORRECTNESS_r10 lands, move its green
-# keys to the tail and promote the next unchecked block — priority
-# order: (1) the last two round-5 additions (q_new_vs_returning,
-# q_basket_size_dist), (2) round-6 additions (q_window_funnel …
-# q_multi_supplier_share), (3) round-7/8/9/10 additions queued below
-# them. Every queued key is gate-green at sf0.001/0.01/0.1.
-_CHECK_FIRST: tuple[str, ...] = (
-    # ============ round-10 driver window (positions 0-49) ================
-    # Last two round-4 additions + first 48 round-5 additions
-    # (q_temporal_integrity … q_crosstab_residuals) — full-oracle,
-    # gate-green at sf0.001/0.01/0.1; never driver-checked until this
-    # window; formula keys pre-audited by test_r10window_audit{,2,3,4}.
-    "q_temporal_integrity",
-    "q_monthly_swing",
-    "q_geo_grid",
-    "q_geo_knn",
-    "q_eoq_advisor",
-    "q_kelly",
-    "q_shapley",
-    "q_pk_discovery",
-    "q_broadcast_advisor",
-    "q_value_patterns",
-    "q_doc_selfrep",
-    "q_wasserstein_drift",
-    "q_burstiness",
-    "q_quantile_normalize",
-    "q_sorted_neighborhood",
-    "q_tcloseness",
-    "q_median_polish",
-    "q_dict_advisor",
-    "q_joinsize_estimator",
-    "q_control_chart",
-    "q_process_capability",
-    "q_dedup_bias",
-    "q_join_skew_advisor",
-    "q_period_detect",
-    "q_knee_point",
-    "q_markov_eval",
-    "q_queueing_advisor",
-    "q_stream_imr",
-    "q_var_es",
-    "q_var_backtest",
-    "q_state_size_advisor",
-    "q_clustering_coeff",
-    "q_payload_histogram",
-    "q_weak_labels",
-    "q_twfe",
-    "q_group_sequential",
-    "q_mv_advisor",
-    "q_price_elasticity",
-    "q_anomaly_consensus",
-    "q_error_budget",
-    "q_heaps_curve",
-    "q_market_beta",
-    "q_freshness_audit",
-    "q_pareto_thresholds",
-    "q_seasonal_strength",
-    "q_retention_curve",
-    "q_stickiness",
-    "q_dup_size_dist",
-    "q_dau_overlap",
-    "q_crosstab_residuals",
-    # ============ round-11 rotation candidates (positions 50+) ===========
-    # Last two round-5 additions (window overflow — the round-10 window
-    # filled at q_crosstab_residuals); first in line for round 11.
-    "q_new_vs_returning",
-    "q_basket_size_dist",
-    # Round-6 additions — full-oracle, gate-green at sf0.001/0.01/0.1;
-    # queued behind the round-5 block for the round-7/8 windows.
-    "q_window_funnel",
-    "q_sequence_match",
-    "q_mood_median",
-    "q_mase",
-    "q_cox_stuart",
-    "q_grubbs",
-    "q_yule_k",
-    "q_basket_triples",
-    "q_char_class_profile",
-    "q_tokenizer_fertility",
-    "q_fleiss_kappa",
-    "q_context_plan",
-    "q_geo_hotspots",
-    "q_geo_multires",
-    "q_ansari_bradley",
-    "q_page_trend",
-    "q_hodges_lehmann",
-    "q_embed_outliers",
-    "q_stopword_profile",
-    "q_length_outliers",
-    "q_quality_curve",
-    "q_day_checksums",
-    "q_geo_bbox",
-    "q_gini_revenue",
-    "q_stream_decay_topk",
-    "q_percent_rank",
-    "q_bucket_histogram",
-    "q_first_last_touch",
-    "q_dedup_canonical",
-    "q_token_position_bias",
-    "q_rank_shift",
-    "q_max_concurrency",
-    "q_partial_merge_audit",
-    "q_bigram_redundancy",
-    "q_top_value_share",
-    "q_lifetime_span_dist",
-    "q_mode_value",
-    "q_wilcoxon_signed_rank",
-    "q_quantile_shift",
-    "q_revenue_bridge",
-    "q_session_size_dist",
-    "q_activation_week",
-    "q_source_tv_matrix",
-    "q_atkinson_index",
-    "q_graph_conductance",
-    "q_weighted_jaccard_days",
-    "q_new_items_share",
-    "q_weekend_uplift",
-    "q_type_diversity_dist",
-    "q_hhi_by_nation",
-    "q_stream_user_ewma",
-    "q_dup_cluster_purity",
-    "q_oov_rate",
-    "q_funnel_by_cohort",
-    "q_embed_stride_distances",
-    "q_cr4_by_nation",
-    "q_calendar_gaps",
-    "q_events_to_purchase",
-    "q_sentence_stats",
-    "q_multi_supplier_share",
-    # Round-7 additions (13 — growth capped below the 50-key window per
-    # VERDICT r6 task 2) — full-oracle, gate-green at sf0.001/0.01/0.1;
-    # queued behind the round-6 block for the round-8+ windows.
-    "q_cliff_delta",
-    "q_kuiper_drift",
-    "q_dwell_stats",
-    "q_compaction_advisor",
-    "q_user_type_affinity",
-    "q_running_backlog",
-    "q_cold_start_suppliers",
-    "q_share_shift_movers",
-    "q_embed_bit_profile",
-    "q_embed_class_scatter",
-    "q_vocab_growth_by_source",
-    "q_lead_bigram_boilerplate",
-    "q_audio_clip_detect",
-    "q_kmv_distinct",
-    "q_quota_apportion",
-    "q_lpa_communities",
-    "q_stream_gap_alert",
-    "q_kmv_setops",
-    "q_ransac",
-    "q_dbscan_grid",
-    # Round-8 additions (12 — growth capped below the 50-key window per
-    # VERDICT r7 task 2) — full-oracle, gate-green at sf0.001/0.01/0.1;
-    # queued behind the round-7 block for the round-9+ windows.
-    "q_gk_lambda",
-    "q_lecam_drift",
-    "q_chow_test",
-    "q_cochran_armitage",
-    "q_cronbach_alpha",
-    "q_icc_value",
-    "q_davies_bouldin",
-    "q_allan_variance",
-    "q_rescaled_range",
-    "q_sprt_monitor",
-    "q_palma_ratio",
-    "q_breusch_pagan",
-    # Round-9 additions (12 — growth capped below the 50-key window per
-    # VERDICT r8 task 2) — full-oracle, gate-green at sf0.001/0.01/0.1;
-    # queued behind the round-8 block for the round-10+ windows.
-    "q_somers_d",
-    "q_gk_gamma",
-    "q_stuart_tau_c",
-    "q_mh_odds",
-    "q_dixon_q",
-    "q_lorenz_asymmetry",
-    "q_kendall_w",
-    "q_hoover_index",
-    "q_gini_md",
-    "q_bowley_skew",
-    "q_moran_i",
-    "q_geary_c",
-    # Round-10 additions (12 — growth capped below the 50-key window per
-    # VERDICT r9 task 2) — full-oracle, gate-green at sf0.001/0.01/0.1;
-    # queued behind the round-9 block for the round-11+ windows.
-    "q_weighted_kappa",
-    "q_gwet_ac1",
-    "q_gk_tau",
-    "q_cucconi",
-    "q_lepage",
-    "q_siegel_tukey",
-    "q_brunner_munzel",
-    "q_pettitt",
-    "q_mmd_poly",
-    "q_dunn_index",
-    "q_ripley_k",
-    "q_blomqvist_beta",
-    # -- driver-checked in round 9 (CORRECTNESS_r09: 50/50 full-green,
-    # 0 rows-only, 0 red) — rotated to the tail ---------------------------
-    "q_rbo",
-    "q_energy_test",
-    "q_jonckheere",
-    "q_logrank",
-    "q_partial_corr",
-    "q_granger_lite",
-    "q_variance_ratio",
-    "q_pacf",
-    "q_rfm_migration",
-    "q_abc_analysis",
-    "q_cohort_revenue",
-    "q_ship_delay",
-    "q_stream_srm",
-    "q_neyman",
-    "q_mde_curve",
-    "q_growth_accounting",
-    "q_hash_uniformity",
-    "q_daily_bands",
-    "q_boot_diff",
-    "q_jl_audit",
-    "q_token_burst",
-    "q_scan_stat",
-    "q_record_days",
-    "q_ljung_box",
-    "q_keyness",
-    "q_source_jaccard",
-    "q_holt_winters",
-    "q_jarque_bera",
-    "q_page_hinkley",
-    "q_sen_slope",
-    "q_capture_recapture",
-    "q_chao1",
-    "q_simpsons_check",
-    "q_churn_baseline",
-    "q_bloom_advisor",
-    "q_order_seasonality",
-    "q_reorder_gap",
-    "q_yoy_growth",
-    "q_return_rates",
-    "q_price_dispersion",
-    "q_supplier_scorecard",
-    "q_discount_corr",
-    "q_priority_drift",
-    "q_mau_retention",
-    "q_balance_segments",
-    "q_cross_source_dups",
-    "q_stream_frontier",
-    "q_dead_stock",
-    "q_type_rollup",
-    "q_daypart_interaction",
-    # -- driver-checked in round 8 (CORRECTNESS_r08: 50/50 full-green,
-    # 0 rows-only, 0 red) — rotated to the tail ---------------------------
-    "q_quantile_sketch_audit",
-    "q_linkage_em",
-    "q_conformal_interval",
-    "q_km_survival",
-    "q_lift_curve",
-    "q_propensity_strata",
-    "q_sax_symbols",
-    "q_cvm_test",
-    "q_kruskal_wallis",
-    "q_anova_f",
-    "q_mcnemar",
-    "q_cochran_q",
-    "q_hhi",
-    "q_fano",
-    "q_durbin_watson",
-    "q_runs_test",
-    "q_kendall_tau",
-    "q_mann_kendall",
-    "q_friedman",
-    "q_levene_bf",
-    "q_hapax",
-    "q_brier",
-    "q_ccf",
-    "q_jackknife",
-    "q_perm_test",
-    "q_silhouette",
-    "q_medoid",
-    "q_mad_outliers",
-    "q_evt_gumbel",
-    "q_smd_balance",
-    "q_isotonic",
-    "q_gini_gain",
-    "q_peak_detect",
-    "q_qini",
-    "q_bland_altman",
-    "q_recency_score",
-    "q_cuped",
-    "q_srm",
-    "q_collocations",
-    "q_markov_stationary",
-    "q_morisita",
-    "q_yule_q",
-    "q_lag_features",
-    "q_watermark_advisor",
-    "q_merge_audit",
-    "q_funnel_time",
-    "q_rolling_corr",
-    "q_hod_anova",
-    "q_iqr_outliers",
-    "q_missingness",
-    # -- driver-checked in round 7 (CORRECTNESS_r07: 50/50 full-green,
-    # 0 rows-only, 0 red) — rotated to the tail ---------------------------
-    "q_rle_advisor",
-    "q_anon_ldiversity",
-    "q_rr_privacy",
-    "q_stream_quantile",
-    "q_bloom_membership",
-    "q_graph_reciprocity",
-    "q_heavy_hitters",
-    "q_tail_concentration",
-    "q_zonemap_advisor",
-    "q_sample_coherent",
-    "q_golden_record",
-    "q_cramers_v",
-    "q_forecast_eval",
-    "q_doc_langmix",
-    "q_partition_planner",
-    "q_selfjoin_estimator",
-    "q_acceptance_sampling",
-    "q_centroid_shift",
-    "q_graph_assortativity",
-    "q_session_gap_advisor",
-    "q_float32_audit",
-    "q_qq_plot",
-    "q_priority_sampling",
-    "q_stratified_kfold",
-    "q_maxcover_select",
-    "q_seq_rules",
-    "q_blocking_eval",
-    "q_poisson_bootstrap",
-    "q_welch_t",
-    "q_diff_in_diff",
-    "q_lsh_advisor",
-    "q_changepoint",
-    "q_session_count_grid",
-    "q_ndcg",
-    "q_precision_at_k",
-    "q_spearman",
-    "q_cohen_kappa",
-    "q_link_predict",
-    "q_dsir_weights",
-    "q_holt",
-    "q_markov_attribution",
-    "q_image_dhash",
-    "q_ppr",
-    "q_hits",
-    "q_rate_limit",
-    "q_kcenter_select",
-    "q_f1_threshold",
-    "q_symspell_pairs",
-    "q_trimmed_mean",
-    "q_ab_power",
-    # -- driver-checked in round 6 (CORRECTNESS_r06: 50/50 full-green,
-    # 0 rows-only, 0 red) — rotated to the tail ---------------------------
-    "q_zipf_audit",
-    "q_bollinger",
-    "q_rsi",
-    "q_refint_audit",
-    "q_s_core",
-    "q_bigram_score",
-    "q_feature_hash",
-    "q_loss_mask",
-    "q_minmax_scale",
-    "q_stream_full_outer",
-    "q_lag_corr",
-    "q_stream_complete_rank",
-    "q_maxsim",
-    "q_asof_tolerance",
-    "q_seasonal_decompose",
-    "q_covisit",
-    "q_pit_features",
-    "q_embed_cov",
-    "q_pca_power",
-    "q_hellinger_drift",
-    "q_assoc_rules",
-    "q_table_checksum",
-    "q_fd_audit",
-    "q_stream_drift",
-    "q_rrf_fusion",
-    "q_schema_evolution",
-    "q_calibration",
-    "q_outlier_maha",
-    "q_dataset_card",
-    "q_stream_asof",
-    "q_attribution_multi",
-    "q_rate_smoothing",
-    "q_mmr_rerank",
-    "q_salted_join",
-    "q_monotonic_audit",
-    "q_winnow_fingerprint",
-    "q_mix_temperature",
-    "q_percentile_cont",
-    "q_mannwhitney",
-    "q_theilsen",
-    "q_stream_neardup",
-    "q_ngram_leakage",
-    "q_filter_cascade",
-    "q_audience_overlap",
-    "q_winnow_pairs",
-    "q_lorenz_deciles",
-    "q_source_overlap",
-    "q_label_spread",
-    "q_slice_finder",
-    "q_rendezvous_shards",
-    # -- driver-checked in round 5 (CORRECTNESS_r05: 49 green + 1
-    # rows-only q_dedup_simhash, 0 red) — rotated to the tail ------------
-    "q_dedup_simhash",
-    "q_funnel",
-    "q_triangles",
-    "q_window_distribution",
-    "q_dq_audit",
-    "q_rolling_median",
-    "q_retention",
-    "q_snapshot_diff",
-    "q_try_arith",
-    "q_interval_merge",
-    "q_transitions",
-    "q_paths",
-    "q_anomaly_zscore",
-    "q_benford",
-    "q_skyline",
-    "q_equidepth_bins",
-    "q_abtest",
-    "q_bm25",
-    "q_token_gini",
-    "q_embed_quantize",
-    "q_streaks",
-    "q_winsorize",
-    "q_mad",
-    "q_sample_reservoir",
-    "q_stream_window_chained",
-    "q_bfs_hops",
-    "q_attribution",
-    "q_ivm_merge",
-    "q_embed_dimstats",
-    "q_text_normalize",
-    "q_rolling_distinct",
-    "q_cooccurrence",
-    "q_time_to_convert",
-    "q_skew_audit",
-    "q_listagg",
-    "q_hard_negatives",
-    "q_weighted_median",
-    "q_id_gaps",
-    "q_cusum",
-    "q_acf",
-    "q_ewma",
-    "q_keywords",
-    "q_lang_confusion",
-    "q_asof_forward",
-    "q_scd2_lookup",
-    "q_pattern_vshape",
-    "q_catalog_counts",
-    "q_multimodal_resize",
-    "q_char_ngrams",
-    "q_doc_jaccard",
-    # -- driver-checked in round 4 (CORRECTNESS_r04: 47 green + 3
-    # rows-only, 0 red) — rotated to the tail ------------------------------
-    "q_agg_boolean",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_tpch_q9",
-    "q_tpch_q10",
-    "q_tpch_q11",
-    "q_tpch_q12",
-    "q_tpch_q13",
-    "q_tpch_q14",
-    "q_tpch_q15",
-    "q_tpch_q16",
-    "q_tpch_q17",
-    "q_tpch_q19",
-    "q_tpch_q20",
-    "q_tpch_q21",
-    "q_tpch_q22",
-    "q_modularity",
-    "q_graph_evolution",
-    "q_frame_sample",
-    "q_stream_cdc",
-    "q_negative_sampling",
-    "q_ohlc_daily",
-    "q_vwap",
-    "q_seasonality",
-    "q_drawdown",
-    "q_cohort_ltv",
-    "q_rfm",
-    "q_top_n_other",
-    "q_url_normalize",
-    "q_explode_outer",
-    "q_seasonal_anomaly",
-    "q_kanon_generalize",
-    "q_dedup_near_pairs",
-    "q_minhash_signature",
-    "q_embed_neardup",
-    "q_scalar_map",
-    "q_doc_chunks",
-    "q_embed_normalize",
-    "q_multimodal_audio",
-    "q_gap_fill",
-    "q_format_roundtrip",
-    "q_sketch_cms",
-    "q_salted_agg",
-    "q_zorder_layout",
-    "q_line_dedup",
-    "q_kmeans",
-    "q_join_full",
-    "q_join_cross",
-    "q_join_nullsafe",
-    "q_scd2_build",
-    # -- driver-green in round 3 (CORRECTNESS_r03) — rotated to the tail --
-    "q_entity_resolution",
-    "q_multi_distinct",
-    "q_minhash_audit",
-    "q_profile_columns",
-    "q_group_split",
-    "q_simhash_audit",
-    "q_corrupt_quarantine",
-    "q_stream_topk",
-    "q_stream_sessionize",
-    "q_asof_nearest",
-    "q_nested_json",
-    "q_twap",
-    "q_realized_vol",
-    "q_sql_udf",
-    "q_dedup_cc_checked",
-    "q_sim_ivf_checked",
-    "q_multimodal_features",
-    "q_ohlc_bars",
-    "q_dedup_incremental",
-    "q_ols_by_group",
-    "q_bigram_lm",
-    "q_stream_ohlc",
-    "q_robust_scaler",
-    "q_token_budget",
-    "q_knn_classify",
-    "q_shortest_path",
-    "q_containment",
-    "q_cdc_apply",
-    "q_bpe_train",
-    "q_bpe_tokens",
-    "q_simpson_diversity",
-    "q_gini_sources",
-    "q_vocab_coverage",
-    "q_intersect_all",
-    "q_except_all",
-    "q_grouping_id",
-    "q_percentile_disc",
-    "q_agg_bitwise",
-    "q_target_encoding",
-    "q_wilson_rank",
-    "q_ks_drift",
-    "q_chi2",
-    "q_auc",
-    "q_retrieval_mrr",
-    "q_sessionize_label",
-    "q_kanonymity",
-    "q_tpch_q1",
-    "q_tpch_q2",
-    "q_tpch_q4",
-    # -- driver-green in round 2 (CORRECTNESS_r02) — rotated to the tail --
-    "q_scalar_date",
-    "q_scalar_null",
-    "q_date_format",
-    "q_udf_roundtrip",
-    "q_dedup_exact",
-    "q_text_tokens",
-    "q_explode_tokens",
-    "q_top_tokens_per_lang",
-    "q_text_quality",
-    "q_text_lang",
-    "q_token_count",
-    "q_text_fingerprint",
-    "q_multimodal_meta",
-    "q_tfidf",
-    "q_dedup_ngram",
-    "q_dedup_near",
-    "q_edit_distance",
-    "q_dedup_components",
-    "q_multimodal_decode",
-    "q_training_prep",
-    "q_sample_stratified",
-    "q_sim_topk",
-    "q_sim_ivf",
-    "q_stream_window_tumbling",
-    "q_stream_window_sliding",
-    "q_stream_window_session",
-    "q_route_by_key",
-    "q_scalar_array",
-    "q_approx_distinct",
-    "q_approx_percentile",
-    "q_freq_items",
-    "q_contamination",
-    "q_pii_scrub",
-    "q_repetition_signals",
-    "q_stream_stream_join",
-    "q_mix_domains",
-    "q_train_order",
-    "q_pack_sequences",
-    "q_lm_novelty",
-    "q_stream_dedup",
-    "q_join_bucketed",
-    "q_tpch_q5",
-    "q_tpch_q18",
-    "q_dedup_semantic",
-    "q_quality_classifier",
-    "q_token_runs",
-    "q_udaf_grouped",
-    "q_stream_static_join",
-    "q_training_prep_v2",
-    "q_stream_feed",
-    # -- already-green (r01) flagship ------------------------------------
-    "q_flagship",
-)
+_REPORT = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def check_order(
+    names: Iterable[str], oracles: Collection[str], report_dir: Path
+) -> list[str]:
+    """``names`` ordered for the driver's check window (module docstring).
+
+    The sort is stable, so ties keep the order ``names`` came in."""
+    reports = sorted(
+        (int(m[1]), p)
+        for p in report_dir.iterdir()
+        if (m := _REPORT.fullmatch(p.name))
+    )
+    last_green: dict[str, int] = {}
+    for n, path in reports:
+        for name, row in json.loads(path.read_text()).items():
+            green = row.get("hash_match") is True and row.get("err") is None
+            last_green[name] = n if green else 0
+    return sorted(names, key=lambda k: (k not in oracles, last_green.get(k, 0)))
+
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -733,10 +89,6 @@ for _m in _MODULES:
         raise ValueError(f"duplicate query keys across workload modules: {_dup}")
     _ALL.update(_m.QUERIES)
     ORACLES.update(getattr(_m, "ORACLES", {}))
-
-_missing = set(_CHECK_FIRST) - _ALL.keys()
-if _missing:
-    raise ValueError(f"_CHECK_FIRST names unknown queries: {_missing}")
 
 
 def _with_cache_release(
@@ -767,11 +119,8 @@ def _with_cache_release(
     return wrapped
 
 
-for _name in _CHECK_FIRST:
+for _name in check_order(_ALL, ORACLES, Path(__file__).resolve().parents[2]):
     QUERIES[_name] = _with_cache_release(_ALL[_name])
-for _name, _fn in _ALL.items():
-    if _name not in QUERIES:
-        QUERIES[_name] = _with_cache_release(_fn)
 
 _orphans = ORACLES.keys() - QUERIES.keys()
 if _orphans:

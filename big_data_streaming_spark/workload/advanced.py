@@ -41,20 +41,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_streaming_spark.workload.common import t
+from big_data_streaming_spark.workload.common import registry, t
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # --- B7 extension: LATERAL correlated join -------------------------------

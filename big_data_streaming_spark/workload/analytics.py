@@ -58,22 +58,12 @@ from big_data_streaming_spark.workload.common import (
     ohlc_oracle,
     oracle_dec_avg,
     oracle_dec_sum,
+    registry,
     t,
     tr,
 )
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # --- interval merge (gaps-and-islands, variable-length intervals) ---------

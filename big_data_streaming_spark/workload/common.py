@@ -35,12 +35,38 @@ integer (see q_embed_dimstats).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_streaming_spark.sources.catalog import load_table
 
 DEC = "decimal(38,6)"
+
+Query = Callable[[SparkSession, str], DataFrame]
+
+
+def registry() -> tuple[dict[str, Query], dict[str, str], Callable]:
+    """One workload module's ``(QUERIES, ORACLES, _q)``: two fresh dicts and
+    the ``@_q(name, oracle=None)`` decorator that fills them. Registering a
+    name twice raises instead of silently replacing the first query."""
+    queries: dict[str, Query] = {}
+    oracles: dict[str, str] = {}
+
+    def q(name: str, oracle: str | None = None) -> Callable[[Query], Query]:
+        if name in queries:
+            raise ValueError(f"query {name!r} registered twice")
+
+        def deco(fn: Query) -> Query:
+            queries[name] = fn
+            if oracle is not None:
+                oracles[name] = oracle
+            return fn
+
+        return deco
+
+    return queries, oracles, q
 
 
 def dec_sum(col: Column | str, alias: str) -> Column:

@@ -22,20 +22,14 @@ from pyspark.sql.window import Window
 
 from big_data_streaming_spark.schemas import EVENT_PROPS_SCHEMA
 from big_data_streaming_spark.plans.rank import global_order, global_rank
-from big_data_streaming_spark.workload.common import dec_sum, oracle_dec_sum, t
+from big_data_streaming_spark.workload.common import (
+    dec_sum,
+    oracle_dec_sum,
+    registry,
+    t,
+)
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # --------------------------------------------------------------------------

@@ -26,21 +26,11 @@ from big_data_streaming_spark.workload.common import (
     dec_sum,
     oracle_dec_avg,
     oracle_dec_sum,
+    registry,
     t,
 )
 
-QUERIES: dict = {}
-ORACLES: dict[str, str] = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # Synthetic position: two independent Knuth mixes of the key, folded to

@@ -41,20 +41,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_streaming_spark.plans.rank import global_rank
-from big_data_streaming_spark.workload.common import t, tr
+from big_data_streaming_spark.workload.common import registry, t, tr
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 _SHINGLE = 8  # tokens per contamination shingle
@@ -642,13 +631,19 @@ def _bpe_oracle(n: int = _BPE_MERGES) -> str:
         GROUP BY token
     ), w0 AS MATERIALIZED (
         SELECT w, freq,
-               array_to_string(list_transform(range(1, len(w)+1),
-                                              i -> w[CAST(i AS INTEGER)]), ' ')
+               coalesce(array_to_string(list_transform(range(1, len(w)+1),
+                                                       i -> w[CAST(i AS INTEGER)]),
+                                        ' '), '')
                  || ' </w>' AS sym
         FROM words
     )"""
     ]
+    # w{i} rewrites only the words holding the pair, as bpe_train does:
+    # trimming an untouched empty token (' </w>') would drop its '' symbol,
+    # and after an early stop t{i} is empty, so the NULL pair keeps sym.
     for i in range(1, n + 1):
+        l, r = f"(SELECT l FROM t{i})", f"(SELECT r FROM t{i})"
+        pair, merged = f"' ' || {l} || ' ' || {r} || ' '", f"' ' || {l} || {r} || ' '"
         parts.append(f""",
     p{i} AS MATERIALIZED (
         SELECT tk[i] AS l, tk[i+1] AS r, SUM(freq) AS cnt
@@ -662,11 +657,9 @@ def _bpe_oracle(n: int = _BPE_MERGES) -> str:
     ),
     w{i} AS MATERIALIZED (
         SELECT w, freq,
-               trim(replace(' ' || sym || ' ',
-                            ' ' || (SELECT l FROM t{i}) || ' '
-                                || (SELECT r FROM t{i}) || ' ',
-                            ' ' || (SELECT l FROM t{i})
-                                || (SELECT r FROM t{i}) || ' ')) AS sym
+               CASE WHEN contains(' ' || sym || ' ', {pair})
+                    THEN trim(replace(' ' || sym || ' ', {pair}, {merged}))
+                    ELSE sym END AS sym
         FROM w{i-1}
     )""")
     selects = "\n    UNION ALL ".join(

@@ -24,20 +24,9 @@ from big_data_streaming_spark.functions.similarity import (
     ivf_topk,
 )
 from big_data_streaming_spark.plans.rank import global_rank
-from big_data_streaming_spark.workload.common import t, tr
+from big_data_streaming_spark.workload.common import registry, t, tr
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 _N_QUERIES = 8  # query vectors = vec_id < 8

@@ -25,20 +25,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_streaming_spark.workload.common import dec_sum, ohlc_oracle, oracle_dec_sum, t
+from big_data_streaming_spark.workload.common import (
+    dec_sum,
+    ohlc_oracle,
+    oracle_dec_sum,
+    registry,
+    t,
+)
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 def _stream_shuffle() -> str:

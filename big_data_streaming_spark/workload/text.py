@@ -26,20 +26,9 @@ from big_data_streaming_spark.functions.dedup import (
     simhash64,
 )
 from big_data_streaming_spark.plans.rank import global_ntile, global_rank
-from big_data_streaming_spark.workload.common import t, tr
+from big_data_streaming_spark.workload.common import registry, t, tr
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # --- C1: exact deduplication ----------------------------------------------

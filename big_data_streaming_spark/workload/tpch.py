@@ -41,22 +41,12 @@ from big_data_streaming_spark.workload.common import (
     dec_sum,
     oracle_dec_avg,
     oracle_dec_sum,
+    registry,
     t,
     tr,
 )
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 def _ts(s: str) -> F.Column:

@@ -24,7 +24,6 @@ _SLOW_GATED = {
     "test_oracle_outputs_are_scalar_only",      # 190 s oracle lint; preflights run every oracle
     "test_live_topk_demo",                      # 49 s e2e demo
     "test_live_topk_demo_resumes_from_checkpoint",  # 44 s e2e demo
-    "test_cc_both_algorithms_match_union_find_property",  # 26 s; star/prop agreement + UF property kept via cheaper tests
     "test_oracle_results_non_empty",            # 22 s fixture vacuity sweep
     "test_resourceful_queries_are_reinvokable",  # 20 s
     "test_sessionize_bridge_row_merges_orphan",  # 13 s

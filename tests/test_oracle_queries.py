@@ -154,6 +154,31 @@ def test_registry_contract_window():
     # import; re-assert here so a refactor that drops the import-time
     # check still fails loudly)
     assert not (set(ORACLES) - set(QUERIES))
+    # The window leads with the oracle keys the driver has not confirmed:
+    # no row in any committed CORRECTNESS_r<N>.json, or a red latest row.
+    import json
+    import re
+
+    from pathlib import Path
+
+    from big_data_streaming_spark.workload import _MODULES
+
+    latest_green: dict[str, bool] = {}
+    reports = [
+        (int(m[1]), p)
+        for p in Path(__file__).resolve().parents[1].iterdir()
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
+    ]
+    for _, path in sorted(reports):
+        for name, row in json.loads(path.read_text()).items():
+            latest_green[name] = row["hash_match"] is True and row["err"] is None
+    unconfirmed = [
+        n
+        for m in _MODULES
+        for n in m.QUERIES
+        if n in ORACLES and not latest_green.get(n, False)
+    ]
+    assert window[: len(unconfirmed)] == unconfirmed[:50]
 
 
 def test_coverage_totals_match_registry():

@@ -178,25 +178,32 @@ def test_bpe_matches_pure_python_reference(spark, sf_small):
         (["ab ab", "ab"], {"ab": "ab</w>"}),
         # trim strips spaces only: a tab inside a word stays a symbol
         (["\tab ab", "ab\t"], {"\tab": "\tab</w>", "ab": "ab</w>", "ab\t": "ab\t</w>"}),
+        # an empty token (double space) is the symbols ['', '</w>']
+        (["ab ab", "ab", ""], {"ab": "ab</w>", "": "</w>"}),
     ],
 )
 def test_bpe_stops_early_when_no_pair_is_left(spark, texts, vocab):
     """Fewer adjacent pairs than merges: training stops after the last
     step that had a pair, as the DuckDB oracle does (it used to raise
-    IndexError on the empty argmax)."""
+    IndexError on the empty argmax). The oracle's token counts keep the
+    last vocabulary after the stop instead of going NULL."""
     import duckdb
 
     from big_data_streaming_spark.workload.pipeline import (
         _BPE_MERGES,
         _bpe_oracle,
+        _bpe_tokens_oracle,
         bpe_train,
     )
 
     con = duckdb.connect()
     try:
-        con.execute("CREATE TABLE documents (text VARCHAR)")
-        con.executemany("INSERT INTO documents VALUES (?)", [[x] for x in texts])
+        con.execute("CREATE TABLE documents (doc_id INTEGER, text VARCHAR)")
+        con.executemany(
+            "INSERT INTO documents VALUES (?, ?)", list(enumerate(texts, start=1))
+        )
         expect = [tuple(r) for r in con.execute(_bpe_oracle()).fetchall()]
+        counts = sorted(tuple(r) for r in con.execute(_bpe_tokens_oracle()).fetchall())
     finally:
         con.close()
     assert 0 < len(expect) < _BPE_MERGES
@@ -205,6 +212,10 @@ def test_bpe_stops_early_when_no_pair_is_left(spark, texts, vocab):
     merges, got = bpe_train(spark.createDataFrame([(x,) for x in texts], "text string"))
     assert merges == expect
     assert {r["w"]: r["sym"] for r in got.collect()} == vocab
+    assert counts == [
+        (i, len(x.split(" ")), sum(len(vocab[w].split(" ")) for w in x.split(" ")))
+        for i, x in enumerate(texts, start=1)
+    ]
 
 
 def test_bpe_train_job_count_is_bounded(spark, sf_small):
