@@ -11,15 +11,14 @@ Each submodule defines two dicts:
 The registry is consumed by ``__spark_entry__.py`` (driver contract) and by
 ``bench.py``/tests.
 
-Registry order is part of the driver contract: the driver's correctness
-gate checks only the first 50 entries of ``queries()``. The order is
-computed from the driver's own reports, the ``CORRECTNESS_r<N>.json``
-files at the repo root: oracle-bearing keys first, then by last green
-round (the round ``N`` of a key's latest row if that row matched with no
-error, else 0 — so never-checked and red keys lead), then module order.
-The window therefore rotates to the least recently confirmed keys each
-time the driver commits a new report. With no reports the order is module
-order, rows-only keys last.
+Registry order matters: the correctness check compares only the first 50
+entries of ``queries()`` against their oracles. The order is computed from
+the check's reports, the ``CORRECTNESS_r<N>.json`` files at the repo root:
+oracle-bearing keys first, then by last green round (the round ``N`` of a
+key's latest row if that row matched with no error, else 0 — so
+never-checked and red keys lead), then module order. The window therefore
+rotates to the least recently confirmed keys each time a new report is
+committed. With no reports the order is module order, rows-only keys last.
 """
 
 from __future__ import annotations
@@ -63,7 +62,7 @@ _REPORT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 def check_order(
     names: Iterable[str], oracles: Collection[str], report_dir: Path
 ) -> list[str]:
-    """``names`` ordered for the driver's check window (module docstring).
+    """``names`` ordered for the correctness check window (module docstring).
 
     The sort is stable, so ties keep the order ``names`` came in."""
     reports = sorted(

@@ -154,7 +154,7 @@ def test_registry_contract_window():
     # import; re-assert here so a refactor that drops the import-time
     # check still fails loudly)
     assert not (set(ORACLES) - set(QUERIES))
-    # The window leads with the oracle keys the driver has not confirmed:
+    # The window leads with the oracle keys no report has confirmed:
     # no row in any committed CORRECTNESS_r<N>.json, or a red latest row.
     import json
     import re

@@ -1,4 +1,4 @@
-"""Registry mechanics: the shared ``_q`` decorator and the driver-window
+"""Registry mechanics: the shared ``_q`` decorator and the check-window
 order computed from ``CORRECTNESS_r<N>.json`` reports."""
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from big_data_streaming_spark.workload.common import registry
 
 
 def _report(report_dir, name, rows):
-    """Write a driver report; ``rows`` maps key → (hash_match, err)."""
+    """Write a correctness report; ``rows`` maps key → (hash_match, err)."""
     (report_dir / name).write_text(
         json.dumps({k: {"hash_match": h, "err": e} for k, (h, e) in rows.items()})
     )
