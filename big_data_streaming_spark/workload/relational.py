@@ -1175,9 +1175,9 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from big_data_streaming_spark.sources.staging import pid_scratch_dirs
 
-    out = tempfile.mkdtemp(prefix="orc_roundtrip_")
+    out, _ = pid_scratch_dirs("format_roundtrip", sf_dir)
     (
         t(spark, sf_dir, "lineitem")
         .where(F.col("l_discount") > 0.05)
@@ -1209,11 +1209,10 @@ def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from big_data_streaming_spark.plans.zorder import write_zordered
+    from big_data_streaming_spark.sources.staging import pid_scratch_dirs
 
-    out = tempfile.mkdtemp(prefix="zorder_gate_")
+    out, _ = pid_scratch_dirs("zorder_layout", sf_dir)
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_extendedprice"
     )

@@ -1,12 +1,40 @@
 """Streaming + sink workload — real Structured Streaming queries whose
 results are still DuckDB-oracle-checkable.
 
-``q_stream_window_tumbling`` runs an actual ``readStream → withWatermark →
-window agg → memory sink`` pipeline with ``Trigger.AvailableNow`` (drain
-everything, then stop) — so the driver's correctness gate exercises the
-streaming engine itself, not a batch stand-in, and the oracle is the same
-SQL as the batch tumbling window (stream/batch equivalence is the
-Structured Streaming contract; see also tests/test_streaming.py).
+Every ``q_stream_*`` key drains a bounded stream through the streaming
+engine itself, not a batch stand-in, so the driver's correctness gate
+exercises it; the oracle is plain SQL over the batch tables
+(stream/batch equivalence is the Structured Streaming contract; see also
+tests/test_streaming.py). The drain contract, implemented once in
+``_stream`` (source side) and ``_drain`` (sink side):
+
+* **Staging.** ``_stage_stream_dir`` copies a testdata table into a
+  deterministic dir under ``<tempdir>/bdss_stream_stage`` (the file
+  source wants a directory it can list), reused across calls and
+  processes while ``sources/staging.fingerprint_cached_dir`` says it
+  matches the source. ``n_parts=1`` is a byte copy; ``n_parts=4`` cuts
+  contiguous event_id-ordered row slices, so the drain is a real
+  four-micro-batch run at every scale factor (the batch-identity
+  contract the per-batch oracles replay).
+* **One file per trigger.** ``_stream`` pins the session confs the raw
+  files need (the driver hands over its own plain session), probes the
+  raw file schema, opens ``readStream`` with ``maxFilesPerTrigger=1``
+  and applies the batch catalog's timestamp normalization — identical
+  values either path.
+* **The pin.** ``_drain`` starts every query with 8 shuffle partitions
+  and restores the caller's value right after start (the streaming
+  query captures the conf at start). Stateful
+  streaming creates one state-store instance per shuffle partition, so
+  this is the store count; for these bounded drains 8 beat 32 (less
+  per-store setup than data). A production continuous query sizes it to
+  key cardinality instead.
+* **Sink kinds.** A memory sink under a unique query name, whose table
+  ``_drain`` returns, or ``foreachBatch`` with a checkpoint. Either way
+  the query drains with ``Trigger.AvailableNow`` and is awaited.
+* **Scratch policy.** Every checkpoint, sink dir and state dir comes
+  from ``sources/staging.pid_scratch_dirs``: per process and family,
+  wiped and reused on the next call, reclaimed once its owning process
+  is gone. Nothing is named per call.
 
 ``q_route_by_key`` is the single-pass replacement for the reference's
 O(keys)-sequential-jobs router (reference spark/streaming-longtime.py:
@@ -17,6 +45,7 @@ checked against a plain GROUP BY oracle.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import tempfile
@@ -25,6 +54,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_streaming_spark.sources.staging import (
+    fingerprint_cached_dir,
+    pid_scratch_dirs,
+)
 from big_data_streaming_spark.workload.common import (
     dec_sum,
     ohlc_oracle,
@@ -36,98 +69,77 @@ from big_data_streaming_spark.workload.common import (
 QUERIES, ORACLES, _q = registry()
 
 
-def _stream_shuffle() -> str:
-    """Stream-side shuffle-partition pin for the bounded drains: stateful
-    streaming creates one state-store instance per shuffle partition,
-    fixed at query start, so this dials store count (and, for the
-    Python-kernel sessionizer, parallel Arrow workers). 8 beat 32 for
-    the many-microbatch drains (round 11: less per-store setup than
-    data); env-tunable (``SPARK_GRAFT_STREAM_SHUFFLE``) so the trade is
-    measurable per box and a production continuous query can size it to
-    key cardinality instead."""
-    return os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-
-
-def _pid_scratch_dirs(family: str, sf_dir: str) -> tuple[str, str]:
-    """Per-process (out_dir, ckpt_dir) for a streaming drain's LIVE
-    mutable state: two processes running the same key concurrently on
-    one box (parallel preflight + invariance harnesses) must not share a
-    checkpoint log (Spark aborts with CONCURRENT_STREAM_LOG_UPDATE), so
-    the tag carries the pid — deterministic within a process.
-
-    Bounded-growth policy (ADVICE r10): the pid is kept READABLE in the
-    dir name, and stale siblings whose owning process is gone are
-    reclaimed best-effort on each call, so repeated harness runs do not
-    march tempdir toward ENOSPC. Live siblings (other pids still
-    running) are never touched."""
-    import hashlib
-
-    base = os.path.join(tempfile.gettempdir(), "bdss_stream_stage")
-    os.makedirs(base, exist_ok=True)
-    pid = os.getpid()
-    prefix = f"{family}_pid"
-    for entry in os.listdir(base):
-        if not entry.startswith(prefix):
-            continue
-        try:
-            owner = int(entry[len(prefix):].split("_", 1)[0])
-        except ValueError:
-            continue
-        if owner == pid:
-            continue
-        try:
-            os.kill(owner, 0)  # raises if the owner is gone
-        except ProcessLookupError:
-            shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
-        except Exception:
-            # PermissionError: someone else's live process — leave it.
-            # OverflowError/OSError (ADVICE r11): a corrupt/adversarial
-            # entry whose parsed "pid" exceeds pid_t must not fail the
-            # streaming query; keep the entry on ANY unexpected error.
-            pass
-    tag = hashlib.md5(f"{family}:{sf_dir}".encode()).hexdigest()[:10]
-    out_dir = os.path.join(base, f"{prefix}{pid}_{tag}")
-    ckpt_dir = os.path.join(base, f"{prefix}{pid}_ckpt_{tag}")
-    for d in (out_dir, ckpt_dir):  # fresh run: replayed batches would
-        if os.path.isdir(d):  # double-append rows (leak policy: reuse
-            shutil.rmtree(d)  # the deterministic path, not the contents)
-        os.makedirs(d, exist_ok=True)
-    return out_dir, ckpt_dir
-
-
-def _stage_stream_dir(sf_dir: str, table: str) -> str:
-    """Copy one testdata table into a dir usable as a file-stream source
-    (the file source wants a directory it can list). The staging dir is
-    DETERMINISTIC per (sf_dir, table) and reused when its contents
-    already match the source — per-call mkdtemp leaked one full table
-    copy per streaming query per run (review finding), and at sf0.1
-    repeated benchmark runs marched /tmp toward ENOSPC."""
-    import hashlib
+def _stage_stream_dir(sf_dir: str, table: str, n_parts: int = 1) -> str:
+    """Stage ``table`` as ``n_parts`` parquet files in a deterministic dir
+    (see the module docstring). ``n_parts=1`` byte-copies a single-file
+    source, so footers and row groups are the source's own; a directory
+    source is rewritten as one file."""
+    import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, f"{table}.parquet")
-    tag = hashlib.md5(f"{sf_dir}:{table}".encode()).hexdigest()[:10]
+    tag = hashlib.md5(f"{sf_dir}:{table}:{n_parts}".encode()).hexdigest()[:10]
     dst = os.path.join(
-        tempfile.gettempdir(), "bdss_stream_stage", f"{table}_{tag}"
+        tempfile.gettempdir(), "bdss_stream_stage", f"{table}_{n_parts}_{tag}"
     )
-    if os.path.isdir(src):
-        parts = [f for f in sorted(os.listdir(src)) if f.endswith(".parquet")]
-        srcs = [os.path.join(src, f) for f in parts]
+    want = [os.path.join(dst, f"part_{i}.parquet") for i in range(n_parts)]
+
+    def build() -> None:
+        if n_parts == 1 and os.path.isfile(src):
+            shutil.copy(src, want[0])
+            return
+        tbl = pq.read_table(src)
+        step = max(1, (tbl.num_rows + n_parts - 1) // n_parts)
+        for i in range(n_parts):
+            pq.write_table(tbl.slice(i * step, step), want[i])
+
+    return fingerprint_cached_dir(src, dst, want, build)
+
+
+def _stream(
+    spark: SparkSession, sf_dir: str, table: str = "events", n_parts: int = 1
+) -> DataFrame:
+    """The staged ``table`` as a file stream, one file per trigger, with
+    raw timestamps normalized (the module's drain contract)."""
+    from big_data_streaming_spark.sources.catalog import (
+        _ensure_session_confs,
+        normalize_raw_timestamps,
+    )
+
+    # Without nanosAsLong the schema probe refuses TIMESTAMP(NANOS) files.
+    _ensure_session_confs(spark)
+    src_dir = _stage_stream_dir(sf_dir, table, n_parts)
+    raw_schema = spark.read.parquet(src_dir).schema
+    sdf = (
+        spark.readStream.schema(raw_schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+    return normalize_raw_timestamps(sdf, src_dir)
+
+
+def _drain(
+    df: DataFrame, *, mode: str = "append", batch=None, checkpoint: str | None = None
+) -> DataFrame | None:
+    """Drain ``df`` with AvailableNow under the stream-side shuffle pin:
+    into a memory sink whose table is returned, or through
+    ``foreachBatch(batch)`` checkpointed at ``checkpoint`` (returns None)."""
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode(mode)
+    name = None
+    if batch is None:
+        name = f"drain_{uuid.uuid4().hex[:8]}"
+        writer = writer.format("memory").queryName(name)
     else:
-        srcs = [src]
-    expected = [f"part-{i}.parquet" for i in range(len(srcs))]
-    if os.path.isdir(dst):
-        have = sorted(f for f in os.listdir(dst) if f.endswith(".parquet"))
-        sizes_ok = have == expected and all(
-            os.path.getsize(os.path.join(dst, e)) == os.path.getsize(s)
-            for e, s in zip(expected, srcs)
-        )
-        if sizes_ok:
-            return dst
-        shutil.rmtree(dst)
-    os.makedirs(dst, exist_ok=True)
-    for i, s in enumerate(srcs):
-        shutil.copy(s, os.path.join(dst, f"part-{i}.parquet"))
-    return dst
+        writer = writer.foreachBatch(batch).option("checkpointLocation", checkpoint)
+    pin = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(pin)
+    spark.conf.set(pin, "8")
+    try:
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set(pin, prev)
+    q.awaitTermination()
+    return None if name is None else spark.table(name)
 
 
 @_q(
@@ -142,99 +154,18 @@ def _stage_stream_dir(sf_dir: str, table: str) -> str:
     """,
 )
 def q_stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    # The driver hands us its own plain session; without nanosAsLong the
-    # schema probe below refuses the TIMESTAMP(NANOS) events parquet.
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-
-    # Stream with the RAW file schema (ns timestamps arrive as epoch-nanos
-    # longs under nanosAsLong), then apply the same µs-truncating
-    # conversion the batch catalog applies — identical values either path.
-    # maxFilesPerTrigger=1 keeps this a real multi-batch incremental run
-    # when the source has several files (at sf≥0.1) rather than one giant
-    # batch — the shape a 100 TB backlog drain takes.
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
     agg = (
-        sdf.withWatermark("ts", "1 hour")
+        _stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(dec_sum("value", "total_value"), F.count(F.lit(1)).alias("n_events"))
     )
-    # Stateful streaming creates one state-store instance per shuffle
-    # partition, fixed at query start. For this bounded drain, 8 stores
-    # beat 32 (less per-store setup than data); a production continuous
-    # query sizes this to expected key cardinality instead. The conf is
-    # restored right after start (it's captured at plan time).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(agg, mode="complete").select(
         F.col("w.start").alias("window_start"),
         "event_type",
         "total_value",
         "n_events",
     )
-
-
-def _drain_events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    build_agg,
-    name_prefix: str,
-    output_mode: str = "complete",
-):
-    """Shared scaffold: stage events as a file stream, apply the
-    caller-built stateful aggregation, drain with AvailableNow into a
-    memory sink, return the sink table. ``output_mode="append"`` is the
-    multi-stateful-operator mode (chained window aggs emit only
-    watermark-finalized rows)."""
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)  # driver sessions lack nanosAsLong/UTC
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(src_dir)
-    sdf = normalize_raw_timestamps(sdf, src_dir)
-    agg = build_agg(sdf)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.table(name)
 
 
 # Streaming B3: sliding window through the streaming engine, same oracle
@@ -251,15 +182,13 @@ def _drain_events_stream(
     """,
 )
 def q_stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build(sdf):
-        return (
-            sdf.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-            .agg(dec_sum("value", "total_value"))
-        )
-
-    out = _drain_events_stream(spark, sf_dir, build, "stream_sliding")
-    return out.select(
+    agg = (
+        _stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
+        .agg(dec_sum("value", "total_value"))
+    )
+    return _drain(agg, mode="complete").select(
         F.col("w.start").alias("window_start"), "event_type", "total_value"
     )
 
@@ -295,15 +224,13 @@ def q_stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build(sdf):
-        return (
-            sdf.withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(dec_sum("value", "total_value"), F.count(F.lit(1)).alias("n_events"))
-        )
-
-    out = _drain_events_stream(spark, sf_dir, build, "stream_session")
-    return out.select(
+    agg = (
+        _stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(dec_sum("value", "total_value"), F.count(F.lit(1)).alias("n_events"))
+    )
+    return _drain(agg, mode="complete").select(
         "user_id",
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
@@ -324,17 +251,7 @@ def q_route_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_streaming_spark.streaming.router import route_partitioned
 
     events = t(spark, sf_dir, "events")
-    # Deterministic reusable output dir (same leak-avoidance policy as
-    # _stage_stream_dir); route_partitioned overwrites per key.
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "bdss_stream_stage", f"routed_events_{tag}"
-    )
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir, _ = pid_scratch_dirs("route_by_key", sf_dir)
     route_partitioned(events, out_dir, keys=["event_type"])
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(
@@ -366,20 +283,8 @@ def q_route_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"stream_ss_join_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
-
     def stream_side(alias: str) -> DataFrame:
-        sdf = spark.readStream.schema(raw_schema).parquet(src_dir)
-        sdf = normalize_raw_timestamps(sdf, src_dir)
-        return sdf.select(
+        return _stream(spark, sf_dir).select(
             F.col("event_id").alias(f"{alias}_event_id"),
             F.col("user_id").alias(f"{alias}_user_id"),
             F.col("event_type").alias(f"{alias}_event_type"),
@@ -395,20 +300,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
         "inner",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(joined).select(
         F.col("c_event_id").alias("click_id"),
         F.col("p_event_id").alias("purchase_id"),
         F.col("c_user_id").alias("user_id"),
@@ -435,39 +327,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
-
-    def one_pass() -> DataFrame:
-        sdf = spark.readStream.schema(raw_schema).parquet(src_dir)
-        sdf = normalize_raw_timestamps(sdf, src_dir)
-        return sdf
-
-    doubled = one_pass().unionAll(one_pass())
+    doubled = _stream(spark, sf_dir).unionAll(_stream(spark, sf_dir))
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(deduped).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
 
@@ -489,17 +353,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"stream_static_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(src_dir)
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    sdf = _stream(spark, sf_dir)
     dim = F.broadcast(
         t(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_mktsegment"
@@ -508,15 +362,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = sdf.join(dim, sdf.user_id == dim.c_custkey).select(
         "event_id", "user_id", "c_name", "c_mktsegment", "event_type", "value"
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(joined)
 
 
 # Streaming A1 replacement, gate-checked: drain the CUSTOM Python
@@ -542,19 +388,8 @@ def q_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_streaming_spark.sources.feed_datasource import register
 
     register(spark)
-    name = f"stream_feed_{uuid.uuid4().hex[:8]}"
-    q = (
-        spark.readStream.format("kline_feed")
-        .option("max_rows", "500")
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select("offset", "coin", "ts", "close", "volume")
+    feed = spark.readStream.format("kline_feed").option("max_rows", "500").load()
+    return _drain(feed).select("offset", "coin", "ts", "close", "volume")
 
 
 # Streaming B8 extension: STREAM-STREAM LEFT OUTER join — the outer form
@@ -592,21 +427,12 @@ def q_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"stream_ss_left_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
+    from big_data_streaming_spark.sources.catalog import normalize_raw_timestamps
 
     def stream_side(alias: str, etype: str) -> DataFrame:
-        sdf = spark.readStream.schema(raw_schema).parquet(src_dir)
-        sdf = normalize_raw_timestamps(sdf, src_dir)
         return (
-            sdf.where(F.col("event_type") == etype)
+            _stream(spark, sf_dir)
+            .where(F.col("event_type") == etype)
             .select(
                 F.col("event_id").alias(f"{alias}_event_id"),
                 F.col("user_id").alias(f"{alias}_user_id"),
@@ -622,21 +448,10 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
+    out = _drain(joined)
     # The decided-region cutoff, from the same data the stream consumed:
     # min over the two sides' max event times, minus the watermark delay.
+    src_dir = _stage_stream_dir(sf_dir, "events")
     batch = normalize_raw_timestamps(spark.read.parquet(src_dir), src_dir)
     maxes = batch.groupBy().agg(
         F.max(F.when(F.col("event_type") == "click", F.col("ts"))).alias("mc"),
@@ -644,8 +459,7 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     wm = min(maxes["mc"], maxes["mp"])
     return (
-        spark.table(name)
-        .where(
+        out.where(
             F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")
             < F.lit(wm) - F.expr("INTERVAL 1 HOUR") - F.expr("INTERVAL 1 SECOND")
         )
@@ -689,58 +503,21 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_window_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_streaming_spark.workload.common import DEC
 
-    def build(sdf):
-        hourly = (
-            sdf.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("hw"), "event_type")
-            .agg(dec_sum("value", "hv"), F.count(F.lit(1)).alias("n"))
-        )
-        return (
-            hourly.groupBy(
-                F.window(F.window_time("hw"), "1 day").alias("dw"), "event_type"
-            )
-            .agg(
-                F.sum(F.col("hv").cast(DEC)).cast("double").alias("total_value"),
-                F.sum("n").alias("n_events"),
-            )
-        )
-
-    out = _drain_events_stream(
-        spark, sf_dir, build, "stream_chained", output_mode="append"
+    hourly = (
+        _stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("hw"), "event_type")
+        .agg(dec_sum("value", "hv"), F.count(F.lit(1)).alias("n"))
     )
-    return out.select(
+    daily = hourly.groupBy(
+        F.window(F.window_time("hw"), "1 day").alias("dw"), "event_type"
+    ).agg(
+        F.sum(F.col("hv").cast(DEC)).cast("double").alias("total_value"),
+        F.sum("n").alias("n_events"),
+    )
+    return _drain(daily).select(
         F.col("dw.start").alias("day"), "event_type", "total_value", "n_events"
     )
-
-
-def _stage_stream_dir_parts(sf_dir: str, table: str, n_parts: int = 4) -> str:
-    """Like ``_stage_stream_dir`` but splits the table into ``n_parts``
-    parquet files (contiguous row slices, deterministic), so a
-    ``maxFilesPerTrigger=1`` drain is a REAL multi-micro-batch run even
-    at scale factors where the testdata ships one file. Reused across
-    calls (same leak policy as ``_stage_stream_dir``)."""
-    import hashlib
-
-    import pyarrow.parquet as pq
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    tag = hashlib.md5(f"{sf_dir}:{table}:{n_parts}".encode()).hexdigest()[:10]
-    dst = os.path.join(
-        tempfile.gettempdir(), "bdss_stream_stage", f"{table}_split_{tag}"
-    )
-    want = [os.path.join(dst, f"part_{i}.parquet") for i in range(n_parts)]
-    # Cache validity: the shared fingerprint contract in sources/staging.py
-    # (sibling _stage_stream_dir validates sizes; split parts can't
-    # size-match the source, so fingerprint it).
-    from big_data_streaming_spark.sources.staging import fingerprint_cached_dir
-
-    def build() -> None:
-        tbl = pq.read_table(src)
-        step = max(1, (tbl.num_rows + n_parts - 1) // n_parts)
-        for i in range(n_parts):
-            pq.write_table(tbl.slice(i * step, step), want[i])
-
-    return fingerprint_cached_dir(src, dst, want, build)
 
 
 # Streaming OHLC bars: the kline resample (batch twin: analytics.py
@@ -753,27 +530,13 @@ def _stage_stream_dir_parts(sf_dir: str, table: str, n_parts: int = 4) -> str:
 # table (stream/batch equivalence contract).
 @_q("q_stream_ohlc", ohlc_oracle(with_volume=False))
 def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    # Four source files + maxFilesPerTrigger=1 → four micro-batches at
-    # EVERY sf, so the partial-state merge across batches is always
-    # exercised (a single-file source would collapse to one batch and
-    # silently test nothing beyond the batch twin).
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    name = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    # Four source files → four micro-batches at EVERY sf, so the
+    # partial-state merge across batches is always exercised (a
+    # single-file source would collapse to one batch and silently test
+    # nothing beyond the batch twin).
     agg = (
-        sdf.withWatermark("ts", "1 hour")
+        _stream(spark, sf_dir, n_parts=4)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.expr("min_by(value, struct(ts, event_id))").alias("open_px"),
@@ -783,20 +546,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_trades"),
         )
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(agg, mode="complete").select(
         "event_type",
         F.col("w.start").alias("bar_hour"),
         "open_px",
@@ -842,22 +592,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    name = f"stream_cdc_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
-    env = sdf.select(
+    env = _stream(spark, sf_dir, n_parts=4).select(
         F.to_json(
             F.struct(
                 F.when(F.col("event_type") == "error", F.lit("d"))
@@ -878,21 +613,8 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted = parsed.groupBy("id").agg(
         F.expr("max_by(struct(op, v, ts_ms), struct(ts_ms, seq))").alias("w")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            compacted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain(compacted, mode="complete")
         .where(F.col("w.op") != "d")
         .select(
             F.col("id").alias("user_id"),
@@ -939,27 +661,10 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    # Per-process scratch with stale-sibling reclamation (ADVICE r10) —
-    # see _pid_scratch_dirs; the staged read-only SOURCE dir stays
-    # shared across processes.
-    out_dir, ckpt_dir = _pid_scratch_dirs("stream_topk", sf_dir)
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    out_dir, ckpt_dir = pid_scratch_dirs("stream_topk", sf_dir)
     agg = (
-        sdf.withWatermark("ts", "1 hour")
+        _stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(dec_sum("value", "total_value"))
     )
@@ -988,19 +693,7 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(out_dir, f"batch_{batch_id}"))
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            agg.writeStream.foreachBatch(rank_and_append)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
+    _drain(agg, batch=rank_and_append, checkpoint=ckpt_dir)
     if not any(f.startswith("batch_") for f in os.listdir(out_dir)):
         # No window finalized (fixture spans < 2h of event time): match
         # the oracle's empty result instead of failing schema inference
@@ -1089,33 +782,10 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
     from big_data_streaming_spark.streaming.sessionize import sessionize
 
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"stream_sessionize_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = spark.readStream.schema(raw_schema).parquet(src_dir)
-    sdf = normalize_raw_timestamps(sdf, src_dir)
-    out = sessionize(sdf.select("ts", "user_id", "value"), watermark="1 hour")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.table(name).select(
+    sdf = _stream(spark, sf_dir).select("ts", "user_id", "value")
+    return _drain(sessionize(sdf, watermark="1 hour")).select(
         "user_id", "session_start", "session_end", "n_events", "closed_by"
     )
 
@@ -1156,21 +826,12 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"stream_ss_full_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
+    from big_data_streaming_spark.sources.catalog import normalize_raw_timestamps
 
     def stream_side(alias: str, etype: str) -> DataFrame:
-        sdf = spark.readStream.schema(raw_schema).parquet(src_dir)
-        sdf = normalize_raw_timestamps(sdf, src_dir)
         return (
-            sdf.where(F.col("event_type") == etype)
+            _stream(spark, sf_dir)
+            .where(F.col("event_type") == etype)
             .select(
                 F.col("event_id").alias(f"{alias}_event_id"),
                 F.col("user_id").alias(f"{alias}_user_id"),
@@ -1186,19 +847,8 @@ def q_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
         "full_outer",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
+    out = _drain(joined)
+    src_dir = _stage_stream_dir(sf_dir, "events")
     batch = normalize_raw_timestamps(spark.read.parquet(src_dir), src_dir)
     maxes = batch.groupBy().agg(
         F.max(F.when(F.col("event_type") == "click", F.col("ts"))).alias("mc"),
@@ -1208,8 +858,7 @@ def q_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit(wm) - F.expr("INTERVAL 1 HOUR") - F.expr("INTERVAL 1 SECOND")
     half_hour = F.expr("INTERVAL 30 MINUTES")
     return (
-        spark.table(name)
-        .where(
+        out.where(
             (
                 F.col("c_ts").isNotNull()
                 & (F.col("c_ts") + half_hour < cutoff)
@@ -1253,23 +902,9 @@ def q_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_complete_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir(sf_dir, "events")
-    name = f"stream_complete_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
     ranked = (
-        sdf.groupBy("event_type")
+        _stream(spark, sf_dir)
+        .groupBy("event_type")
         .agg(
             dec_sum("value", "total_value"),
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -1277,20 +912,7 @@ def q_stream_complete_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("total_value"), "event_type")
         .limit(10)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
-    try:
-        q = (
-            ranked.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(ranked, mode="complete")
 
 
 # --- streaming distribution-drift monitor ---------------------------------
@@ -1307,7 +929,7 @@ def q_stream_complete_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch_id, so the result is invariant to file arrival order. The
 # oracle replicates the 4-way contiguous slicing arithmetically
 # (events.parquet is event_id-ordered; part = rn // ceil(n/4), the
-# exact slice formula of _stage_stream_dir_parts). At 100 TB the
+# exact slice formula of _stage_stream_dir). At 100 TB the
 # foreachBatch profile aggregate is map-side combinable and the
 # reference distribution comes from a broadcast stats table instead of
 # a second scan.
@@ -1374,10 +996,6 @@ def _drift_oracle() -> str:
 
 @_q("q_stream_drift", _drift_oracle())
 def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
     from big_data_streaming_spark.workload.analytics import (
         _HD_BC,
         _HD_BC_Q,
@@ -1386,15 +1004,8 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         _HD_TV_Q,
     )
 
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    _, ckpt_dir = pid_scratch_dirs("stream_drift", sf_dir)
+    sdf = _stream(spark, sf_dir, n_parts=4)
     profiles: list[tuple[int, str, int]] = []
 
     def profile(bdf: DataFrame, batch_id: int) -> None:
@@ -1411,19 +1022,7 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_key = min(r.mn for r in rows)
         profiles.extend((batch_key, r.event_type, r.ca) for r in rows)
 
-    q = (
-        sdf.writeStream.foreachBatch(profile)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(),
-                f"bdss_drift_ckpt_{uuid.uuid4().hex[:8]}",
-            ),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=profile, checkpoint=ckpt_dir)
     per = spark.createDataFrame(
         profiles, "batch_key: bigint, event_type: string, ca: bigint"
     )
@@ -1495,12 +1094,7 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_streaming_spark.operators.asof import asof_join
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
 
-    _ensure_session_confs(spark)
     marks = (
         t(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
@@ -1509,17 +1103,8 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     marks.count()  # materialize once; every micro-batch reuses it
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"bdss_stream_asof_{uuid.uuid4().hex[:8]}"
-    )
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    out_dir, ckpt_dir = pid_scratch_dirs("stream_asof", sf_dir)
+    sdf = _stream(spark, sf_dir, n_parts=4)
 
     def enrich(bdf: DataFrame, batch_id: int) -> None:
         enriched = asof_join(
@@ -1539,19 +1124,7 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(out_dir, f"batch_{batch_id}"))
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(enrich)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(),
-                f"bdss_stream_asof_ckpt_{uuid.uuid4().hex[:8]}",
-            ),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=enrich, checkpoint=ckpt_dir)
     marks.unpersist()
     return spark.read.parquet(os.path.join(out_dir, "batch_*"))
 
@@ -1589,17 +1162,8 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src_dir = _stage_stream_dir_parts(sf_dir, "documents", n_parts=4)
-    # Per-process scratch with stale-sibling reclamation (ADVICE r10) —
-    # same cross-process checkpoint-collision guard as q_stream_topk.
-    out_dir, ckpt_dir = _pid_scratch_dirs("stream_neardup", sf_dir)
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    out_dir, ckpt_dir = pid_scratch_dirs("stream_neardup", sf_dir)
+    sdf = _stream(spark, sf_dir, "documents", n_parts=4)
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1636,13 +1200,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"batch_{batch_id}")
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=dedup_batch, checkpoint=ckpt_dir)
     parts = [
         os.path.join(out_dir, d)
         for d in sorted(os.listdir(out_dir))
@@ -1663,8 +1221,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # statistics: lower median at (n+1) div 2, p90 at floor(0.9·(n−1)) + 1
 # — pure element selection, NO interpolation arithmetic, so the values
 # are bit-identical to the batch oracle's window-function formulation
-# by construction. Complete mode + AvailableNow drain (the
-# q_stream_window_tumbling scaffold).
+# by construction.
 @_q(
     "q_stream_quantile",
     """
@@ -1693,17 +1250,16 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build(sdf):
-        return (
-            sdf.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.sort_array(F.collect_list("value")).alias("vs"),
-                F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            )
+    agg = (
+        _stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.sort_array(F.collect_list("value")).alias("vs"),
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
         )
-
-    out = _drain_events_stream(spark, sf_dir, build, "stream_quantile")
+    )
+    out = _drain(agg, mode="complete")
     n = F.col("n_events")
     return out.select(
         F.col("w.start").alias("window_start"),
@@ -1770,20 +1326,8 @@ def _ssrm_oracle() -> str:
 
 @_q("q_stream_srm", _ssrm_oracle())
 def q_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    _, ckpt_dir = pid_scratch_dirs("stream_srm", sf_dir)
+    sdf = _stream(spark, sf_dir, n_parts=4)
     profiles: list[tuple[int, int, int]] = []
 
     def profile(bdf: DataFrame, batch_id: int) -> None:
@@ -1798,19 +1342,7 @@ def q_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         profiles.append((row.batch_key, row.n_treat, row.n_control))
 
-    q = (
-        sdf.writeStream.foreachBatch(profile)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(),
-                f"bdss_ssrm_ckpt_{uuid.uuid4().hex[:8]}",
-            ),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=profile, checkpoint=ckpt_dir)
     per = spark.createDataFrame(
         profiles, "batch_key: bigint, n_treat: bigint, n_control: bigint"
     )
@@ -1866,20 +1398,8 @@ def q_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    _, ckpt_dir = pid_scratch_dirs("stream_frontier", sf_dir)
+    sdf = _stream(spark, sf_dir, n_parts=4)
     rows: list[tuple[int, int, int, int]] = []
 
     def profile(bdf: DataFrame, batch_id: int) -> None:
@@ -1897,19 +1417,7 @@ def q_stream_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         rows.append((r.batch_key, r.n, r.min_sec, r.max_sec))
 
-    q = (
-        sdf.writeStream.foreachBatch(profile)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(),
-                f"bdss_frontier_ckpt_{uuid.uuid4().hex[:8]}",
-            ),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=profile, checkpoint=ckpt_dir)
     per = spark.createDataFrame(
         rows, "batch_key: bigint, n: bigint, min_sec: bigint, max_sec: bigint"
     )
@@ -1993,20 +1501,8 @@ def _simr_oracle() -> str:
 def q_stream_imr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    _, ckpt_dir = pid_scratch_dirs("stream_imr", sf_dir)
+    sdf = _stream(spark, sf_dir, n_parts=4)
     profiles: list[tuple[int, int, int]] = []
 
     def profile(bdf: DataFrame, batch_id: int) -> None:
@@ -2021,19 +1517,7 @@ def q_stream_imr(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         profiles.append((row.batch_key, row.n, row.qsum))
 
-    q = (
-        sdf.writeStream.foreachBatch(profile)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(),
-                f"bdss_simr_ckpt_{uuid.uuid4().hex[:8]}",
-            ),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=profile, checkpoint=ckpt_dir)
     per = spark.createDataFrame(
         profiles, "batch_key: bigint, n: bigint, qsum: bigint"
     )
@@ -2184,20 +1668,8 @@ def _sdt_oracle() -> str:
 def q_stream_decay_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    _, ckpt_dir = pid_scratch_dirs("stream_decay_topk", sf_dir)
+    sdf = _stream(spark, sf_dir, n_parts=4)
     state: list[tuple[int, str, int]] = []
 
     def absorb(bdf: DataFrame, batch_id: int) -> None:
@@ -2214,19 +1686,7 @@ def q_stream_decay_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_key = min(r.bk for r in rows)
         state.extend((batch_key, r.event_type, r.c) for r in rows)
 
-    q = (
-        sdf.writeStream.foreachBatch(absorb)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(),
-                f"bdss_sdt_ckpt_{uuid.uuid4().hex[:8]}",
-            ),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=absorb, checkpoint=ckpt_dir)
     per = spark.createDataFrame(
         state, "batch_key bigint, event_type string, c bigint"
     )
@@ -2319,23 +1779,8 @@ def _sue_oracle() -> str:
 def q_stream_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
-    stage = os.path.join(
-        tempfile.gettempdir(), f"bdss_sue_state_{uuid.uuid4().hex[:8]}"
-    )
+    stage, ckpt_dir = pid_scratch_dirs("stream_user_ewma", sf_dir)
+    sdf = _stream(spark, sf_dir, n_parts=4)
 
     def absorb(bdf: DataFrame, batch_id: int) -> None:
         # stage the per-user batch aggregate keyed by batch_key — a
@@ -2347,19 +1792,7 @@ def q_stream_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         bk = bdf.agg(F.min("event_id").cast("bigint").alias("batch_key"))
         per.crossJoin(F.broadcast(bk)).write.mode("append").parquet(stage)
 
-    q = (
-        sdf.writeStream.foreachBatch(absorb)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(),
-                f"bdss_sue_ckpt_{uuid.uuid4().hex[:8]}",
-            ),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=absorb, checkpoint=ckpt_dir)
     staged = spark.read.parquet(stage)
     # bounded: 4 staged batch keys
     keys = sorted(
@@ -2440,20 +1873,8 @@ def _sga_oracle() -> str:
 def q_stream_gap_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
-    _ensure_session_confs(spark)
-    src_dir = _stage_stream_dir_parts(sf_dir, "events", n_parts=4)
-    raw_schema = spark.read.parquet(src_dir).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    sdf = normalize_raw_timestamps(sdf, src_dir)
+    _, ckpt_dir = pid_scratch_dirs("stream_gap_alert", sf_dir)
+    sdf = _stream(spark, sf_dir, n_parts=4)
     state: list[tuple[int, str, int]] = []
 
     def absorb(bdf: DataFrame, batch_id: int) -> None:
@@ -2470,19 +1891,7 @@ def q_stream_gap_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_key = min(r.bk for r in rows)
         state.extend((batch_key, r.event_type, r.c) for r in rows)
 
-    q = (
-        sdf.writeStream.foreachBatch(absorb)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(),
-                f"bdss_sga_ckpt_{uuid.uuid4().hex[:8]}",
-            ),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sdf, batch=absorb, checkpoint=ckpt_dir)
     per = spark.createDataFrame(
         state, "batch_key bigint, event_type string, c bigint"
     )

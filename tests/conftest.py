@@ -25,7 +25,6 @@ _SLOW_GATED = {
     "test_live_topk_demo",                      # 49 s e2e demo
     "test_live_topk_demo_resumes_from_checkpoint",  # 44 s e2e demo
     "test_oracle_results_non_empty",            # 22 s fixture vacuity sweep
-    "test_resourceful_queries_are_reinvokable",  # 20 s
     "test_sessionize_bridge_row_merges_orphan",  # 13 s
     "test_sessionize_late_row_across_batches_extends_not_rewinds",  # 12 s
     "test_sessionize_too_late_orphan_becomes_own_session",  # 12 s

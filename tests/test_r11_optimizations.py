@@ -91,7 +91,7 @@ def test_rebalance_noop_at_scale(spark, tmp_path, monkeypatch):
 def test_pid_scratch_reclaims_stale_dirs(tmp_path, monkeypatch):
     import tempfile
 
-    from big_data_streaming_spark.workload.streaming import _pid_scratch_dirs
+    from big_data_streaming_spark.sources.staging import pid_scratch_dirs
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     base = tmp_path / "bdss_stream_stage"
@@ -104,7 +104,7 @@ def test_pid_scratch_reclaims_stale_dirs(tmp_path, monkeypatch):
     live = base / f"stream_topk_pid{os.getpid()}_ckpt_cafecafe00"
     live_keep = base / "stream_topk_pid1_aaaa"  # pid 1 exists -> kept
     live_keep.mkdir()
-    out_dir, ckpt_dir = _pid_scratch_dirs("stream_topk", "/root/testdata/sf0.001")
+    out_dir, ckpt_dir = pid_scratch_dirs("stream_topk", "/root/testdata/sf0.001")
     assert not dead.exists(), "dead-pid sibling must be reclaimed"
     assert live_keep.exists(), "live-pid sibling must be left alone"
     assert os.path.isdir(out_dir) and os.path.isdir(ckpt_dir)

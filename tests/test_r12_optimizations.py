@@ -82,7 +82,7 @@ def test_scan_units_recurses_hive_layout(tmp_path):
 def test_pid_scratch_survives_corrupt_pid_entry(tmp_path, monkeypatch):
     import tempfile
 
-    from big_data_streaming_spark.workload.streaming import _pid_scratch_dirs
+    from big_data_streaming_spark.sources.staging import pid_scratch_dirs
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     base = tmp_path / "bdss_stream_stage"
@@ -91,7 +91,7 @@ def test_pid_scratch_survives_corrupt_pid_entry(tmp_path, monkeypatch):
     # must be kept and the call must not raise (ADVICE r11)
     corrupt = base / f"stream_topk_pid{10**25}_cafecafe00"
     corrupt.mkdir()
-    out_dir, ckpt_dir = _pid_scratch_dirs(
+    out_dir, ckpt_dir = pid_scratch_dirs(
         "stream_topk", "/root/testdata/sf0.001"
     )
     assert corrupt.exists(), "corrupt-pid sibling must be kept, not crash"

@@ -30,9 +30,9 @@ def test_stream_ohlc_is_really_multibatch(spark, sf_small):
         _ensure_session_confs,
         normalize_raw_timestamps,
     )
-    from big_data_streaming_spark.workload.streaming import _stage_stream_dir_parts
+    from big_data_streaming_spark.workload.streaming import _stage_stream_dir
 
-    src = _stage_stream_dir_parts(sf_small, "events", n_parts=4)
+    src = _stage_stream_dir(sf_small, "events", n_parts=4)
     parts = [f for f in os.listdir(src) if f.endswith(".parquet")]
     assert len(parts) == 4, parts
 
