@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from big_data_streaming_spark.sources import local_rows
+
 
 def connected_components(
     edges: DataFrame,
@@ -371,9 +373,7 @@ def bfs_hops(
         .limit(0)
         .withColumn("dist", F.lit(0))
     )
-    reach = edges.sparkSession.createDataFrame(
-        [(source, 0)], schema=reach.schema
-    )
+    reach = local_rows(edges.sparkSession, [(source, 0)], reach.schema)
     for _ in range(hops):
         expanded = edges.join(
             F.broadcast(reach), F.col(src) == F.col("node")
@@ -410,9 +410,7 @@ def bellman_ford_hops(
         .limit(0)
         .withColumn("dist", F.lit(0).cast("bigint"))
     )
-    reach = edges.sparkSession.createDataFrame(
-        [(source, 0)], schema=reach.schema
-    )
+    reach = local_rows(edges.sparkSession, [(source, 0)], reach.schema)
     for _ in range(hops):
         expanded = edges.join(
             F.broadcast(reach), F.col(src) == F.col("node")

@@ -1,22 +1,32 @@
-"""Batch sources: parquet-backed table catalog over a scale-factor directory.
+"""Batch sources: parquet-backed table catalog over a scale-factor directory,
+and driver-held rows as local relations.
 
-Reads are plain ``spark.read.parquet`` so Catalyst's vectorized parquet
-reader, predicate pushdown, and column pruning all apply; a ``queries()``
-callable that selects 2 columns through this loader produces a scan whose
-``ReadSchema`` contains exactly those 2 columns. At 100 TB the same call
+Reads are ``spark.read.schema(<cached>).parquet`` so Catalyst's vectorized
+parquet reader, predicate pushdown, and column pruning all apply; a
+``queries()`` callable that selects 2 columns through this loader
+produces a scan whose ``ReadSchema`` contains exactly those 2 columns. The
+schema is Spark's own inference, run once per file fingerprint and
+session type confs (``table_facts``): the first read of a table starts one
+schema-inference job, later reads of the unchanged files start none, and
+a table rewritten in place is inferred again. At 100 TB the same call
 reads a partitioned table (e.g. ``coin/interval/year/month`` layout, the
 partition keys the reference derives but never uses — reference
 spark/streaming-shorttime.py:60-61) and gets partition pruning for free.
+
+Small tables the driver computes (parameter grids, collected results)
+enter plans through ``local_rows`` as a ``LocalTableScan``: no Spark job
+and no Python worker, like a table whose schema is declared up front.
 """
 
 from __future__ import annotations
 
-import functools
 import os
+from collections.abc import Iterable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+from pyspark.sql.types import StructType, TimestampNTZType
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -30,23 +40,86 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-@functools.lru_cache(maxsize=256)
-def _nanos_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS). Spark's TimestampType is
-    µs, and 4.x refuses NANOS columns unless
-    ``spark.sql.legacy.parquet.nanosAsLong`` is on (set in session.py) —
-    in which case they arrive as epoch-nanos longs. One footer read per
-    path (driver-side, cached) tells us which columns to convert."""
+# Confs that change the types Spark infers from a parquet footer; a
+# cached schema is valid only under the values it was inferred with.
+_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+
+class TableFacts(NamedTuple):
+    schema: StructType  # Spark's own inferred schema
+    nanos: tuple[str, ...]  # columns stored as TIMESTAMP(NANOS)
+    scan_units: tuple[int, int]  # (total bytes, total row groups)
+
+
+# (path, type confs) -> (file fingerprint, facts); one entry per path and
+# conf setting, replaced whenever the files under the path change.
+_FACTS: dict[tuple[str, tuple], tuple[tuple, TableFacts]] = {}
+
+
+def _parquet_files(path: str) -> list[str]:
+    if not os.path.isdir(path):
+        return [path]
+    # Recursive walk (ADVICE r11): hive-partitioned layouts nest part
+    # files under key=value subdirs.
+    return sorted(
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(path)
+        for f in names
+        if f.endswith(".parquet")
+    )
+
+
+def table_facts(spark: SparkSession, path: str) -> TableFacts:
+    """What a read of the parquet file or directory ``path`` needs to know
+    before it runs, inferred once per file fingerprint.
+
+    The cache key is the path, the ``(size, mtime_ns)`` of every parquet
+    file under it (the rule ``staging.fingerprint_cached_dir`` uses), and
+    the session's ``_TYPE_CONFS``. On first sight Spark infers the schema
+    (one Spark job) and the footers give the NANOS columns and the scan
+    units; a later call on unchanged files under the same confs starts no
+    job and reads no footer, and a file rewritten in place, added or
+    removed is inferred again. Call after ``_ensure_session_confs``."""
+    files = _parquet_files(path)
+    stats = [os.stat(f) for f in files]
+    fingerprint = tuple(
+        (f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats)
+    )
+    key = (path, tuple(spark.conf.get(c, None) for c in _TYPE_CONFS))
+    hit = _FACTS.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
     import pyarrow.parquet as pq
 
-    target = path
-    if os.path.isdir(path):
-        inner = [f for f in sorted(os.listdir(path)) if f.endswith(".parquet")]
-        if not inner:
-            return ()
-        target = os.path.join(path, inner[0])
-    schema = pq.read_schema(target)
-    return tuple(f.name for f in schema if str(f.type) == "timestamp[ns]")
+    facts = TableFacts(
+        schema=spark.read.parquet(path).schema,
+        nanos=tuple(
+            f.name
+            for f in (pq.read_schema(files[0]) if files else ())
+            if str(f.type) == "timestamp[ns]"
+        ),
+        scan_units=(
+            sum(st.st_size for st in stats),
+            sum(pq.read_metadata(f).num_row_groups for f in files),
+        ),
+    )
+    _FACTS[key] = (fingerprint, facts)
+    return facts
+
+
+def _nanos_columns(spark: SparkSession, path: str) -> tuple[str, ...]:
+    """Columns stored as parquet TIMESTAMP(NANOS). Spark's TimestampType is
+    µs, and 4.x refuses NANOS columns unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is on (pinned by
+    ``_ensure_session_confs``) — in which case they arrive as epoch-nanos
+    longs. Read from the first file's footer and cached per file
+    fingerprint (``table_facts``)."""
+    return table_facts(spark, path).nanos
 
 
 def normalize_raw_timestamps(df: DataFrame, path: str) -> DataFrame:
@@ -64,7 +137,7 @@ def normalize_raw_timestamps(df: DataFrame, path: str) -> DataFrame:
       and functions that require TimestampType (``unix_millis``,
       ``to_utc_timestamp``, …) resolve.
     """
-    for c in _nanos_columns(path):
+    for c in _nanos_columns(df.sparkSession, path):
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     for field in df.schema.fields:
         if isinstance(field.dataType, TimestampNTZType):
@@ -72,31 +145,16 @@ def normalize_raw_timestamps(df: DataFrame, path: str) -> DataFrame:
     return df
 
 
-@functools.lru_cache(maxsize=256)
-def _scan_units(path: str) -> tuple[int, int]:
+def _scan_units(spark: SparkSession, path: str) -> tuple[int, int]:
     """(total_bytes, total_row_groups) for a parquet file or directory.
 
     A parquet scan can parallelize at most one task per ROW GROUP — byte
     splits below row-group granularity produce empty tasks — so the row-
     group total, not the byte count, is the table's effective scan
-    parallelism ceiling. One cached driver-side footer read per path
-    (same policy as ``_nanos_columns``)."""
-    import pyarrow.parquet as pq
-
-    files = [path]
-    if os.path.isdir(path):
-        # Recursive walk (ADVICE r11): hive-partitioned layouts nest
-        # part files under key=value subdirs; a top-level-only listing
-        # returned (0, 0) there and the rebalance silently never fired.
-        files = sorted(
-            os.path.join(root, f)
-            for root, _dirs, names in os.walk(path)
-            for f in names
-            if f.endswith(".parquet")
-        )
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    total_rgs = sum(pq.read_metadata(f).num_row_groups for f in files)
-    return total_bytes, total_rgs
+    parallelism ceiling. Summed over every parquet file under the path
+    and cached per file fingerprint (``table_facts``), so a table
+    rewritten in place with more row groups is counted again."""
+    return table_facts(spark, path).scan_units
 
 
 # Floor below which an unsplittable table is left single-task: the added
@@ -139,10 +197,7 @@ def _rebalance_unsplittable(
     disables it globally (A/B measurement and plan-shape comparisons)."""
     if os.environ.get("SPARK_GRAFT_SCAN_REBALANCE", "auto") == "off":
         return df
-    try:
-        total_bytes, total_rgs = _scan_units(path)
-    except OSError:
-        return df
+    total_bytes, total_rgs = _scan_units(spark, path)
     if total_bytes < _REBALANCE_MIN_BYTES:
         return df
     target = spark.sparkContext.defaultParallelism
@@ -165,6 +220,40 @@ def load_table(
     compute would otherwise serialize into the single scan task).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    _ensure_session_confs(spark)
-    df = normalize_raw_timestamps(spark.read.parquet(path), path)
+    df = read_parquet(spark, path)
     return _rebalance_unsplittable(spark, df, path) if rebalance else df
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Batch read of a parquet file or directory with the session confs
+    pinned, the schema from ``table_facts`` (no inference job once the
+    files have been seen) and raw timestamps normalized."""
+    _ensure_session_confs(spark)
+    df = spark.read.schema(table_facts(spark, path).schema).parquet(path)
+    return normalize_raw_timestamps(df, path)
+
+
+def local_rows(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order) as a DataFrame that
+    plans as a JVM ``LocalTableScan``.
+
+    ``spark.createDataFrame(<list>, schema)`` makes a PythonRDD
+    (``parallelize``, then a re-serializing ``map``), so every execution
+    of the frame runs one Python-worker task per ``defaultParallelism``
+    slice — even for a 4-row grid, and each such task pays the worker's
+    per-task set-up. Here the rows become an Arrow table typed from the
+    Spark schema, which ``createDataFrame`` ships to the JVM once as a
+    ``LocalRelation``: no Spark job, no Python task. Schema (names, types,
+    nullability) and values equal the list path's, empty input included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

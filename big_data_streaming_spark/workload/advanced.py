@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import registry, t
 
 QUERIES, ORACLES, _q = registry()
@@ -1797,7 +1798,7 @@ def q_linkage_em(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("u_q", LongType()),
         ]
     )
-    res = spark.createDataFrame(out_rows, schema)
+    res = local_rows(spark, out_rows, schema)
     return res.selectExpr(
         "field",
         "p_q",
@@ -2014,7 +2015,8 @@ def q_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    offsets = spark.createDataFrame(
+    offsets = local_rows(
+        spark,
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
          if (dx, dy) != (0, 0)],
         "dx int, dy int",

@@ -51,6 +51,7 @@ from big_data_streaming_spark.plans.rank import (
     global_order,
     global_rank,
 )
+from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import (
     DEC,
     dec_avg,
@@ -2499,7 +2500,7 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kanon_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "customer")
     shifted = F.col("c_acctbal") + 1000
-    widths = spark.createDataFrame([(100,), (500,), (2500,), (25000,)], ["w"])
+    widths = local_rows(spark, [(100,), (500,), (2500,), (25000,)], "w bigint")
     cand = (
         c.crossJoin(F.broadcast(widths))
         .groupBy("w", "c_nationkey", F.floor(shifted / F.col("w")))
@@ -5237,7 +5238,8 @@ def q_session_count_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("user_id").cast("bigint").alias("n_users"),
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
     )
-    grid = spark.createDataFrame(
+    grid = local_rows(
+        spark,
         [(x,) for x in _SG_GRID], "timeout_s long"
     )
     cnt = (
@@ -5545,7 +5547,7 @@ def q_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("trend_q", LongType()),
         ]
     )
-    out = spark.createDataFrame(rows, schema)
+    out = local_rows(spark, rows, schema)
     return out.select(
         "t",
         "day",
@@ -5766,7 +5768,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("p_removed_q", LongType()),
         ]
     )
-    req = spark.createDataFrame(rows, schema).withColumn(
+    req = local_rows(spark, rows, schema).withColumn(
         "re_q", F.expr(_MKV_FINAL)
     )
     # bounded: channel-transition aggregate — O(|channels|²) rows
@@ -6223,7 +6225,7 @@ def q_km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("s_q", LongType()),
         ]
     )
-    out = spark.createDataFrame(rows, schema)
+    out = local_rows(spark, rows, schema)
     return out.select(
         "day",
         "n_risk",
@@ -7635,7 +7637,7 @@ def q_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("y"),
     )
-    lags = spark.createDataFrame([(i,) for i in range(4)], "lag bigint")
+    lags = local_rows(spark, [(i,) for i in range(4)], "lag bigint")
     a = hb.alias("a")
     b = hb.alias("b")
     p = (
@@ -8835,7 +8837,8 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = StructType(
         [StructField("event_type", StringType()), StructField("pi_fp", LongType())]
     )
-    out = spark.createDataFrame(
+    out = local_rows(
+        spark,
         [(s, int(pi[s])) for s in states], schema
     )
     return out.selectExpr(
@@ -9653,7 +9656,8 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(EXTRACT(hour FROM ts) AS BIGINT) DIV 8 AS g",
         f"{_AOV_CENTS} AS c",
     )
-    pairs = spark.createDataFrame(
+    pairs = local_rows(
+        spark,
         [(1, 0, 2 - 1), (2, 0, 2), (3, 1, 2)], "pid int, lo bigint, hi bigint"
     )
     longp = base.join(
@@ -10499,7 +10503,8 @@ def q_mde_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_pos"),
     )
-    grid = spark.createDataFrame(
+    grid = local_rows(
+        spark,
         [(1000,), (10000,), (100000,)], "n_arm bigint"
     )
     return (
@@ -11184,7 +11189,7 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("s1", LongType()),
         ]
     )
-    out = spark.createDataFrame(rows, schema)
+    out = local_rows(spark, rows, schema)
     return out.selectExpr(
         "t",
         "day",
@@ -12692,7 +12697,7 @@ def q_period_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(Window.partitionBy()).alias("d"),
     )
     periods = F.broadcast(
-        idx.sparkSession.createDataFrame([(3,), (7,), (14,)], "p int")
+        local_rows(idx.sparkSession, [(3,), (7,), (14,)], "p int")
     )
     folded = (
         idx.crossJoin(periods)
@@ -12971,7 +12976,7 @@ def q_queueing_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grid = m0.crossJoin(
         F.broadcast(
-            span.sparkSession.createDataFrame([(0,), (1,)], "extra int")
+            local_rows(span.sparkSession, [(0,), (1,)], "extra int")
         )
     )
     rho = (
@@ -13972,7 +13977,7 @@ def q_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = ud.groupBy("user_id").agg(F.min("d").cast("bigint").alias("d0"))
     maxd = ud.agg(F.max("d").cast("bigint").alias("dmax"))
     grid = F.broadcast(
-        ud.sparkSession.createDataFrame([(1,), (3,), (7,), (14,)], "n int")
+        local_rows(ud.sparkSession, [(1,), (3,), (7,), (14,)], "n int")
     )
     eligible = (
         firsts.crossJoin(grid)
@@ -15539,7 +15544,8 @@ def q_quantile_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(wt).cast("bigint").alias("n"),
     )
     g = F.broadcast(
-        r.sparkSession.createDataFrame(
+        local_rows(
+            r.sparkSession,
             [(i,) for i in range(1, 10)], "decile long"
         )
     )

@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 
 from big_data_streaming_spark.schemas import EVENT_PROPS_SCHEMA
 from big_data_streaming_spark.plans.rank import global_order, global_rank
+from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import (
     dec_sum,
     oracle_dec_sum,
@@ -528,9 +529,10 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select("event_id", "value")
-    bands = ev.sparkSession.createDataFrame(
+    bands = local_rows(
+        ev.sparkSession,
         [("low", 0.0, 100.0), ("mid", 100.0, 200.0), ("high", 200.0, 100000.0)],
-        ["band_name", "lo", "hi"],
+        "band_name string, lo double, hi double",
     )
     return ev.join(
         F.broadcast(bands),
@@ -1847,7 +1849,7 @@ def q_watermark_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("lateness"))
         ).cast("bigint").alias("p99"),
     )
-    cand = spark.createDataFrame([(600,), (1800,), (3600,)], "delay_s bigint")
+    cand = local_rows(spark, [(600,), (1800,), (3600,)], "delay_s bigint")
     dropped = (
         late.crossJoin(F.broadcast(cand))
         .groupBy("delay_s")
@@ -2020,7 +2022,8 @@ def q_bloom_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("event_id").cast("bigint").alias("n_keys")
         ).selectExpr("'event_id' AS key_col", "n_keys")
     )
-    grid = spark.createDataFrame(
+    grid = local_rows(
+        spark,
         [
             (0.01, 9.585058377367439, 6.643856189774724),
             (0.001, 14.37758756605116, 9.965784284662087),

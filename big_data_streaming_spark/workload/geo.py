@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import (
     dec_avg,
     dec_sum,
@@ -166,7 +167,8 @@ def q_geo_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     probes = pts.where(F.col("c_custkey") % 20 == 0)
-    offs = spark.createDataFrame(
+    offs = local_rows(
+        spark,
         [(dlat, dlon) for dlat in (-1, 0, 1) for dlon in (-1, 0, 1)],
         "dlat long, dlon long",
     )
@@ -265,7 +267,8 @@ def q_geo_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("bigint").alias("n_points"),
     )
     offs = F.broadcast(
-        cells.sparkSession.createDataFrame(
+        local_rows(
+            cells.sparkSession,
             [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
             "dx long, dy long",
         )

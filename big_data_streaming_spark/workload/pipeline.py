@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_streaming_spark.plans.rank import global_rank
+from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import registry, t, tr
 
 QUERIES, ORACLES, _q = registry()
@@ -719,7 +720,8 @@ def bpe_train(
             for p in _bpe_pairs(s):
                 counts[p] += freq[w]
         counts = +counts  # drop pairs whose count fell to zero
-    vocab = df.sparkSession.createDataFrame(
+    vocab = local_rows(
+        df.sparkSession,
         [(w, freq[w], s) for w, s in sym.items()],
         "w string, freq bigint, sym string",
     )
@@ -729,7 +731,8 @@ def bpe_train(
 @_q("q_bpe_train", _bpe_oracle())
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _ = bpe_train(t(spark, sf_dir, "documents"))
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         merges, "step int, left_sym string, right_sym string, merged string, pair_count bigint"
     )
 
@@ -1960,7 +1963,8 @@ def q_context_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split("text", " ")).cast("bigint").alias("nt")
     )
     grid = F.broadcast(
-        toks.sparkSession.createDataFrame(
+        local_rows(
+            toks.sparkSession,
             [(64,), (128,), (256,), (512,)], "ctx_len long"
         )
     )

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_streaming_spark.plans.rank import global_order, global_rank
+from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import (
     dec_avg,
     dec_sum,
@@ -4308,7 +4309,8 @@ def q_pareto_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
     )
     grid = F.broadcast(
-        curve.sparkSession.createDataFrame(
+        local_rows(
+            curve.sparkSession,
             [(50,), (80,), (90,), (99,)], "pct int"
         )
     )

@@ -24,6 +24,7 @@ from big_data_streaming_spark.functions.similarity import (
     ivf_topk,
 )
 from big_data_streaming_spark.plans.rank import global_rank
+from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import registry, t, tr
 
 QUERIES, ORACLES, _q = registry()
@@ -1084,7 +1085,8 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             sq = sq + w[i] * w[i]
         nrm = math.sqrt(sq)
         v = {i: w[i] / nrm for i in range(1, d + 1)}
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(i, v[i], nrm, n) for i in range(1, d + 1)],
         "dim: int, loading: double, lambda_est: double, n: bigint",
     )
@@ -1845,7 +1847,7 @@ def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("radius_q", LongType()),
         ]
     )
-    out = spark.createDataFrame(picks, schema)
+    out = local_rows(spark, picks, schema)
     return out.select(
         "step",
         "vec_id",
@@ -2350,7 +2352,7 @@ def q_embed_stride_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qv"),
     )
     strides = F.broadcast(
-        q.sparkSession.createDataFrame([(1,), (17,), (289,)], "stride long")
+        local_rows(q.sparkSession, [(1,), (17,), (289,)], "stride long")
     )
     a = q.select("vec_id", F.col("qv").alias("qa")).crossJoin(strides)
     b = q.select(

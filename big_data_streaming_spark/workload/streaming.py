@@ -17,8 +17,9 @@ tests/test_streaming.py). The drain contract, implemented once in
   four-micro-batch run at every scale factor (the batch-identity
   contract the per-batch oracles replay).
 * **One file per trigger.** ``_stream`` pins the session confs the raw
-  files need (the driver hands over its own plain session), probes the
-  raw file schema, opens ``readStream`` with ``maxFilesPerTrigger=1``
+  files need (the driver hands over its own plain session), takes the
+  raw file schema from the catalog's fingerprinted cache (inferred once
+  per staged dir), opens ``readStream`` with ``maxFilesPerTrigger=1``
   and applies the batch catalog's timestamp normalization — identical
   values either path.
 * **The pin.** ``_drain`` starts every query with 8 shuffle partitions
@@ -54,6 +55,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_streaming_spark.sources.catalog import (
+    _ensure_session_confs,
+    local_rows,
+    normalize_raw_timestamps,
+    read_parquet,
+    table_facts,
+)
 from big_data_streaming_spark.sources.staging import (
     fingerprint_cached_dir,
     pid_scratch_dirs,
@@ -100,17 +108,11 @@ def _stream(
 ) -> DataFrame:
     """The staged ``table`` as a file stream, one file per trigger, with
     raw timestamps normalized (the module's drain contract)."""
-    from big_data_streaming_spark.sources.catalog import (
-        _ensure_session_confs,
-        normalize_raw_timestamps,
-    )
-
     # Without nanosAsLong the schema probe refuses TIMESTAMP(NANOS) files.
     _ensure_session_confs(spark)
     src_dir = _stage_stream_dir(sf_dir, table, n_parts)
-    raw_schema = spark.read.parquet(src_dir).schema
     sdf = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_facts(spark, src_dir).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
@@ -427,8 +429,6 @@ def q_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import normalize_raw_timestamps
-
     def stream_side(alias: str, etype: str) -> DataFrame:
         return (
             _stream(spark, sf_dir)
@@ -452,7 +452,7 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The decided-region cutoff, from the same data the stream consumed:
     # min over the two sides' max event times, minus the watermark delay.
     src_dir = _stage_stream_dir(sf_dir, "events")
-    batch = normalize_raw_timestamps(spark.read.parquet(src_dir), src_dir)
+    batch = read_parquet(spark, src_dir)
     maxes = batch.groupBy().agg(
         F.max(F.when(F.col("event_type") == "click", F.col("ts"))).alias("mc"),
         F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("mp"),
@@ -707,7 +707,8 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             TimestampType,
         )
 
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [],
             StructType(
                 [
@@ -826,8 +827,6 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.sources.catalog import normalize_raw_timestamps
-
     def stream_side(alias: str, etype: str) -> DataFrame:
         return (
             _stream(spark, sf_dir)
@@ -849,7 +848,7 @@ def q_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = _drain(joined)
     src_dir = _stage_stream_dir(sf_dir, "events")
-    batch = normalize_raw_timestamps(spark.read.parquet(src_dir), src_dir)
+    batch = read_parquet(spark, src_dir)
     maxes = batch.groupBy().agg(
         F.max(F.when(F.col("event_type") == "click", F.col("ts"))).alias("mc"),
         F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("mp"),
@@ -1023,7 +1022,8 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         profiles.extend((batch_key, r.event_type, r.ca) for r in rows)
 
     _drain(sdf, batch=profile, checkpoint=ckpt_dir)
-    per = spark.createDataFrame(
+    per = local_rows(
+        spark,
         profiles, "batch_key: bigint, event_type: string, ca: bigint"
     )
     tp = per.groupBy("batch_key").agg(F.sum("ca").cast("bigint").alias("na"))
@@ -1343,7 +1343,8 @@ def q_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
         profiles.append((row.batch_key, row.n_treat, row.n_control))
 
     _drain(sdf, batch=profile, checkpoint=ckpt_dir)
-    per = spark.createDataFrame(
+    per = local_rows(
+        spark,
         profiles, "batch_key: bigint, n_treat: bigint, n_control: bigint"
     )
     allr = per.agg(
@@ -1418,7 +1419,8 @@ def q_stream_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((r.batch_key, r.n, r.min_sec, r.max_sec))
 
     _drain(sdf, batch=profile, checkpoint=ckpt_dir)
-    per = spark.createDataFrame(
+    per = local_rows(
+        spark,
         rows, "batch_key: bigint, n: bigint, min_sec: bigint, max_sec: bigint"
     )
     f = per.select(
@@ -1518,7 +1520,8 @@ def q_stream_imr(spark: SparkSession, sf_dir: str) -> DataFrame:
         profiles.append((row.batch_key, row.n, row.qsum))
 
     _drain(sdf, batch=profile, checkpoint=ckpt_dir)
-    per = spark.createDataFrame(
+    per = local_rows(
+        spark,
         profiles, "batch_key: bigint, n: bigint, qsum: bigint"
     )
     # bounded: per-micro-batch profile — O(batches) rows
@@ -1606,7 +1609,7 @@ def q_state_size_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fr = wins.agg(F.max("hr").cast("bigint").alias("max_hr"))
     grid = F.broadcast(
-        spark.createDataFrame([(h,) for h in _SSA_HORIZONS], "h int")
+        local_rows(spark, [(h,) for h in _SSA_HORIZONS], "h int")
     )
     return (
         wins.crossJoin(F.broadcast(fr))
@@ -1687,7 +1690,8 @@ def q_stream_decay_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.extend((batch_key, r.event_type, r.c) for r in rows)
 
     _drain(sdf, batch=absorb, checkpoint=ckpt_dir)
-    per = spark.createDataFrame(
+    per = local_rows(
+        spark,
         state, "batch_key bigint, event_type string, c bigint"
     )
     # bounded: batch index over the 4 collected micro-batch keys
@@ -1892,7 +1896,8 @@ def q_stream_gap_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.extend((batch_key, r.event_type, r.c) for r in rows)
 
     _drain(sdf, batch=absorb, checkpoint=ckpt_dir)
-    per = spark.createDataFrame(
+    per = local_rows(
+        spark,
         state, "batch_key bigint, event_type string, c bigint"
     )
     # bounded: batch index over the 4 collected micro-batch keys

@@ -26,6 +26,7 @@ from big_data_streaming_spark.functions.dedup import (
     simhash64,
 )
 from big_data_streaming_spark.plans.rank import global_ntile, global_rank
+from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import registry, t, tr
 
 QUERIES, ORACLES, _q = registry()
@@ -1885,7 +1886,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rnk"),
     )
     tot = f.agg(F.sum("freq").cast("bigint").alias("total_tokens"))
-    ks = spark.createDataFrame([(k,) for k in _COVERAGE_KS], "k int")
+    ks = local_rows(spark, [(k,) for k in _COVERAGE_KS], "k int")
     return (
         r.crossJoin(F.broadcast(ks))
         .groupBy("k")
@@ -3237,7 +3238,8 @@ def q_maxcover_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         picked.append(top[0].doc_id)
         covered_total += top[0].gain
         rows.append((order, top[0].doc_id, top[0].gain, covered_total))
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows, "pick_order int, doc_id bigint, gain bigint, covered_total bigint"
     )
 
@@ -3456,7 +3458,7 @@ def q_lsh_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         rk.rn
         == F.greatest(F.floor((rk.n * F.col("quartile")) / 4), F.lit(1)),
     ).select("quartile", "s")
-    grid = spark.createDataFrame(list(_LSH_GRID), "b int, r int")
+    grid = local_rows(spark, list(_LSH_GRID), "b int, r int")
     return (
         probes.crossJoin(F.broadcast(grid))
         .selectExpr("quartile", "s", "b", "r", f"{_LSH_SR} AS sr")
@@ -4493,7 +4495,7 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     common = ra.join(rb, "token").select(
         F.greatest(F.col("r"), F.col("r_b")).cast("bigint").alias("mind")
     )
-    depths = spark.createDataFrame([(i,) for i in range(1, _RBO_K + 1)], "d bigint")
+    depths = local_rows(spark, [(i,) for i in range(1, _RBO_K + 1)], "d bigint")
     # left join so an empty intersection still yields x=0 at every depth
     # (a bare cross join would drop all depth rows).
     ov = (
@@ -5277,7 +5279,7 @@ def q_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("total").cast("bigint").alias("total"),
     )
     grid = F.broadcast(
-        firsts.sparkSession.createDataFrame([(i,) for i in range(1, 11)], "dec int")
+        local_rows(firsts.sparkSession, [(i,) for i in range(1, 11)], "dec int")
     )
     return (
         firsts.crossJoin(grid)
@@ -5742,7 +5744,8 @@ def q_quality_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "documents").select("doc_id", "source"), "doc_id"
     )
     grid = F.broadcast(
-        lab.sparkSession.createDataFrame(
+        local_rows(
+            lab.sparkSession,
             [(-0.5,), (-0.25,), (0.0,), (0.25,), (0.5,)], "threshold double"
         )
     )

@@ -9,7 +9,7 @@ from big_data_streaming_spark.session import get_spark
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
 
-# Slowest self-contained slices (~7.5 min of the ~27 min full suite),
+# Slowest self-contained slices (~6.7 min of the ~27 min full suite),
 # env-gated so a DEFAULT pytest run finishes inside the grading driver's
 # window (VERIFY_r11 recorded tests_ok:false with zero failures — the
 # full suite simply outgrew the window; VERDICT r11 task 1). The full
@@ -25,10 +25,6 @@ _SLOW_GATED = {
     "test_live_topk_demo",                      # 49 s e2e demo
     "test_live_topk_demo_resumes_from_checkpoint",  # 44 s e2e demo
     "test_oracle_results_non_empty",            # 22 s fixture vacuity sweep
-    "test_sessionize_bridge_row_merges_orphan",  # 13 s
-    "test_sessionize_late_row_across_batches_extends_not_rewinds",  # 12 s
-    "test_sessionize_too_late_orphan_becomes_own_session",  # 12 s
-    "test_sessionize_survives_very_late_event",  # 11 s
     "test_nearest_matches_pandas_merge_asof_property",  # 11 s
     "test_bellman_ford_matches_python_minplus_property",  # 10 s
     "test_avro_py_datasource_roundtrip",        # 9 s

@@ -33,7 +33,7 @@ def test_rebalance_fires_only_below_floor(spark):
     # documents at sf0.001 is a single-row-group file well under the
     # size floor -> rebalance=True must still be a no-op there.
     path = os.path.join(SF, "documents.parquet")
-    total_bytes, total_rgs = _scan_units(path)
+    total_bytes, total_rgs = _scan_units(spark, path)
     assert total_rgs >= 1
     plain = load_table(spark, SF, "documents")
     reb = load_table(spark, SF, "documents", rebalance=True)

@@ -66,7 +66,7 @@ def test_union_find_block_matches_brute_force_property():
         assert got == label
 
 
-def test_scan_units_recurses_hive_layout(tmp_path):
+def test_scan_units_recurses_hive_layout(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -75,7 +75,7 @@ def test_scan_units_recurses_hive_layout(tmp_path):
     part = tmp_path / "t.parquet" / "k=1"
     part.mkdir(parents=True)
     pq.write_table(pa.table({"a": [1, 2, 3]}), part / "part-0.parquet")
-    total_bytes, total_rgs = _scan_units(str(tmp_path / "t.parquet"))
+    total_bytes, total_rgs = _scan_units(spark, str(tmp_path / "t.parquet"))
     assert total_bytes > 0 and total_rgs >= 1
 
 
