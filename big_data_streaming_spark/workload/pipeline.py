@@ -733,7 +733,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _ = bpe_train(t(spark, sf_dir, "documents"))
     return local_rows(
         spark,
-        merges, "step int, left_sym string, right_sym string, merged string, pair_count bigint"
+        merges,
+        "step int, left_sym string, right_sym string, merged string, pair_count bigint",
     )
 
 
