@@ -5238,10 +5238,7 @@ def q_session_count_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("user_id").cast("bigint").alias("n_users"),
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
     )
-    grid = local_rows(
-        spark,
-        [(x,) for x in _SG_GRID], "timeout_s long"
-    )
+    grid = local_rows(spark, [(x,) for x in _SG_GRID], "timeout_s long")
     cnt = (
         g.where(F.col("gap_s").isNotNull())
         .crossJoin(F.broadcast(grid))
@@ -8837,10 +8834,7 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = StructType(
         [StructField("event_type", StringType()), StructField("pi_fp", LongType())]
     )
-    out = local_rows(
-        spark,
-        [(s, int(pi[s])) for s in states], schema
-    )
+    out = local_rows(spark, [(s, int(pi[s])) for s in states], schema)
     return out.selectExpr(
         "event_type",
         "pi_fp",
@@ -9657,8 +9651,7 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_AOV_CENTS} AS c",
     )
     pairs = local_rows(
-        spark,
-        [(1, 0, 2 - 1), (2, 0, 2), (3, 1, 2)], "pid int, lo bigint, hi bigint"
+        spark, [(1, 0, 2 - 1), (2, 0, 2), (3, 1, 2)], "pid int, lo bigint, hi bigint"
     )
     longp = base.join(
         F.broadcast(pairs),
@@ -10503,10 +10496,7 @@ def q_mde_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_pos"),
     )
-    grid = local_rows(
-        spark,
-        [(1000,), (10000,), (100000,)], "n_arm bigint"
-    )
+    grid = local_rows(spark, [(1000,), (10000,), (100000,)], "n_arm bigint")
     return (
         ctl.crossJoin(F.broadcast(grid))
         .selectExpr(
@@ -15544,10 +15534,7 @@ def q_quantile_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(wt).cast("bigint").alias("n"),
     )
     g = F.broadcast(
-        local_rows(
-            r.sparkSession,
-            [(i,) for i in range(1, 10)], "decile long"
-        )
+        local_rows(r.sparkSession, [(i,) for i in range(1, 10)], "decile long")
     )
     cuts = (
         g.join(r, r.rn == F.expr("(n * decile) DIV 10"))

@@ -1964,10 +1964,7 @@ def q_context_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split("text", " ")).cast("bigint").alias("nt")
     )
     grid = F.broadcast(
-        local_rows(
-            toks.sparkSession,
-            [(64,), (128,), (256,), (512,)], "ctx_len long"
-        )
+        local_rows(toks.sparkSession, [(64,), (128,), (256,), (512,)], "ctx_len long")
     )
     chunks = F.expr("(nt + ctx_len - 1) DIV ctx_len")
     return (

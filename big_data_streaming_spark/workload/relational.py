@@ -4309,10 +4309,7 @@ def q_pareto_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
     )
     grid = F.broadcast(
-        local_rows(
-            curve.sparkSession,
-            [(50,), (80,), (90,), (99,)], "pct int"
-        )
+        local_rows(curve.sparkSession, [(50,), (80,), (90,), (99,)], "pct int")
     )
     return (
         curve.crossJoin(grid)

@@ -1023,8 +1023,7 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _drain(sdf, batch=profile, checkpoint=ckpt_dir)
     per = local_rows(
-        spark,
-        profiles, "batch_key: bigint, event_type: string, ca: bigint"
+        spark, profiles, "batch_key: bigint, event_type: string, ca: bigint"
     )
     tp = per.groupBy("batch_key").agg(F.sum("ca").cast("bigint").alias("na"))
     g = per.groupBy("event_type").agg(F.sum("ca").cast("bigint").alias("cb"))
@@ -1344,8 +1343,7 @@ def q_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _drain(sdf, batch=profile, checkpoint=ckpt_dir)
     per = local_rows(
-        spark,
-        profiles, "batch_key: bigint, n_treat: bigint, n_control: bigint"
+        spark, profiles, "batch_key: bigint, n_treat: bigint, n_control: bigint"
     )
     allr = per.agg(
         F.lit(-1).cast("bigint").alias("batch_key"),
@@ -1420,8 +1418,7 @@ def q_stream_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _drain(sdf, batch=profile, checkpoint=ckpt_dir)
     per = local_rows(
-        spark,
-        rows, "batch_key: bigint, n: bigint, min_sec: bigint, max_sec: bigint"
+        spark, rows, "batch_key: bigint, n: bigint, min_sec: bigint, max_sec: bigint"
     )
     f = per.select(
         "*",
@@ -1520,10 +1517,7 @@ def q_stream_imr(spark: SparkSession, sf_dir: str) -> DataFrame:
         profiles.append((row.batch_key, row.n, row.qsum))
 
     _drain(sdf, batch=profile, checkpoint=ckpt_dir)
-    per = local_rows(
-        spark,
-        profiles, "batch_key: bigint, n: bigint, qsum: bigint"
-    )
+    per = local_rows(spark, profiles, "batch_key: bigint, n: bigint, qsum: bigint")
     # bounded: per-micro-batch profile — O(batches) rows
     wb = Window.orderBy("batch_key")
     m = per.selectExpr(
@@ -1690,10 +1684,7 @@ def q_stream_decay_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.extend((batch_key, r.event_type, r.c) for r in rows)
 
     _drain(sdf, batch=absorb, checkpoint=ckpt_dir)
-    per = local_rows(
-        spark,
-        state, "batch_key bigint, event_type string, c bigint"
-    )
+    per = local_rows(spark, state, "batch_key bigint, event_type string, c bigint")
     # bounded: batch index over the 4 collected micro-batch keys
     idx = per.select(
         "event_type",
@@ -1896,10 +1887,7 @@ def q_stream_gap_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.extend((batch_key, r.event_type, r.c) for r in rows)
 
     _drain(sdf, batch=absorb, checkpoint=ckpt_dir)
-    per = local_rows(
-        spark,
-        state, "batch_key bigint, event_type string, c bigint"
-    )
+    per = local_rows(spark, state, "batch_key bigint, event_type string, c bigint")
     # bounded: batch index over the 4 collected micro-batch keys
     idx = per.select(
         "event_type",

@@ -3239,8 +3239,7 @@ def q_maxcover_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         covered_total += top[0].gain
         rows.append((order, top[0].doc_id, top[0].gain, covered_total))
     return local_rows(
-        spark,
-        rows, "pick_order int, doc_id bigint, gain bigint, covered_total bigint"
+        spark, rows, "pick_order int, doc_id bigint, gain bigint, covered_total bigint"
     )
 
 
@@ -5746,7 +5745,8 @@ def q_quality_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = F.broadcast(
         local_rows(
             lab.sparkSession,
-            [(-0.5,), (-0.25,), (0.0,), (0.25,), (0.5,)], "threshold double"
+            [(-0.5,), (-0.25,), (0.0,), (0.25,), (0.5,)],
+            "threshold double",
         )
     )
     return (
