@@ -16,9 +16,12 @@ session is built once with the settings that matter at 100 TB:
   ``toPandas``) is Arrow-batched, not pickled rows.
 * **Shuffle partitions** default to 2× the session's core count
   (``SPARK_GRAFT_CPUS`` when set, else the machine) — the guide-§9 shape
-  "≈ 2-3× total cores, let AQE coalesce down" — parameterised, never a
-  constant, so the same derivation is right on a laptop, the driver's
-  low-core scaling run, and a 1000-executor cluster.
+  "≈ 2-3× total cores, let AQE coalesce down" — derived from the core
+  count with no separate override, so the same derivation is right on a
+  laptop, the driver's low-core scaling run, and a 1000-executor cluster.
+* **Streaming correctness check on** — Spark's default
+  ``statefulOperator.checkCorrectness`` is left enabled; every stateful
+  drain passes with it.
 """
 
 from __future__ import annotations
@@ -63,14 +66,10 @@ _DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
     # Shuffle partitions scale with the session's core count (guide §9:
     # ≈2-3× total cores, AQE coalesces down per stage) instead of a
-    # constant: with SPARK_GRAFT_CPUS=8 the derived default is 16, with
-    # 32 it is 64, so the driver's low-core scaling run exercises a
-    # proportionally sized shuffle layout. SPARK_GRAFT_SHUFFLE still
-    # overrides for A/B measurement.
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE", str(2 * _core_count())
-    ),
-    "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "false",
+    # fixed number: with SPARK_GRAFT_CPUS=8 the derived default is 16,
+    # with 32 it is 64, so the driver's low-core scaling run exercises a
+    # proportionally sized shuffle layout.
+    "spark.sql.shuffle.partitions": str(2 * _core_count()),
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }

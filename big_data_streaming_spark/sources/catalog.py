@@ -160,9 +160,7 @@ def _scan_units(spark: SparkSession, path: str) -> tuple[int, int]:
 # Floor below which an unsplittable table is left single-task: the added
 # round-robin exchange costs more than it buys on dim-sized relations
 # (region/nation/supplier/part), which downstream joins broadcast anyway.
-_REBALANCE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCAN_REBALANCE_MIN_BYTES", str(256 * 1024))
-)
+_REBALANCE_MIN_BYTES = 256 * 1024
 
 
 def _rebalance_unsplittable(

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from big_data_streaming_spark.streaming.sinks import start_foreach_batch
+
 
 def run_live_topk(
     spark: SparkSession,
@@ -90,12 +92,8 @@ def run_live_topk(
             .parquet(os.path.join(out_dir, f"batch_{batch_id}"))
         )
 
-    return (
-        agg.writeStream.foreachBatch(rank_and_append)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
+    return start_foreach_batch(
+        agg, rank_and_append, checkpoint, trigger={"processingTime": "0 seconds"}
     )
 
 

@@ -5,15 +5,24 @@ Covers reference A16–A19: foreachBatch, Avro/Parquet file sinks, JDBC.
 The reference runs checkpoint-less at-most-once (SURVEY.md §4.3.4); every
 writer here takes a mandatory ``checkpoint`` for exactly-once file-sink
 semantics (Spark's file sink commits via the write-ahead manifest).
+
+:func:`start_foreach_batch` is the one ``foreachBatch`` starter; it hands
+each batch over uncached. Callbacks that run several actions on a batch
+persist it themselves (``router.persisted``).
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from big_data_streaming_spark.streaming.router import (
+    foreach_batch_router,
+    persisted,
+)
 
 
 def start_file_sink(
@@ -31,7 +40,9 @@ def start_file_sink(
     fallback (sources/avro_fallback.py) runs under foreachBatch, writing
     one container-file directory per micro-batch — the reference's A17
     layout (spark/streaming-shorttime.py:73-78) — with overwrite-per-
-    batch-id idempotence on replay.
+    batch-id idempotence on replay. With ``partition_by`` each batch
+    directory holds one ``k=v/`` directory per key tuple, routed by
+    ``router.foreach_batch_router``.
 
     Partitioning by the derived keys (year/month — reference computes them
     at A6 but writes unpartitioned) is what makes the curated layer
@@ -59,43 +70,25 @@ def start_file_sink(
         )
         if fmt != "avro" or not missing_ds:
             raise
-        import os
-
-        from pyspark.sql import functions as F
-
         from big_data_streaming_spark.sources.avro_fallback import write_avro
 
         def write_batch(batch: DataFrame, batch_id: int) -> None:
-            base = os.path.join(out_dir, f"batch_{batch_id}")
-            if not partition_by:
-                write_avro(batch, base, mode="overwrite")
-                return
-            # Preserve the requested hive layout: one container-file dir
-            # per partition-key tuple (keys are low-cardinality derived
-            # columns — year/month — so the distinct scan is bounded; the
-            # batch is persisted to avoid a rescan per key).
-            batch.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                keys = batch.select(*partition_by).distinct().collect()
-                for row in keys:
-                    sub = os.path.join(
-                        base,
-                        *[f"{k}={row[k]}" for k in partition_by],
-                    )
-                    part = batch
-                    for k in partition_by:
-                        part = part.where(F.col(k) == F.lit(row[k]))
-                    write_avro(
-                        part.drop(*partition_by), sub, mode="overwrite"
-                    )
-            finally:
-                batch.unpersist()
+            write_avro(
+                batch, os.path.join(out_dir, f"batch_{batch_id}"), mode="overwrite"
+            )
 
-        fb = df.writeStream.foreachBatch(write_batch).option(
-            "checkpointLocation", checkpoint
-        )
-        fb = _apply_trigger(fb, trigger)
-        return fb.start()
+        def write_part(part: DataFrame, key_tuple: tuple, batch_id: int) -> None:
+            # Spark's hive layout: keys in the path only, NULL as its marker.
+            sub = [
+                f"{k}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
+                for k, v in zip(partition_by, key_tuple)
+            ]
+            base = os.path.join(out_dir, f"batch_{batch_id}", *sub)
+            write_avro(part.drop(*partition_by), base, mode="overwrite")
+
+        if partition_by:
+            write_batch = foreach_batch_router(partition_by, write_part)
+        return start_foreach_batch(df, write_batch, checkpoint, trigger=trigger)
 
 
 def start_foreach_batch(
@@ -104,23 +97,12 @@ def start_foreach_batch(
     checkpoint: str,
     *,
     trigger: dict | None = None,
-    persist_batches: bool = True,
 ) -> StreamingQuery:
-    """A16 with the recompute-per-action fix: the batch DataFrame is
-    persisted before the callback and unpersisted after, so a callback
-    doing count + N writes scans the source once, not N+1 times
-    (the reference rescans up to 21×; SURVEY.md §4.3.1)."""
-
-    def wrapped(batch: DataFrame, batch_id: int) -> None:
-        if persist_batches:
-            batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            fn(batch, batch_id)
-        finally:
-            if persist_batches:
-                batch.unpersist()
-
-    writer = df.writeStream.foreachBatch(wrapped).option(
+    """A16: run ``fn(batch, batch_id)`` on every micro-batch of ``df`` in
+    append mode, checkpointed (exactly-once rests on the offset WAL). The
+    batch reaches ``fn`` uncached: a single-write callback pays no cache
+    job, a multi-action one wraps its actions in ``router.persisted``."""
+    writer = df.writeStream.foreachBatch(fn).option(
         "checkpointLocation", checkpoint
     )
     writer = _apply_trigger(writer, trigger)
@@ -302,19 +284,20 @@ def start_upsert_sink(
     from big_data_streaming_spark.operators.upsert import merge_upsert
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        merge_upsert(
-            batch.sparkSession,
-            target_path,
-            batch,
-            keys=keys,
-            partition_keys=partition_keys,
-            order_col=order_col,
-            fmt=fmt,
-        )
+        # merge_upsert reads the batch more than once: the uniqueness
+        # probe or last-wins window, then the merge's union and anti-join.
+        with persisted(batch):
+            merge_upsert(
+                batch.sparkSession,
+                target_path,
+                batch,
+                keys=keys,
+                partition_keys=partition_keys,
+                order_col=order_col,
+                fmt=fmt,
+            )
 
-    return start_foreach_batch(
-        df, merge_batch, checkpoint, trigger=trigger
-    )
+    return start_foreach_batch(df, merge_batch, checkpoint, trigger=trigger)
 
 
 def start_fanout_sink(
@@ -329,28 +312,31 @@ def start_fanout_sink(
     **jdbc_options: str,
 ) -> StreamingQuery:
     """Multi-sink fan-out: each micro-batch lands in a parquet batch dir
-    AND (optionally) a JDBC table, from ONE evaluation of the batch — it
-    rides :func:`start_foreach_batch`'s persist, so the source is scanned
-    once per batch, not once per sink. Both legs are idempotent under
-    WAL replay: parquet overwrites ``batch_<id>/``, JDBC goes through
-    :func:`write_jdbc_idempotent`'s delete-then-insert keyed on
-    ``_batch_id``. This is the reference's "store to lake AND serve from
-    the DB" pattern (spark/streaming-longtime.py writes the same data to
-    parquet and per-key tables in separate jobs) collapsed into one
+    AND (optionally) a JDBC table, from ONE evaluation of the batch — with
+    the JDBC leg on, the batch is persisted for the two writes, so the
+    source is scanned once per batch, not once per sink. Both legs are
+    idempotent under WAL replay: parquet overwrites ``batch_<id>/``, JDBC
+    goes through :func:`write_jdbc_idempotent`'s delete-then-insert keyed
+    on ``_batch_id``. This is the reference's "store to lake AND serve
+    from the DB" pattern (spark/streaming-longtime.py writes the same data
+    to parquet and per-key tables in separate jobs) collapsed into one
     exactly-once pass.
     """
-    import os
 
-    def fan_out(batch: DataFrame, batch_id: int) -> None:
+    def to_parquet(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("overwrite").parquet(
             os.path.join(parquet_dir, f"batch_{batch_id}")
         )
-        if jdbc_url and jdbc_table:
+
+    if not (jdbc_url and jdbc_table):
+        return start_foreach_batch(df, to_parquet, checkpoint, trigger=trigger)
+
+    def fan_out(batch: DataFrame, batch_id: int) -> None:
+        with persisted(batch):
+            to_parquet(batch, batch_id)
             write_jdbc_idempotent(
                 batch, jdbc_url, jdbc_table, batch_id,
                 driver=jdbc_driver, **jdbc_options,
             )
 
-    return start_foreach_batch(
-        df, fan_out, checkpoint, trigger=trigger, persist_batches=True
-    )
+    return start_foreach_batch(df, fan_out, checkpoint, trigger=trigger)

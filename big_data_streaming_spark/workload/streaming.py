@@ -66,6 +66,7 @@ from big_data_streaming_spark.sources.staging import (
     fingerprint_cached_dir,
     pid_scratch_dirs,
 )
+from big_data_streaming_spark.streaming.sinks import start_foreach_batch
 from big_data_streaming_spark.workload.common import (
     dec_sum,
     ohlc_oracle,
@@ -123,21 +124,23 @@ def _drain(
     df: DataFrame, *, mode: str = "append", batch=None, checkpoint: str | None = None
 ) -> DataFrame | None:
     """Drain ``df`` with AvailableNow under the stream-side shuffle pin:
-    into a memory sink whose table is returned, or through
-    ``foreachBatch(batch)`` checkpointed at ``checkpoint`` (returns None)."""
+    into a memory sink in output ``mode`` whose table is returned, or
+    through ``start_foreach_batch(df, batch, checkpoint)`` in append mode
+    (returns None)."""
     spark = df.sparkSession
-    writer = df.writeStream.outputMode(mode)
     name = None
-    if batch is None:
-        name = f"drain_{uuid.uuid4().hex[:8]}"
-        writer = writer.format("memory").queryName(name)
-    else:
-        writer = writer.foreachBatch(batch).option("checkpointLocation", checkpoint)
     pin = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(pin)
     spark.conf.set(pin, "8")
     try:
-        q = writer.trigger(availableNow=True).start()
+        if batch is None:
+            name = f"drain_{uuid.uuid4().hex[:8]}"
+            writer = df.writeStream.outputMode(mode).format("memory")
+            q = writer.queryName(name).trigger(availableNow=True).start()
+        else:
+            q = start_foreach_batch(
+                df, batch, checkpoint, trigger={"availableNow": True}
+            )
     finally:
         spark.conf.set(pin, prev)
     q.awaitTermination()

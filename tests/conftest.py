@@ -22,8 +22,6 @@ SF_MED = "/root/testdata/sf0.01"
 # convergence tests all stay default).
 _SLOW_GATED = {
     "test_oracle_outputs_are_scalar_only",      # 190 s oracle lint; preflights run every oracle
-    "test_live_topk_demo",                      # 49 s e2e demo
-    "test_live_topk_demo_resumes_from_checkpoint",  # 44 s e2e demo
     "test_oracle_results_non_empty",            # 22 s fixture vacuity sweep
     "test_nearest_matches_pandas_merge_asof_property",  # 11 s
     "test_bellman_ford_matches_python_minplus_property",  # 10 s

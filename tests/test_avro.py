@@ -195,6 +195,48 @@ def test_streaming_avro_sink_writes_per_batch_dirs(spark, tmp_path):
     assert total == len(COINS) * 10
 
 
+def test_streaming_avro_sink_partitioned_fallback(spark, tmp_path):
+    """A17 with ``partition_by``: the fallback writes one
+    ``batch_<id>/coin=<c>/`` container-file dir per coin, the coin only in
+    the path, and every input row lands under its coin — a NULL coin
+    under Spark's ``__HIVE_DEFAULT_PARTITION__``."""
+    from big_data_streaming_spark.streaming.sinks import start_file_sink
+    from tests.test_streaming import COINS, make_kline, write_jsonl
+
+    src = str(tmp_path / "src")
+    rows = [make_kline(c, m) for i, c in enumerate(COINS) for m in range(3 + i)]
+    rows.append({**make_kline(COINS[0], 50), "coin": None})
+    write_jsonl(src, "a.jsonl", rows)
+    sdf = (
+        spark.readStream.schema("coin string, timestamp long, volume double")
+        .json(src)
+    )
+    out = str(tmp_path / "avro_out")
+    q = start_file_sink(
+        sdf,
+        out,
+        checkpoint=str(tmp_path / "ckpt"),
+        fmt="avro",
+        partition_by=("coin",),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination()
+    coin_dirs = sorted(glob.glob(os.path.join(out, "batch_*", "coin=*")))
+    assert coin_dirs, "no per-coin avro directories written"
+    counts: dict[str, int] = {}
+    for d in coin_dirs:
+        back = read_avro(spark, d)
+        assert "coin" not in back.columns
+        assert set(back.columns) == {"timestamp", "volume"}
+        coin = os.path.basename(d).split("=", 1)[1]
+        counts[coin] = counts.get(coin, 0) + back.count()
+    want: dict[str, int] = {}
+    for r in rows:
+        coin = r["coin"] or "__HIVE_DEFAULT_PARTITION__"
+        want[coin] = want.get(coin, 0) + 1
+    assert counts == want
+
+
 @pytest.mark.parametrize("bad", [T.MapType(T.StringType(), T.LongType())])
 def test_avro_unsupported_type_raises(spark, bad):
     with pytest.raises(TypeError, match="unsupported Spark type"):

@@ -254,6 +254,70 @@ def test_foreach_batch_router_single_scan(spark, tmp_path, kline_batch):
     assert one.select("coin").distinct().collect()[0]["coin"] == "BTCUSDC"
 
 
+def test_foreach_batch_router_routes_null_key(spark):
+    """A NULL routing key is a key like any other: its rows come back as
+    their own slice, after the non-NULL keys (the sort and the equality
+    filter are both NULL-safe)."""
+    df = spark.createDataFrame(
+        [("a", 1), (None, 2), ("a", 3)], "coin string, n int"
+    )
+    got: dict[tuple, list[int]] = {}
+
+    def write_partition(slice_df, key_tuple, batch_id):
+        got[key_tuple] = sorted(r["n"] for r in slice_df.collect())
+
+    foreach_batch_router(["coin"], write_partition)(df, 0)
+
+    assert list(got) == [("a",), (None,)]
+    assert got == {("a",): [1, 3], (None,): [2]}
+
+
+def test_single_action_callback_sees_uncached_batch(spark, tmp_path):
+    """start_foreach_batch hands the batch over as is: a callback that
+    reads it once pays no cache job."""
+    from pyspark.storagelevel import StorageLevel
+
+    src = str(tmp_path / "src")
+    write_jsonl(src, "a.jsonl", [make_kline(c, 0) for c in COINS])
+    seen: list[tuple] = []
+
+    def sink(batch, batch_id):
+        seen.append((batch.is_cached, batch.storageLevel == StorageLevel.NONE))
+        batch.write.mode("overwrite").parquet(str(tmp_path / f"b{batch_id}"))
+
+    q = start_foreach_batch(
+        parse_klines(raw_text_file_stream(spark, src)),
+        sink,
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination()
+    assert seen == [(False, True)]
+
+
+def test_foreach_batch_has_one_starter():
+    """``.foreachBatch(`` is called in exactly one place in the package:
+    ``sinks.start_foreach_batch``."""
+    import ast
+    import pathlib
+
+    import big_data_streaming_spark
+
+    root = pathlib.Path(big_data_streaming_spark.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+                    sites.append((path.name, fn.name))
+    assert sites == [("sinks.py", "start_foreach_batch")]
+    text = "".join(p.read_text() for p in root.rglob("*.py"))
+    assert text.count(".foreachBatch(") == 1
+
+
 def test_route_partitioned_layout_prunes(spark, tmp_path, kline_batch):
     """File-sink routing via partitionBy: layout carries the keys; a keyed
     read prunes to one directory (partition filters, zero data filter)."""
