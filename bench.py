@@ -50,7 +50,7 @@ HEADLINE = (
     "q_tpch_q5",
     "q_dedup_semantic",
     "q_stream_dedup",
-    # Python-boundary queries (Arrow UDTF / mapInPandas kernel / regex
+    # Python-boundary queries (mapInArrow / mapInPandas kernel / regex
     # feature extraction) — the paths where per-row cost matters most
     "q_quality_classifier",
     "q_token_runs",

@@ -19,6 +19,11 @@ session is built once with the settings that matter at 100 TB:
   "≈ 2-3× total cores, let AQE coalesce down" — derived from the core
   count with no separate override, so the same derivation is right on a
   laptop, the driver's low-core scaling run, and a 1000-executor cluster.
+* **Python worker daemon** — ``worker_daemon.py`` (lazy zip-directory
+  re-reads per Python task on CPython < 3.12), with the package's parent
+  directory on the workers' ``PYTHONPATH`` so the daemon and any worker
+  that unpickles a package object (the ``kline_feed`` data source)
+  import it from any working directory.
 * **Streaming correctness check on** — Spark's default
   ``statefulOperator.checkCorrectness`` is left enabled; every stateful
   drain passes with it.
@@ -29,6 +34,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _core_count() -> int:
@@ -71,6 +78,8 @@ _DEFAULT_CONFS: dict[str, str] = {
     # proportionally sized shuffle layout.
     "spark.sql.shuffle.partitions": str(2 * _core_count()),
     "spark.ui.enabled": "false",
+    "spark.python.daemon.module": "big_data_streaming_spark.worker_daemon",
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

@@ -76,8 +76,6 @@ def run_live_topk(
     )
 
     def rank_and_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         rw = Window.partitionBy("w").orderBy(F.desc("total_volume"), "coin")
         (
             batch_df.withColumn("rk", F.row_number().over(rw).cast("bigint"))

@@ -42,7 +42,8 @@ def start_file_sink(
     layout (spark/streaming-shorttime.py:73-78) — with overwrite-per-
     batch-id idempotence on replay. With ``partition_by`` each batch
     directory holds one ``k=v/`` directory per key tuple, routed by
-    ``router.foreach_batch_router``.
+    ``router.foreach_batch_router``. Like Spark's file sinks, the fallback
+    accepts only ``output_mode='append'`` and fails at start otherwise.
 
     Partitioning by the derived keys (year/month — reference computes them
     at A6 but writes unpartitioned) is what makes the curated layer
@@ -70,6 +71,13 @@ def start_file_sink(
         )
         if fmt != "avro" or not missing_ds:
             raise
+        if output_mode != "append":
+            # Spark's file sinks, spark-avro's included, refuse the other
+            # modes at start; the fallback writes files too.
+            raise ValueError(
+                f"Invalid streaming output mode: {output_mode}. This output "
+                "mode is not supported in Data Source avro."
+            ) from None
         from big_data_streaming_spark.sources.avro_fallback import write_avro
 
         def write_batch(batch: DataFrame, batch_id: int) -> None:

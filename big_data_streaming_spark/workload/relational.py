@@ -1854,7 +1854,7 @@ def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- B16 completion: SQL-declared scalar UDF (Spark 4) ---------------------
 # The third UDF tier after Arrow pandas_udf (q_udf_roundtrip) and the
-# Python UDTF (q_token_runs): a function DECLARED IN SQL (CREATE
+# Arrow batch map (q_token_runs): a function DECLARED IN SQL (CREATE
 # TEMPORARY FUNCTION ... RETURN <expr>). Catalyst inlines the body into
 # the plan — unlike Python UDFs there is no serialization boundary, no
 # Arrow batch, and whole-stage codegen survives, which is why this is

@@ -792,13 +792,15 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- B16 extension: Python UDTF (table function) ---------------------------
+# --- Token runs: one Arrow-batched Python pass -----------------------------
 # Run-length encoding of consecutive repeated tokens — per-row sequential
-# expansion with carried state, the shape a UDTF (one input row → N output
-# rows) exists for. Spark 4's Python UDTF runs Arrow-batched; the lateral
-# join keeps doc_id from the outer row. The oracle replays the runs as a
-# gaps-and-islands window query. Complements q_repetition_signals: this
-# pinpoints WHERE the repetition is, not just that it exists.
+# expansion with carried state (one input row → N output rows). A single
+# mapInArrow over (doc_id, text) carries doc_id through; a LATERAL Python
+# UDTF would do the same but holds a spark.buffer.pageSize (64 MB) row
+# queue per task (BENCH_NOTES.md, "The ~133 MB live_heap_mb mode"). The
+# oracle replays the runs as a gaps-and-islands window query. Complements
+# q_repetition_signals: this pinpoints WHERE the repetition is, not just
+# that it exists.
 @_q(
     "q_token_runs",
     """
@@ -826,37 +828,50 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.functions import udtf
+    import pyarrow as pa
 
-    @udtf(returnType="token: string, run_start: int, run_len: int")
-    class TokenRuns:
-        def eval(self, text: str):
-            if text is None:
-                return
-            run_tok, run_start, run_len = None, 0, 0
-            for i, tok in enumerate(text.split(" ")):
-                if tok == run_tok:
-                    run_len += 1
-                else:
-                    if run_tok is not None:
-                        yield run_tok, run_start, run_len
-                    run_tok, run_start, run_len = tok, i, 1
-            if run_tok is not None:
-                yield run_tok, run_start, run_len
+    schema = pa.schema(
+        [
+            ("doc_id", pa.int64()),
+            ("token", pa.string()),
+            ("run_start", pa.int32()),
+            ("run_len", pa.int32()),
+        ]
+    )
 
-    # Arrow-batch the UDTF exchange (ArrowEvalPythonUDTF vs row-pickled
-    # BatchEvalPythonUDTF) — same results, vectorized transfer; safe to
-    # set unconditionally, and the driver's plain session lacks it.
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-    name = "token_runs_udtf"
-    spark.udtf.register(name, TokenRuns)
-    # tr: the row-at-a-time UDTF otherwise evaluates inside the single
-    # scan task (round-11 A/B: 1.96 -> 0.97 s; no-op at production
-    # row-group counts).
-    tr(spark, sf_dir, "documents").createOrReplaceTempView("_docs_for_runs")
-    return spark.sql(
-        f"SELECT d.doc_id, r.token, r.run_start, r.run_len "
-        f"FROM _docs_for_runs d, LATERAL {name}(d.text) r"
+    def token_runs(text: str):
+        run_tok, run_start, run_len = None, 0, 0
+        for i, tok in enumerate(text.split(" ")):
+            if tok == run_tok:
+                run_len += 1
+            else:
+                if run_tok is not None:
+                    yield run_tok, run_start, run_len
+                run_tok, run_start, run_len = tok, i, 1
+        if run_tok is not None:
+            yield run_tok, run_start, run_len
+
+    def runs(batches):
+        for batch in batches:
+            cols = batch.to_pydict()
+            rows = [
+                (doc_id, *run)
+                for doc_id, text in zip(cols["doc_id"], cols["text"])
+                if text is not None
+                for run in token_runs(text)
+            ]
+            columns = list(zip(*rows)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(columns, schema)],
+                schema=schema,
+            )
+
+    # tr: the Python pass otherwise runs inside the single scan task
+    # (round-11 A/B: 1.96 -> 0.97 s; no-op at production row-group counts).
+    return (
+        tr(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .mapInArrow(runs, "doc_id bigint, token string, run_start int, run_len int")
     )
 
 

@@ -237,6 +237,34 @@ def test_streaming_avro_sink_partitioned_fallback(spark, tmp_path):
     assert counts == want
 
 
+def test_streaming_avro_sink_refuses_complete_mode(spark, tmp_path):
+    """Spark's file sinks accept append mode only and fail at start; the
+    Avro fallback does the same instead of running in append mode."""
+    from big_data_streaming_spark.streaming.sinks import start_file_sink
+    from tests.test_streaming import COINS, make_kline, write_jsonl
+
+    src = str(tmp_path / "src")
+    write_jsonl(src, "a.jsonl", [make_kline(c, 0) for c in COINS])
+    counts = (
+        spark.readStream.schema("coin string, timestamp long, volume double")
+        .json(src)
+        .groupBy("coin")
+        .count()
+    )
+    active = len(spark.streams.active)
+    with pytest.raises(Exception, match="output mode: complete"):
+        start_file_sink(
+            counts,
+            str(tmp_path / "avro_out"),
+            checkpoint=str(tmp_path / "ckpt"),
+            fmt="avro",
+            output_mode="complete",
+            trigger={"availableNow": True},
+        )
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(tmp_path / "avro_out")
+
+
 @pytest.mark.parametrize("bad", [T.MapType(T.StringType(), T.LongType())])
 def test_avro_unsupported_type_raises(spark, bad):
     with pytest.raises(TypeError, match="unsupported Spark type"):
