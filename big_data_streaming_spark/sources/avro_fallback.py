@@ -14,6 +14,9 @@ the sink as a remedy-raising stub, this module implements the Avro 1.x
 * ``read_avro(spark, path)`` — distributed: file list is parallelized,
   each task decodes its file; returns a DataFrame with the original
   Spark schema (round-trips the type mapping below).
+* ``spark_avro_missing(exc)`` — whether a ``format("avro")`` call failed
+  because the jar is absent; ``files.read_avro``, ``files.write`` and
+  ``streaming.sinks.start_file_sink`` fall back to this module on it.
 * Interop is proven in tests by re-reading our files through the JVM's
   bundled ``org.apache.avro`` DataFileReader via py4j (driver-side) —
   if the Java reference implementation accepts the bytes, a real
@@ -40,9 +43,11 @@ import io
 import json
 import os
 import struct
+import uuid
 import zlib
 from datetime import date, datetime, timezone
 from decimal import Decimal, localcontext
+from typing import BinaryIO
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -311,11 +316,9 @@ def _write_container(
     return n
 
 
-def _read_container(fpath: str):
-    """Yield tuples from one Avro container file (null/deflate codecs)."""
-    with open(fpath, "rb") as f:
-        data = f.read()
-    buf = io.BytesIO(data)
+def _read_header(buf: BinaryIO, fpath: str) -> tuple[T.StructType, str, bytes]:
+    """Parse the container header at the start of ``buf`` (any binary
+    stream): the Spark schema, the codec name and the 16-byte sync marker."""
     if buf.read(4) != _MAGIC:
         raise ValueError(f"{fpath}: not an Avro container file")
     meta: dict[str, bytes] = {}
@@ -329,10 +332,17 @@ def _read_container(fpath: str):
         for _ in range(count):
             k = _read_bytes(buf).decode()
             meta[k] = _read_bytes(buf)
-    schema_json = meta["avro.schema"].decode()
+    schema = spark_schema_from_avro(meta["avro.schema"].decode())
     codec = meta.get("avro.codec", b"null").decode()
-    schema = spark_schema_from_avro(schema_json)
-    sync = buf.read(16)
+    return schema, codec, buf.read(16)
+
+
+def _read_container(fpath: str):
+    """Yield tuples from one Avro container file (null/deflate codecs)."""
+    with open(fpath, "rb") as f:
+        data = f.read()
+    buf = io.BytesIO(data)
+    schema, codec, sync = _read_header(buf, fpath)
     while buf.tell() < len(data):
         n = _read_long(buf)
         size = _read_long(buf)
@@ -353,6 +363,20 @@ def _read_container(fpath: str):
 # ------------------------------------------------------------------ public
 
 
+def spark_avro_missing(exc: BaseException) -> bool:
+    """Whether ``exc`` is Spark failing to load the spark-avro datasource,
+    the one failure every ``format("avro")`` call site answers with this
+    module. Substring-matching 'avro' anywhere in the message would also
+    reroute unrelated errors whose text merely mentions an avro-named
+    path."""
+    msg = str(exc)
+    return (
+        "FAILED_TO_LOAD_DATA_SOURCE" in msg
+        or "Failed to find" in msg
+        or "DATA_SOURCE_NOT_FOUND" in msg
+    )
+
+
 def write_avro(
     df: DataFrame, path: str, *, codec: str = "null", mode: str = "overwrite"
 ) -> None:
@@ -367,6 +391,9 @@ def write_avro(
 
     schema = df.schema
     schema_json = avro_schema_json(schema)
+    # One token per write in every file name: an append to a directory
+    # that already holds part files must not overwrite the earlier ones.
+    token = uuid.uuid4().hex[:12]
 
     def write_partition(index: int, rows):
         it = iter(rows)
@@ -376,7 +403,7 @@ def write_avro(
             return iter(())
         import itertools
 
-        fpath = os.path.join(path, f"part-{index:05d}.avro")
+        fpath = os.path.join(path, f"part-{index:05d}-{token}.avro")
         n = _write_container(
             fpath, schema_json, schema, itertools.chain([first], it), codec
         )
@@ -385,7 +412,11 @@ def write_avro(
     counts = df.rdd.mapPartitionsWithIndex(write_partition).collect()
     if not counts:  # fully empty input still needs a schema-bearing file
         _write_container(
-            os.path.join(path, "part-00000.avro"), schema_json, schema, [], codec
+            os.path.join(path, f"part-00000-{token}.avro"),
+            schema_json,
+            schema,
+            [],
+            codec,
         )
 
 
@@ -398,20 +429,7 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
         raise FileNotFoundError(f"no .avro files under {path}")
     # schema from the first file's header (driver-side, header only)
     with open(files[0], "rb") as f:
-        buf = io.BytesIO(f.read())
-    buf.read(4)
-    meta = {}
-    while True:
-        c = _read_long(buf)
-        if c == 0:
-            break
-        if c < 0:
-            _read_long(buf)
-            c = -c
-        for _ in range(c):
-            k = _read_bytes(buf).decode()
-            meta[k] = _read_bytes(buf)
-    schema = spark_schema_from_avro(meta["avro.schema"].decode())
+        schema, _, _ = _read_header(f, files[0])
 
     rdd = spark.sparkContext.parallelize(files, len(files)).flatMap(_read_container)
     return spark.createDataFrame(rdd, schema)

@@ -28,8 +28,10 @@ Options:
 from __future__ import annotations
 
 import json
+import sys
 from dataclasses import dataclass
 
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -212,5 +214,10 @@ class KlineFeedDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of the kline_feed streaming source."""
+    """Idempotent registration of the kline_feed streaming source. The
+    module is pickled by value (it imports nothing else from the
+    package), so Python workers that cannot import the package — a plain
+    session started outside the checkout with no PYTHONPATH — still
+    unpickle the source."""
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(KlineFeedDataSource)

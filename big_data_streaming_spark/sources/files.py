@@ -52,13 +52,11 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     try:
         return spark.read.format("avro").load(path)
     except Exception as e:
-        if "avro" not in str(e).lower():
-            raise
-        from big_data_streaming_spark.sources.avro_fallback import (
-            read_avro as _fallback_read,
-        )
+        from big_data_streaming_spark.sources import avro_fallback
 
-        return _fallback_read(spark, path)
+        if not avro_fallback.spark_avro_missing(e):
+            raise
+        return avro_fallback.read_avro(spark, path)
 
 
 def write(df: DataFrame, path: str, fmt: str, mode: str = "overwrite", **options: str) -> None:
@@ -69,9 +67,8 @@ def write(df: DataFrame, path: str, fmt: str, mode: str = "overwrite", **options
     try:
         df.write.format(fmt).mode(mode).options(**options).save(path)
     except Exception as e:  # depends on classpath
-        if fmt == "avro" and "avro" in str(e).lower():
-            from big_data_streaming_spark.sources.avro_fallback import write_avro
+        from big_data_streaming_spark.sources import avro_fallback
 
-            write_avro(df, path, mode=mode)
-        else:
+        if fmt != "avro" or not avro_fallback.spark_avro_missing(e):
             raise
+        avro_fallback.write_avro(df, path, mode=mode)

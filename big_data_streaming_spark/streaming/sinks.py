@@ -60,16 +60,9 @@ def start_file_sink(
         writer = _apply_trigger(writer, trigger)
         return writer.start()
     except Exception as e:
-        # Only the MISSING-DATASOURCE failure reroutes to the fallback:
-        # substring-matching 'avro' anywhere in the message misclassified
-        # unrelated errors whose text merely mentioned an avro-named path.
-        msg = str(e)
-        missing_ds = (
-            "FAILED_TO_LOAD_DATA_SOURCE" in msg
-            or "Failed to find" in msg
-            or "DATA_SOURCE_NOT_FOUND" in msg
-        )
-        if fmt != "avro" or not missing_ds:
+        from big_data_streaming_spark.sources import avro_fallback
+
+        if fmt != "avro" or not avro_fallback.spark_avro_missing(e):
             raise
         if output_mode != "append":
             # Spark's file sinks, spark-avro's included, refuse the other
@@ -78,10 +71,8 @@ def start_file_sink(
                 f"Invalid streaming output mode: {output_mode}. This output "
                 "mode is not supported in Data Source avro."
             ) from None
-        from big_data_streaming_spark.sources.avro_fallback import write_avro
-
         def write_batch(batch: DataFrame, batch_id: int) -> None:
-            write_avro(
+            avro_fallback.write_avro(
                 batch, os.path.join(out_dir, f"batch_{batch_id}"), mode="overwrite"
             )
 
@@ -92,7 +83,9 @@ def start_file_sink(
                 for k, v in zip(partition_by, key_tuple)
             ]
             base = os.path.join(out_dir, f"batch_{batch_id}", *sub)
-            write_avro(part.drop(*partition_by), base, mode="overwrite")
+            avro_fallback.write_avro(
+                part.drop(*partition_by), base, mode="overwrite"
+            )
 
         if partition_by:
             write_batch = foreach_batch_router(partition_by, write_part)

@@ -806,9 +806,10 @@ def q_graph_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      (same kernel as q_edit_distance; the predicate genuinely filters:
 #      blocks span 100 keys, so in-block distances range 1-2).
 #   3. MERGE — transitive closure over the verified match edges
-#      (functions/graph.py min-label propagation, the same CC used for
-#      LSH dedup): A~B and B~C merge even when lev(A,C) = 2. Cluster id
-#      = min custkey; singletons keep their own key.
+#      (operators/entity_resolution.py: one union-find per block, since
+#      every component lies inside one block): A~B and B~C merge even
+#      when lev(A,C) = 2. Cluster id = min custkey; singletons keep
+#      their own key.
 # Cluster size rides a window over the resolved relation — ONE exchange
 # on cluster_id, no self-join. The oracle replays blocking+verify in SQL
 # and the closure as a recursive reachable-min CTE — independent
@@ -1936,8 +1937,8 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 # formulation of DBSCAN's eps-connectivity (cf. GriDBSCAN/GriT-DBSCAN),
 # which replaces the O(n²) eps-range self-join with an EQUI-join of the
 # bounded cell relation against 8 literal offsets. Components ride
-# functions/graph.py's min-label connected_components (same helper the
-# LSH dedup family value-checks via q_dedup_cc_checked), so labels are
+# functions/graph.py's connected_components_star (same helper the LSH
+# dedup family value-checks via q_dedup_cc_checked), so labels are
 # canonical min cell-ids and the DuckDB recursive CTE reproduces them
 # exactly. Plan: ONE fact-sized aggregate (the cell histogram); the grid
 # is bounded (≤366×~115 cells) so the threshold broadcast, the offset

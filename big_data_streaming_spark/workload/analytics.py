@@ -2871,7 +2871,7 @@ def q_s_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges three times across rounds — without truncation the plan tree
     # re-derives every prior round per consumer (~3^rounds duplication;
     # measured 223 exchanges unchecked vs 8 with the checkpoint). Same
-    # lineage guard as connected_components / bfs_hops.
+    # lineage guard as connected_components_star / bfs_hops.
     strength = edges.groupBy("u").agg(F.sum("w").alias("s")).localCheckpoint()
     for r in range(rounds):
         thr = strength.agg(

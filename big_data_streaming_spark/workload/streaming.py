@@ -690,8 +690,8 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             # One subdir per micro-batch, OVERWRITE mode: a batch replayed
             # from the WAL after a crash rewrites its own dir instead of
             # double-appending — the same idempotence contract as the avro
-            # streaming sink (sources/avro_datasource.py) and the
-            # delete-then-insert JDBC sink (streaming/sinks.py).
+            # fallback sink and the delete-then-insert JDBC sink (both in
+            # streaming/sinks.py).
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, f"batch_{batch_id}"))
         )

@@ -524,25 +524,23 @@ def q_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- C2: transitive-closure near-dup via connected components (rows-only) -
-# Iterative min-label propagation over LSH star edges — the genuinely
+# Iterative large-star/small-star CC over LSH star edges — the genuinely
 # non-SQL-expressible iterative-algorithm class; chains A~B~C merge even
 # when A and C never share a bucket (functions/graph.py).
 @_q("q_dedup_components")
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_streaming_spark.functions.graph import minhash_dedup_components
 
-    # algorithm="star": instrumentation (round 9, BENCH_NOTES.md) showed
-    # the LSH rep graph is NOT shallow — min-label propagation needed 8+
-    # rounds (changed-count decay 4468 -> 3 over 8 probes), while
-    # large-star/small-star converges in O(log n) rounds: 5.1 s vs 7.7 s
-    # warm at sf0.1, identical labels. Also the right 100 TB shape — the
-    # round count stays logarithmic however deep bucket chains get.
+    # Star CC rather than min-label propagation: instrumentation (round 9,
+    # BENCH_NOTES.md) showed the LSH rep graph is NOT shallow — min-label
+    # propagation needed 8+ rounds (changed-count decay 4468 -> 3 over 8
+    # probes), while large-star/small-star converges in O(log n) rounds:
+    # 5.1 s vs 7.7 s warm at sf0.1, identical labels.
     return minhash_dedup_components(
         t(spark, sf_dir, "documents"),
         id_col="doc_id",
         text_col="text",
         bands=4,
-        algorithm="star",
     )
 
 

@@ -2,7 +2,9 @@
 15-query bench headline (VERDICT round 1, next-round #9).
 
 Usage: python scripts/time_queries.py [sf_dir] [n_runs]
-Prints one line per query (best-of-n seconds) and a sorted summary.
+Prints one line per query (best-of-n seconds) and a sorted summary. The
+session is the package's ``get_spark`` one (``SPARK_GRAFT_CPUS`` sets its
+core count and, from that, its shuffle partitions).
 """
 
 from __future__ import annotations
@@ -19,17 +21,10 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from big_data_streaming_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("time-queries")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entry.queries()

@@ -25,7 +25,6 @@ _SLOW_GATED = {
     "test_oracle_results_non_empty",            # 22 s fixture vacuity sweep
     "test_nearest_matches_pandas_merge_asof_property",  # 11 s
     "test_bellman_ford_matches_python_minplus_property",  # 10 s
-    "test_avro_py_datasource_roundtrip",        # 9 s
 }
 
 

@@ -1,4 +1,4 @@
-"""Avro fallback datasource: roundtrip, JVM reference-implementation
+"""Avro fallback: roundtrip, empty write, JVM reference-implementation
 interop, batch write() fallback, streaming A17 sink.
 
 The environment has no spark-avro datasource jar, so these tests exercise
@@ -85,6 +85,26 @@ def test_avro_roundtrip_all_types(spark, tmp_path):
     )
 
 
+def test_avro_empty_write_keeps_schema(spark, tmp_path):
+    """An empty DataFrame still leaves a schema-bearing container file, so
+    the read comes back empty with the written columns."""
+    path = str(tmp_path / "empty")
+    write_avro(spark.range(10).where("id < 0").select("id"), path)
+    back = read_avro(spark, path)
+    assert back.count() == 0
+    assert back.schema.fieldNames() == ["id"]
+
+
+def test_avro_append_keeps_earlier_rows(spark, tmp_path):
+    """An append to a directory that already holds part files adds rows
+    instead of overwriting the earlier write's files."""
+    path = str(tmp_path / "appended")
+    write_avro(spark.range(0, 5, numPartitions=1), path)
+    write_avro(spark.range(100, 103, numPartitions=1), path, mode="append")
+    ids = sorted(r.id for r in read_avro(spark, path).collect())
+    assert ids == [0, 1, 2, 3, 4, 100, 101, 102]
+
+
 def test_avro_roundtrip_deflate(spark, tmp_path):
     df = spark.range(1_000).select(
         F.col("id"), F.concat(F.lit("row-"), F.col("id")).alias("name")
@@ -145,6 +165,17 @@ def test_avro_interop_deflate_jvm(spark, tmp_path):
     finally:
         reader.close()
     assert n == 100
+
+
+def test_spark_avro_missing_matches_only_the_missing_datasource(spark, tmp_path):
+    """The fallback answers Spark's missing-datasource failure only, not
+    any error whose text mentions avro."""
+    from big_data_streaming_spark.sources.avro_fallback import spark_avro_missing
+
+    with pytest.raises(Exception) as missing:
+        spark.read.format("avro").load(str(tmp_path))
+    assert spark_avro_missing(missing.value)
+    assert not spark_avro_missing(ValueError(f"cannot read {tmp_path}/avro_in"))
 
 
 def test_files_write_falls_back_for_avro(spark, sf_small, tmp_path):
@@ -269,91 +300,3 @@ def test_streaming_avro_sink_refuses_complete_mode(spark, tmp_path):
 def test_avro_unsupported_type_raises(spark, bad):
     with pytest.raises(TypeError, match="unsupported Spark type"):
         avro_schema_json(T.StructType([T.StructField("m", bad)]))
-
-
-def test_avro_py_datasource_roundtrip(spark, tmp_path):
-    """The fallback registered as a Spark 4 Python DataSource: write and
-    read through the normal format() API, one file per task, schema
-    inferred from the container header."""
-    from big_data_streaming_spark.sources.avro_datasource import register
-
-    register(spark)
-    path = str(tmp_path / "ds_roundtrip")
-    df = spark.createDataFrame(ROWS, ALL_TYPES_SCHEMA).repartition(2)
-    df.write.format("avro_py").mode("overwrite").save(path)
-    back = spark.read.format("avro_py").load(path)
-    assert back.schema == ALL_TYPES_SCHEMA
-    assert sorted(map(str, back.collect())) == sorted(
-        map(str, spark.createDataFrame(ROWS, ALL_TYPES_SCHEMA).collect())
-    )
-    files = glob.glob(os.path.join(path, "*.avro"))
-    assert len(files) == 2  # one per write task, no driver funnel
-
-
-def test_avro_py_datasource_empty_write_keeps_schema(spark, tmp_path):
-    from big_data_streaming_spark.sources.avro_datasource import register
-
-    register(spark)
-    path = str(tmp_path / "ds_empty")
-    df = spark.range(10).where("id < 0").select("id")
-    df.write.format("avro_py").mode("overwrite").save(path)
-    back = spark.read.format("avro_py").load(path)
-    assert back.count() == 0
-    assert back.schema.fieldNames() == ["id"]
-
-
-def test_avro_py_datasource_jvm_interop(spark, tmp_path):
-    """Files written through the datasource parse with the Java Avro
-    reference implementation, same as the function-level writer."""
-    from big_data_streaming_spark.sources.avro_datasource import register
-
-    register(spark)
-    path = str(tmp_path / "ds_interop")
-    spark.range(50).coalesce(1).write.format("avro_py").mode("overwrite").save(path)
-    fpath = glob.glob(os.path.join(path, "*.avro"))[0]
-    jvm = spark._jvm
-    reader = jvm.org.apache.avro.file.DataFileReader(
-        jvm.java.io.File(fpath), jvm.org.apache.avro.generic.GenericDatumReader()
-    )
-    try:
-        n = 0
-        while reader.hasNext():
-            reader.next()
-            n += 1
-    finally:
-        reader.close()
-    assert n == 50
-
-
-def test_avro_py_streaming_sink_per_batch_dirs(spark, tmp_path):
-    """writeStream.format('avro_py') works natively (Spark 4 Python
-    DataSource stream writer): per-micro-batch directories of container
-    files, staged per task and committed with the batch id."""
-    from big_data_streaming_spark.sources.avro_datasource import register
-    from big_data_streaming_spark.sources.feed_datasource import (
-        register as register_feed,
-    )
-
-    register(spark)
-    register_feed(spark)
-    out = str(tmp_path / "avro_stream")
-    q = (
-        spark.readStream.format("kline_feed")
-        .option("max_rows", "120")
-        .load()
-        .writeStream.format("avro_py")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    bdirs = sorted(glob.glob(os.path.join(out, "batch_*")))
-    assert bdirs, os.listdir(out)
-    back = spark.read.format("avro_py").load(bdirs[0])
-    assert back.count() == 120
-    assert sorted(r.offset for r in back.select("offset").collect()) == list(
-        range(120)
-    )
-    # staging is drained after commit
-    assert glob.glob(os.path.join(out, "_staging", "*")) == []

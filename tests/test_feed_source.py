@@ -206,3 +206,44 @@ def test_feed_without_floor_dir_unchanged(tmp_path):
     parts = r.partitions({"offset": 0}, end)
     assert sum(p.end - p.start for p in parts) == 1200
     r.commit(end)  # no-op, must not raise
+
+
+def test_plain_session_outside_checkout_reads_feed(tmp_path):
+    """A plain ``SparkSession.builder`` session (none of ``get_spark``'s
+    confs) started from a working directory outside the checkout, with
+    no PYTHONPATH, drains ``kline_feed``: its workers cannot import the
+    package, so the source must travel by value."""
+    from tests.test_python_task_cost import REPO, _run
+
+    out = _run(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import SparkSession
+        from big_data_streaming_spark.sources.feed_datasource import register
+
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.shuffle.partitions", "2")
+            .getOrCreate()
+        )
+        register(spark)
+        q = (
+            spark.readStream.format("kline_feed")
+            .option("max_rows", "50")
+            .load()
+            .writeStream.format("memory")
+            .queryName("plain_feed")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        offs = sorted(r.offset for r in spark.table("plain_feed").collect())
+        assert offs == list(range(50)), offs
+        print("green")
+        """,
+        cwd=tmp_path,
+    )
+    assert out.strip().endswith("green"), out
+

@@ -1,32 +1,10 @@
-"""Connected components + transitive-closure dedup."""
+"""Connected components, transitive-closure dedup and hop-bounded paths."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_streaming_spark.functions.graph import (
-    connected_components,
-    minhash_dedup_components,
-)
-
-
-def test_connected_components_chain_and_islands(spark):
-    # chain 1-2-3-4, pair 10-11, singleton edge 20-20 (self loop)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)], ["src", "dst"]
-    )
-    cc = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    assert cc[1] == cc[2] == cc[3] == cc[4] == 1
-    assert cc[10] == cc[11] == 10
-    assert cc[20] == 20
-
-
-def test_connected_components_long_chain_converges(spark):
-    n = 30  # diameter 30 > default-ish round counts — exercises iteration
-    edges = spark.createDataFrame([(i, i + 1) for i in range(n)], ["src", "dst"])
-    cc = connected_components(edges, max_iter=50).collect()
-    assert {r["component"] for r in cc} == {0}
-    assert len(cc) == n + 1
+from big_data_streaming_spark.functions.graph import minhash_dedup_components
 
 
 def test_minhash_dedup_components_merges_chains(spark):
@@ -70,38 +48,6 @@ def test_components_subsume_one_hop_clusters(spark, sf_small):
     )
     # doc and its one-hop representative must be in the same component
     assert joined.filter(F.col("component") != F.col("rep_component")).count() == 0
-
-
-def test_cc_probe_cadence_halves_actions(spark, monkeypatch):
-    """check_every=2 must produce identical components with at most half
-    the convergence-probe actions of per-round checking."""
-    from pyspark.sql import DataFrame
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], ["src", "dst"]
-    )
-
-    probes = {"n": 0}
-    orig_count = DataFrame.count
-
-    def counting(self):
-        probes["n"] += 1
-        return orig_count(self)
-
-    monkeypatch.setattr(DataFrame, "count", counting)
-    # per-round checking baseline
-    res1 = connected_components(edges, check_every=1)
-    rows1 = res1.toPandas()
-    n1 = probes["n"]
-    probes["n"] = 0
-    res2 = connected_components(edges, check_every=2)
-    rows2 = res2.toPandas()
-    n2 = probes["n"]
-    assert n2 <= (n1 + 1) // 2
-    c1 = dict(zip(rows1["node"], rows1["component"]))
-    c2 = dict(zip(rows2["node"], rows2["component"]))
-    assert c1 == c2
-    assert set(c1.values()) == {0}
 
 
 def test_star_cc_matches_propagation(spark):
@@ -151,57 +97,18 @@ def test_star_cc_long_chain_in_log_rounds(spark):
     assert n_rounds <= 10, n_rounds
 
 
-def test_star_cc_agrees_with_propagation_on_random_graph(spark):
+def test_cc_both_algorithms_match_union_find_property(spark):
+    """Property test: large-star/small-star produces the components of a
+    pure-Python union-find (an independent implementation) on randomized
+    graphs — including chains, cycles, self-loops, self-contained cliques
+    and isolated pairs. The explicit examples are a chain beside two
+    islands and a 45-edge random graph over 60 nodes."""
     import random
 
-    from big_data_streaming_spark.functions.graph import connected_components_star
-
-    rng = random.Random(7)
-    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(45)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    a = {
-        r["node"]: r["component"]
-        for r in connected_components(df, max_iter=50).collect()
-    }
-    b = {
-        r["node"]: r["component"]
-        for r in connected_components_star(df).collect()
-    }
-    assert a == b
-
-
-def test_dedup_components_star_algorithm_matches(spark):
-    base = [f"tok{i}" for i in range(40)]
-    a = " ".join(base)
-    b = " ".join(base[:36] + ["x1", "x2", "x3", "x4"])
-    c = " ".join(base[:32] + ["x1", "x2", "x3", "x4", "y1", "y2", "y3", "y4"])
-    other = " ".join(f"zzz{i}" for i in range(40))
-    df = spark.createDataFrame(
-        [(1, a), (2, b), (3, c), (9, other)], ["doc_id", "text"]
-    )
-    prop = {
-        r["doc_id"]: r["component"]
-        for r in minhash_dedup_components(df, "doc_id", "text", bands=8).collect()
-    }
-    star = {
-        r["doc_id"]: r["component"]
-        for r in minhash_dedup_components(
-            df, "doc_id", "text", bands=8, algorithm="star"
-        ).collect()
-    }
-    assert prop == star
-
-
-def test_cc_both_algorithms_match_union_find_property(spark):
-    """Property test: min-label propagation AND large-star/small-star
-    produce identical components to a pure-Python union-find (third
-    independent implementation) on randomized graphs — including chains,
-    cycles, self-contained cliques and isolated pairs."""
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from big_data_streaming_spark.functions.graph import (
-        connected_components,
         connected_components_star,
     )
 
@@ -221,6 +128,9 @@ def test_cc_both_algorithms_match_union_find_property(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         return {n: find(n) for n in parent}
 
+    rng = random.Random(7)
+    seeded = [(rng.randrange(60), rng.randrange(60)) for _ in range(45)]
+
     @settings(max_examples=8, deadline=None)
     @given(
         edges=st.lists(
@@ -229,15 +139,13 @@ def test_cc_both_algorithms_match_union_find_property(spark):
             max_size=20,
         )
     )
+    @example(edges=[(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)])
+    @example(edges=seeded)
     def check(edges):
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            return
         expect = union_find(edges)
         df = spark.createDataFrame(edges, "src long, dst long")
-        for algo in (connected_components, connected_components_star):
-            got = {r.node: r.component for r in algo(df).collect()}
-            assert got == expect, (algo.__name__, edges, got, expect)
+        got = {r.node: r.component for r in connected_components_star(df).collect()}
+        assert got == expect, (edges, got, expect)
 
     check()
 
@@ -398,66 +306,14 @@ def test_resolve_entities_matches_python_pipeline_property(spark):
     check()
 
 
-def test_min_label_cc_raises_on_exhausted_rounds(spark):
-    """A round budget smaller than the graph diameter must FAIL LOUDLY,
-    not return labels that simply stopped where propagation ran out —
-    unconverged labels silently split components (the q_dbscan_grid
-    development find). A 30-node path needs ~30 min-label rounds."""
-    import pytest as _pytest
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "src bigint, dst bigint"
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=5)
-    # and with an adequate budget the same graph converges to min labels
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, max_iter=50).collect()
-    }
-    assert got == {i: 0 for i in range(31)}
-
-
-def test_min_label_cc_rejects_nonpositive_budget(spark):
-    """max_iter=0 used to return all-singleton labels silently — the
-    fabricated-components output the non-convergence guard exists to
-    prevent (ADVICE r7). Must raise instead."""
-    import pytest as _pytest
-
-    edges = spark.createDataFrame([(0, 1)], "src bigint, dst bigint")
-    for bad in (0, -3):
-        with _pytest.raises(ValueError, match="max_iter"):
-            connected_components(edges, max_iter=bad)
-
-
-def test_min_label_cc_converging_on_final_round_returns(spark):
-    """Convergence landing EXACTLY on round max_iter must return correct
-    labels, not raise (ADVICE r7): the in-loop probe compares against a
-    snapshot up to check_every rounds stale, so the guard needs one
-    extra propagation probe to tell 'converged on the last round' from
-    'still moving'. Min-label moves one hop per round along a path, so
-    a length-L path converges in exactly L rounds — pick max_iter == L
-    with a stale probe cadence and assert labels come back."""
-    # path 0-1-2-...-6: min label 0 reaches node 6 after 6 rounds
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], "src bigint, dst bigint"
-    )
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            edges, max_iter=6, check_every=4
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(7)}
-
-
 def test_star_cc_raises_on_exhausted_rounds(spark):
     """connected_components_star must FAIL LOUDLY when the alternating-
     round budget runs out before the edge-multiset fixed point (ADVICE
     r9): unconverged star edges can hold multiple edges per node, so
     minhash_dedup_components' comp join would emit duplicate rows with
     fabricated component labels. Star rounds collapse a path roughly
-    geometrically, so a long path with max_iter=1 cannot converge."""
+    geometrically, so a long path with max_iter=1 cannot converge, and
+    a budget of zero or fewer rounds never converges."""
     import pytest as _pytest
 
     from big_data_streaming_spark.functions.graph import (
@@ -469,6 +325,13 @@ def test_star_cc_raises_on_exhausted_rounds(spark):
     )
     with _pytest.raises(RuntimeError, match="fixed point"):
         connected_components_star(edges, max_iter=1)
+    # a budget of no rounds at all cannot reach the fixed point either,
+    # even on a graph that is already one star
+    one_edge = spark.createDataFrame([(0, 1)], "src bigint, dst bigint")
+    for graph in (edges, one_edge):
+        for bad in (0, -3):
+            with _pytest.raises(RuntimeError, match="fixed point"):
+                connected_components_star(graph, max_iter=bad)
     # adequate budget: same graph converges to the min label everywhere
     got = {
         r["node"]: r["component"]
