@@ -328,10 +328,9 @@ def test_star_cc_raises_on_exhausted_rounds(spark):
     # a budget of no rounds at all cannot reach the fixed point either,
     # even on a graph that is already one star
     one_edge = spark.createDataFrame([(0, 1)], "src bigint, dst bigint")
-    for graph in (edges, one_edge):
-        for bad in (0, -3):
-            with _pytest.raises(RuntimeError, match="fixed point"):
-                connected_components_star(graph, max_iter=bad)
+    for bad in (0, -3):
+        with _pytest.raises(RuntimeError, match="fixed point"):
+            connected_components_star(one_edge, max_iter=bad)
     # adequate budget: same graph converges to the min label everywhere
     got = {
         r["node"]: r["component"]
