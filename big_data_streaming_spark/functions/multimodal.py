@@ -6,14 +6,18 @@ object storage (``payload`` null, ``uri`` set); small assets inline. All
 *engine-side* ops (project, filter on meta, batch shaping for decoders)
 work on either shape.
 
-Decoders (image/audio/video) need codec libraries this container doesn't
-ship, so the decode kernels are STUBBED — ``decode_media`` raises
+Container headers (PNG/GIF dimensions, WAV fmt fields) sit at fixed
+byte offsets, so ``parse_image_headers`` and ``parse_audio_headers`` read
+them with built-in expressions and never leave the JVM. Kernels that loop
+per sample, byte or pixel stay Arrow-batched ``mapInPandas``:
+``audio_clip_stats``, ``byte_histogram``, ``resize_raster``,
+``dhash_raster`` and ``decode_media``. Pixel decode needs codec libraries
+this container doesn't ship, so ``decode_media`` raises
 ``NotImplementedError`` unless given ``fake=True``, in which case it emits
-deterministic pseudo-features. The Spark-side plumbing is real either way:
-Arrow-batched ``mapInPandas`` with an explicit output schema, batch-size
-bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``, and the
-payload column pruned out before the Python boundary when features don't
-need it (only metadata crosses — keep the Arrow transfer narrow).
+deterministic pseudo-features. Each Python kernel takes an explicit
+output schema, batch size is bounded by
+``spark.sql.execution.arrow.maxRecordsPerBatch``, and only the columns
+the kernel reads cross the Arrow boundary.
 """
 
 from __future__ import annotations
@@ -156,27 +160,49 @@ def sample_frames(df: DataFrame, *, every_n: int = 10) -> DataFrame:
     )
 
 
-# --- real decode kernel: container-header parsing --------------------------
+# --- container headers as built-in expressions ----------------------------
 # Full image decode needs codec libraries this container lacks, but the
-# METADATA half of decode — dimensions, format detection — lives in the
-# first bytes of the container and parses with nothing but struct. That
-# is a real production operation (corpus triage filters on dimensions
-# long before pixels are decoded). ``synth_png_payload`` builds a
-# spec-valid PNG signature + IHDR chunk entirely JVM-side (hex/unhex
-# codegen); ``parse_image_headers`` reads it back in an Arrow-batched
-# kernel. Unknown signatures yield NULL dims, not errors.
-
-IMAGE_HEADER_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("mime", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
+# METADATA half of decode — dimensions, sample rate, format detection —
+# sits at fixed byte offsets in the first bytes of the container. That is
+# a real production operation (corpus triage filters on dimensions long
+# before pixels are decoded). The ``synth_*`` builders write those bytes
+# with hex/unhex and the ``parse_*`` readers read them back with
+# substring/hex/conv, so both directions run in one codegen stage and
+# nothing crosses to Python. Unknown signatures yield NULL fields, not
+# errors.
 
 _PNG_SIG = "89504E470D0A1A0A"  # \x89PNG\r\n\x1a\n
+
+
+def _swap_bytes(hex_col, nbytes: int):
+    """Reverse the byte pairs of an ``nbytes``-byte hex string: the
+    big-endian ↔ little-endian turn for both writers and readers."""
+    return F.concat(
+        *(F.substring(hex_col, 2 * i + 1, 2) for i in reversed(range(nbytes)))
+    )
+
+
+def _at(payload, offset: int, raw: bytes):
+    """``raw`` occurs at 0-based byte ``offset`` of ``payload``."""
+    return F.substring(payload, offset + 1, len(raw)) == F.lit(raw)
+
+
+def _uint(payload, offset: int, nbytes: int, little_endian: bool = False):
+    """The unsigned ``nbytes``-byte field at 0-based ``offset`` as bigint."""
+    h = F.hex(F.substring(payload, offset + 1, nbytes))
+    if little_endian:
+        h = _swap_bytes(h, nbytes)
+    return F.conv(h, 16, 10).cast("bigint")
+
+
+def _is_wav(payload):
+    """The canonical 44-byte RIFF/WAVE header is present: the one
+    container check for the header reader and the clip-stats kernel."""
+    return (
+        (F.length(payload) >= 44)
+        & _at(payload, 0, b"RIFF")
+        & _at(payload, 8, b"WAVEfmt ")
+    )
 
 
 def synth_png_payload(width_col, height_col):
@@ -197,61 +223,30 @@ def synth_png_payload(width_col, height_col):
 
 
 def parse_image_headers(df: DataFrame) -> DataFrame:
-    """(doc_id, payload) → (doc_id, mime, width, height, n_bytes): parse
-    PNG headers from raw bytes in an Arrow-batched kernel. Only the first
-    32 payload bytes are needed; callers should slice before the Python
-    boundary when payloads are large (``F.substring(payload, 1, 32)``
-    keeps the Arrow transfer narrow)."""
-    import struct
+    """(doc_id, payload) → (doc_id, mime, width, height, n_bytes): PNG
+    (big-endian u32 IHDR width/height at offsets 16/20) and GIF87a/89a
+    (little-endian u16 at offsets 6/8) dimensions from raw bytes. Other
+    or truncated payloads get NULL mime and dimensions; a NULL payload
+    counts 0 bytes."""
+    p = F.col("payload")
+    n_bytes = F.coalesce(F.length(p), F.lit(0)).cast("bigint")
+    png = (
+        _at(p, 0, bytes.fromhex(_PNG_SIG)) & _at(p, 12, b"IHDR") & (n_bytes >= 24)
+    )
+    gif = (_at(p, 0, b"GIF87a") | _at(p, 0, b"GIF89a")) & (n_bytes >= 10)
 
-    png_sig = bytes.fromhex(_PNG_SIG)
+    def dim(png_offset, gif_offset):
+        return F.when(png, _uint(p, png_offset, 4)).when(
+            gif, _uint(p, gif_offset, 2, little_endian=True)
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mimes, widths, heights, sizes = [], [], [], []
-            for buf in pdf["payload"]:
-                b = bytes(buf) if buf is not None else b""
-                sizes.append(len(b))
-                if b[:8] == png_sig and b[12:16] == b"IHDR" and len(b) >= 24:
-                    w, h = struct.unpack(">II", b[16:24])
-                    mimes.append("image/png")
-                    widths.append(w)
-                    heights.append(h)
-                elif b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
-                    w, h = struct.unpack("<HH", b[6:10])
-                    mimes.append("image/gif")
-                    widths.append(w)
-                    heights.append(h)
-                else:
-                    mimes.append(None)
-                    widths.append(None)
-                    heights.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pd.array(mimes, dtype="object"),
-                    "width": pd.array(widths, dtype="Int64"),
-                    "height": pd.array(heights, dtype="Int64"),
-                    "n_bytes": sizes,
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(run, IMAGE_HEADER_SCHEMA)
-
-
-# --- real decode kernel: WAV (RIFF) audio headers --------------------------
-# Same triage principle for audio: sample rate / channels / duration parse
-# out of the canonical 44-byte RIFF/fmt/data header with struct alone.
-AUDIO_HEADER_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("mime", StringType()),
-        StructField("sample_rate", LongType()),
-        StructField("channels", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("duration_ms", LongType()),
-    ]
-)
+    return df.select(
+        "doc_id",
+        F.when(png, "image/png").when(gif, "image/gif").alias("mime"),
+        dim(16, 6).alias("width"),
+        dim(20, 8).alias("height"),
+        n_bytes.alias("n_bytes"),
+    )
 
 
 def synth_wav_payload(sample_rate_col, n_samples_col):
@@ -260,16 +255,7 @@ def synth_wav_payload(sample_rate_col, n_samples_col):
     codegen. data_size = n_samples * 2 (16-bit mono)."""
 
     def le32(col):
-        # 4-byte little-endian: hex → pad → reverse byte pairs
-        h = F.lpad(F.hex(col.cast("bigint")), 8, "0")
-        return F.unhex(
-            F.concat(
-                F.substring(h, 7, 2),
-                F.substring(h, 5, 2),
-                F.substring(h, 3, 2),
-                F.substring(h, 1, 2),
-            )
-        )
+        return F.unhex(_swap_bytes(F.lpad(F.hex(col.cast("bigint")), 8, "0"), 4))
 
     data_size = n_samples_col.cast("bigint") * 2
     byte_rate = sample_rate_col.cast("bigint") * 2
@@ -288,91 +274,27 @@ def synth_wav_payload(sample_rate_col, n_samples_col):
 
 
 def parse_audio_headers(df: DataFrame) -> DataFrame:
-    """(doc_id, payload) → RIFF/WAV header fields; NULLs for non-WAV."""
-    import struct
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "mime": [], "sample_rate": [], "channels": [],
-                "n_samples": [], "duration_ms": [],
-            }
-            for buf in pdf["payload"]:
-                b = bytes(buf) if buf is not None else b""
-                ok = (
-                    len(b) >= 44
-                    and b[:4] == b"RIFF"
-                    and b[8:16] == b"WAVEfmt "
-                )
-                if ok:
-                    channels, rate = struct.unpack("<HI", b[22:28])
-                    bits = struct.unpack("<H", b[34:36])[0]
-                    data_size = struct.unpack("<I", b[40:44])[0]
-                # A corrupt fmt chunk with zero channels/bits/rate must
-                # yield the same NULL row as any other malformed shape,
-                # not a ZeroDivisionError that kills the batch.
-                if ok and channels > 0 and bits > 0 and rate > 0:
-                    n = data_size * 8 // (bits * channels)
-                    out["mime"].append("audio/wav")
-                    out["sample_rate"].append(rate)
-                    out["channels"].append(channels)
-                    out["n_samples"].append(n)
-                    out["duration_ms"].append(n * 1000 // rate)
-                else:
-                    for k in out:
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pd.array(out["mime"], dtype="object"),
-                    "sample_rate": pd.array(out["sample_rate"], dtype="Int64"),
-                    "channels": pd.array(out["channels"], dtype="Int64"),
-                    "n_samples": pd.array(out["n_samples"], dtype="Int64"),
-                    "duration_ms": pd.array(out["duration_ms"], dtype="Int64"),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(run, AUDIO_HEADER_SCHEMA)
-
-
-def payload_stats_arrow(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Arrow-native batch kernel (``mapInArrow``): per-row payload byte
-    statistics computed directly on ``pyarrow.RecordBatch`` — no
-    pandas materialization at all, the zero-copy tier below
-    ``mapInPandas`` for binary-heavy columns. At 100 TB this is the
-    shape for byte-level featurizers (magic sniffing, entropy, chunk
-    hashing): Arrow buffers stream through the Python worker without
-    per-row object churn.
-
-    Output: (doc_id, nbytes, first_byte, checksum32) — checksum32 is a
-    simple additive mod-2^32 checksum, deterministic and cheap to
-    verify engine-side.
-    """
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            doc_ids = tbl.column("doc_id").to_pylist()
-            payloads = tbl.column(payload_col).to_pylist()
-            nbytes, first, csum = [], [], []
-            for p in payloads:
-                b = p or b""
-                nbytes.append(len(b))
-                first.append(b[0] if b else None)
-                csum.append(sum(b) % 4294967296)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "doc_id": pa.array(doc_ids, pa.int64()),
-                    "nbytes": pa.array(nbytes, pa.int64()),
-                    "first_byte": pa.array(first, pa.int32()),
-                    "checksum32": pa.array(csum, pa.int64()),
-                }
-            )
-
-    narrow = df.select("doc_id", payload_col)
-    return narrow.mapInArrow(
-        run, "doc_id bigint, nbytes bigint, first_byte int, checksum32 bigint"
+    """(doc_id, payload) → (doc_id, mime, sample_rate, channels,
+    n_samples, duration_ms) from the 44-byte RIFF/WAVE header; all NULL
+    for non-WAV payloads. n_samples and duration_ms are integer
+    divisions, exact for every u32 field."""
+    p = F.col("payload")
+    channels = _uint(p, 22, 2, little_endian=True)
+    rate = _uint(p, 24, 4, little_endian=True)
+    bits = _uint(p, 34, 2, little_endian=True)
+    # A corrupt fmt chunk with zero channels/bits/rate yields the same
+    # NULL row as any other malformed shape, never a division by zero.
+    ok = _is_wav(p) & (channels > 0) & (bits > 0) & (rate > 0)
+    n = F.call_function(
+        "div", _uint(p, 40, 4, little_endian=True) * 8, bits * channels
+    )
+    return df.select(
+        "doc_id",
+        F.when(ok, "audio/wav").alias("mime"),
+        F.when(ok, rate).alias("sample_rate"),
+        F.when(ok, channels).alias("channels"),
+        F.when(ok, n).alias("n_samples"),
+        F.when(ok, F.call_function("div", n * 1000, rate)).alias("duration_ms"),
     )
 
 
@@ -558,15 +480,16 @@ def synth_wav_tone_payload(seed_col, n_samples_col):
     m_k - 65536 — built entirely in codegen (hex per sample,
     byte-swapped to little-endian, array_join, unhex). The recurrence
     is restatable arithmetically in SQL, so byte-level kernels over the
-    data section are value-checkable the same way the header kernels
+    data section are value-checkable the same way the header readers
     are. Keep ``n`` small (hundreds): the payload is a per-row string
     expression, not a media store."""
     seed = seed_col.cast("bigint")
     n = n_samples_col.cast("bigint")
 
     def le_sample(k):
-        h = F.lpad(F.hex((seed + k * F.lit(2654435761)) % 65536), 4, "0")
-        return F.concat(F.substring(h, 3, 2), F.substring(h, 1, 2))
+        return _swap_bytes(
+            F.lpad(F.hex((seed + k * F.lit(2654435761)) % 65536), 4, "0"), 2
+        )
 
     data_hex = F.array_join(
         F.transform(F.sequence(F.lit(0), n - 1), le_sample), ""
@@ -580,36 +503,29 @@ def audio_clip_stats(df: DataFrame, threshold: int = 32000) -> DataFrame:
     """(doc_id, payload) → 16-bit PCM clipping statistics: sample count
     (from the data section, not the header), samples at or beyond
     ``threshold`` magnitude, the peak magnitude, and the clipped share.
-    The audio-QA triage that runs BEFORE any resample/transcode —
-    vectorized ``np.frombuffer`` over the Arrow batch, no per-sample
-    Python. Non-WAV payloads yield NULL stats (same policy as
-    parse_audio_headers)."""
+    The audio-QA triage that runs BEFORE any resample/transcode. The
+    container check is the header reader's ``_is_wav``; only the data
+    section crosses the Arrow boundary, NULL (so NULL stats) for non-WAV
+    payloads and odd-length data, and the kernel is one vectorized
+    ``np.frombuffer`` per row, no per-sample Python."""
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"n_samples": [], "clip_count": [], "max_abs": [],
                    "clip_share": []}
-            for buf in pdf["payload"]:
-                b = bytes(buf) if buf is not None else b""
-                ok = (
-                    len(b) >= 44
-                    and b[:4] == b"RIFF"
-                    and b[8:16] == b"WAVEfmt "
-                    and (len(b) - 44) % 2 == 0
-                )
-                if ok:
-                    s = np.frombuffer(b, dtype="<i2", offset=44)
-                    n = int(s.size)
-                    a = np.abs(s.astype(np.int32))
-                    clip = int((a >= threshold).sum())
-                    out["n_samples"].append(n)
-                    out["clip_count"].append(clip)
-                    out["max_abs"].append(int(a.max()) if n else 0)
-                    out["clip_share"].append(clip / n if n else 0.0)
-                else:
+            for buf in pdf["data"]:
+                if buf is None:
                     for k in out:
                         out[k].append(None)
+                    continue
+                a = np.abs(np.frombuffer(buf, dtype="<i2").astype(np.int32))
+                n = int(a.size)
+                clip = int((a >= threshold).sum())
+                out["n_samples"].append(n)
+                out["clip_count"].append(clip)
+                out["max_abs"].append(int(a.max()) if n else 0)
+                out["clip_share"].append(clip / n if n else 0.0)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -620,4 +536,6 @@ def audio_clip_stats(df: DataFrame, threshold: int = 32000) -> DataFrame:
                 }
             )
 
-    return df.select("doc_id", "payload").mapInPandas(run, CLIP_STATS_SCHEMA)
+    p = F.col("payload")
+    data = F.when(_is_wav(p) & (F.length(p) % 2 == 0), F.substr(p, F.lit(45)))
+    return df.select("doc_id", data.alias("data")).mapInPandas(run, CLIP_STATS_SCHEMA)

@@ -873,12 +873,13 @@ def q_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- north star: multimodal header decode (REAL kernel, no codec libs) -----
-# Dimensions parse out of the container header with nothing but struct —
-# the triage half of image decode (filter a corpus by resolution before
-# any pixel work). Payloads are spec-valid PNG signature+IHDR bytes built
-# JVM-side with dims derived from doc_id, so the kernel's output is fully
-# value-checkable: the oracle states the same dims arithmetically.
+# --- north star: multimodal header decode (REAL, no codec libs) ----------
+# Dimensions read out of the container header with built-in expressions
+# (substring/hex/conv) — the triage half of image decode (filter a corpus
+# by resolution before any pixel work), with no Python node in the plan.
+# Payloads are spec-valid PNG signature+IHDR bytes built JVM-side with
+# dims derived from doc_id, so the output is fully value-checkable: the
+# oracle states the same dims arithmetically.
 @_q(
     "q_multimodal_decode",
     """
@@ -906,11 +907,12 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parse_image_headers(d)
 
 
-# --- north star: audio header decode (REAL kernel) -------------------------
+# --- north star: audio header decode (REAL, no codec libs) ----------------
 # WAV/RIFF triage: sample rate, channels, duration from the 44-byte
-# header — struct only, no codecs. Same oracle pattern as
-# q_multimodal_decode: payloads synthesized JVM-side from doc_id, header
-# fields re-derived arithmetically in SQL.
+# header, read with the same built-in byte-field expressions as
+# q_multimodal_decode — no Python node. Same oracle pattern: payloads
+# synthesized JVM-side from doc_id, header fields re-derived
+# arithmetically in SQL.
 @_q(
     "q_multimodal_audio",
     """
@@ -6299,12 +6301,12 @@ def q_lead_bigram_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- C5: audio clipping triage over synthesized PCM (round 7) -----------------
-# The first REAL data-section audio kernel (the header kernels stop at
+# The first REAL data-section audio kernel (the header readers stop at
 # byte 44): per document, synthesize a complete 16-bit PCM WAV JVM-side
 # (header + n deterministic samples, functions/multimodal.py:
 # synth_wav_tone_payload), then count samples at or beyond the 32000
 # clip threshold with a vectorized np.frombuffer Arrow kernel
-# (audio_clip_stats). The oracle restates the sample recurrence
+# (audio_clip_stats; only the data section crosses to Python). The oracle restates the sample recurrence
 # arithmetically: stored uint16 m_k = (seed + k*2654435761) % 65536,
 # signed s_k = m_k - 65536 when m_k >= 32768, else m_k. Clip bounds:
 # s_k >= 32000 iff m_k in [32000, 32767]; s_k <= -32000 iff m_k in

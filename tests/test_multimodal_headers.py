@@ -1,4 +1,4 @@
-"""Container-header decode kernels (functions/multimodal.py): PNG, GIF,
+"""Container-header readers (functions/multimodal.py): PNG, GIF,
 WAV parsing from raw bytes — the codec-free half of multimodal decode."""
 
 from __future__ import annotations
@@ -26,8 +26,21 @@ def _png(w: int, h: int) -> bytes:
     )
 
 
-def _gif(w: int, h: int) -> bytes:
-    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00"
+def _gif(w: int, h: int, version: bytes = b"89a") -> bytes:
+    return b"GIF" + version + struct.pack("<HH", w, h) + b"\x00\x00\x00"
+
+
+def _wav(rate: int, channels: int, bits: int, data_size: int) -> bytes:
+    """A 44-byte RIFF/WAVE header with the given fmt fields."""
+    block = channels * bits // 8
+    return (
+        b"RIFF"
+        + struct.pack("<I", (36 + data_size) % 2**32)
+        + b"WAVEfmt "
+        + struct.pack("<IHHIIHH", 16, 1, channels, rate, rate * block, block, bits)
+        + b"data"
+        + struct.pack("<I", data_size)
+    )
 
 
 def test_parse_mixed_image_formats_and_garbage(spark):
@@ -36,13 +49,34 @@ def test_parse_mixed_image_formats_and_garbage(spark):
         Row(doc_id=2, payload=_gif(320, 200)),
         Row(doc_id=3, payload=b"not an image at all"),
         Row(doc_id=4, payload=None),
+        Row(doc_id=5, payload=_gif(12, 34, b"87a")),
+        Row(doc_id=6, payload=_png(640, 480)[:20]),  # IHDR cut inside width
+        Row(doc_id=7, payload=_png(0xFFFFFFFF, 1)),  # u32 max: no sign wrap
+        Row(doc_id=8, payload=_gif(65535, 65535)),
+        Row(doc_id=9, payload=b""),
+        Row(doc_id=10, payload=_png(3, 4)[:24]),  # IHDR dims end the payload
+        Row(doc_id=11, payload=_gif(5, 6)[:10]),  # GIF dims end the payload
+        Row(doc_id=12, payload=_gif(5, 6)[:9]),  # GIF height cut short
+        Row(doc_id=13, payload=b"GIF90a" + bytes(7)),  # unknown GIF version
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {r.doc_id: r for r in parse_image_headers(df).collect()}
-    assert (got[1].mime, got[1].width, got[1].height) == ("image/png", 640, 480)
-    assert (got[2].mime, got[2].width, got[2].height) == ("image/gif", 320, 200)
-    assert got[3].mime is None and got[3].width is None
-    assert got[4].mime is None and got[4].n_bytes == 0
+    dims = {k: (r.mime, r.width, r.height, r.n_bytes) for k, r in got.items()}
+    assert dims == {
+        1: ("image/png", 640, 480, 29),
+        2: ("image/gif", 320, 200, 13),
+        3: (None, None, None, 19),
+        4: (None, None, None, 0),
+        5: ("image/gif", 12, 34, 13),
+        6: (None, None, None, 20),
+        7: ("image/png", 0xFFFFFFFF, 1, 29),
+        8: ("image/gif", 65535, 65535, 13),
+        9: (None, None, None, 0),
+        10: ("image/png", 3, 4, 24),
+        11: ("image/gif", 5, 6, 10),
+        12: (None, None, None, 9),
+        13: (None, None, None, 13),
+    }
 
 
 def test_synth_png_is_spec_valid_and_roundtrips(spark):
@@ -77,45 +111,36 @@ def test_synth_wav_roundtrips_and_rejects_garbage(spark):
     )
     assert parse_audio_headers(bad).first().mime is None
 
-
-def test_payload_stats_arrow_matches_builtin(spark):
-    """mapInArrow kernel vs JVM built-ins on the same synthetic payloads:
-    byte length, first byte, and additive checksum must agree exactly
-    (aggregate(transform(...)) is the codegen-side mirror)."""
-    from pyspark.sql import functions as F
-
-    from big_data_streaming_spark.functions.multimodal import payload_stats_arrow
-
-    docs = spark.range(64).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit(b"\x89PNG"),
-            F.sha2(F.col("id").cast("string"), 256).cast("binary"),
-        ).alias("payload"),
+    edge = spark.createDataFrame(
+        [
+            Row(doc_id=0, payload=_wav(16000, 1, 16, 200)[:43]),  # one byte short
+            Row(doc_id=1, payload=_wav(16000, 0, 16, 200)),  # zero channels
+            Row(doc_id=2, payload=_wav(16000, 1, 0, 200)),  # zero bits
+            Row(doc_id=3, payload=_wav(0, 1, 16, 200)),  # zero rate
+            Row(doc_id=4, payload=_wav(22050, 2, 8, 1001)),  # stereo 8-bit, odd size
+            Row(doc_id=5, payload=_wav(1, 1, 16, 0xFFFFFFFF)),  # u32 max data size
+            Row(doc_id=6, payload=_wav(0xFFFFFFFF, 1, 8, 7)),  # u32 max rate
+            Row(doc_id=7, payload=b""),
+            Row(doc_id=8, payload=None),
+        ],
+        "doc_id long, payload binary",
     )
-    got = {
-        r["doc_id"]: (r["nbytes"], r["first_byte"], r["checksum32"])
-        for r in payload_stats_arrow(docs).collect()
+    fields = {
+        r.doc_id: (r.mime, r.sample_rate, r.channels, r.n_samples, r.duration_ms)
+        for r in parse_audio_headers(edge).collect()
     }
-    want = {
-        r["doc_id"]: (r["nbytes"], r["first_byte"], r["checksum32"])
-        for r in docs.select(
-            "doc_id",
-            F.length("payload").cast("bigint").alias("nbytes"),
-            F.expr("ascii(decode(substring(payload, 1, 1), 'ISO-8859-1'))")
-            .cast("int")
-            .alias("first_byte"),
-            F.expr(
-                "aggregate(transform(sequence(1, length(payload)),"
-                " i -> ascii(decode(substring(payload, i, 1), 'ISO-8859-1'))),"
-                " 0L, (a, x) -> a + x) % 4294967296"
-            ).alias("checksum32"),
-        ).collect()
+    nulls = (None,) * 5
+    assert fields == {
+        0: nulls,
+        1: nulls,
+        2: nulls,
+        3: nulls,
+        4: ("audio/wav", 22050, 2, 500, 500 * 1000 // 22050),
+        5: ("audio/wav", 1, 1, 2147483647, 2147483647000),
+        6: ("audio/wav", 0xFFFFFFFF, 1, 7, 0),
+        7: nulls,
+        8: nulls,
     }
-    assert len(got) == 64
-    for k, (nb, fb, cs) in got.items():
-        wnb, wfb, wcs = want[k]
-        assert nb == wnb and fb == wfb and cs == wcs, (k, got[k], want[k])
 
 
 def test_resize_raster_nearest_neighbor_exact(spark):

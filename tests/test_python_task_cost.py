@@ -4,15 +4,19 @@
 zip-directory re-reads on CPython < 3.12) and puts the package's parent
 directory on the workers' ``PYTHONPATH``. ``q_token_runs`` is one
 ``mapInArrow`` pass rather than a LATERAL Python UDTF, whose per-task row
-queue holds a 64 MB memory page.
+queue holds a 64 MB memory page. The header keys have no Python task at
+all; the Python keys of ``llm_ops`` keep exactly one Python node each.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 import textwrap
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -122,3 +126,27 @@ def test_token_runs_is_one_map_in_arrow(spark, sf_small):
     assert df.schema.simpleString() == (
         "struct<doc_id:bigint,token:string,run_start:int,run_len:int>"
     )
+
+
+_PYTHON_NODE = re.compile(
+    r"^[\s:|+-]*(MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython)\b", re.M
+)
+
+
+@pytest.mark.parametrize(
+    "key, n_python",
+    [
+        ("q_multimodal_decode", 0),
+        ("q_multimodal_audio", 0),
+        ("q_audio_clip_detect", 1),
+        ("q_token_runs", 1),
+    ],
+)
+def test_python_nodes_per_key(spark, sf_small, key, n_python):
+    """The PNG/GIF/WAV header readers are built-in expressions; the
+    sample loop and the token-run kernel keep one Python node each, so
+    ``llm_ops`` still measures the Python boundary."""
+    from big_data_streaming_spark.workload import QUERIES
+
+    plan = QUERIES[key](spark, sf_small)._jdf.queryExecution().executedPlan().toString()
+    assert len(_PYTHON_NODE.findall(plan)) == n_python, plan

@@ -38,7 +38,8 @@ def _wav(samples: list[int], rate: int = 44100) -> bytes:
 def test_audio_clip_stats_counts_and_nulls(spark):
     """Kernel vs hand-computed truth on adversarial payloads: exact
     threshold boundaries (±32000 clip, ±31999 don't), int16 extremes,
-    an empty data section, a corrupt header, and a NULL payload."""
+    an empty data section, a corrupt header, a NULL payload, an
+    odd-length data section, and a header one byte short."""
     from big_data_streaming_spark.functions.multimodal import (
         audio_clip_stats,
     )
@@ -50,6 +51,9 @@ def test_audio_clip_stats_counts_and_nulls(spark):
         (3, _wav([])),                         # empty data section
         (4, b"RIFFxxxxNOTAWAVE"),               # corrupt → NULLs
         (5, None),                              # NULL payload → NULLs
+        (6, _wav([7, -7]) + b"\x01"),           # odd-length data → NULLs
+        (7, _wav([])[:43]),                     # 43 bytes: no header → NULLs
+        (8, b""),                               # empty payload → NULLs
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
     got = {
@@ -60,8 +64,10 @@ def test_audio_clip_stats_counts_and_nulls(spark):
     assert got[1]["clip_count"] == 2 and got[1]["n_samples"] == 4
     assert got[2]["clip_count"] == 2 and got[2]["max_abs"] == 32768
     assert got[3]["n_samples"] == 0 and got[3]["clip_share"] == 0.0
-    assert got[4]["clip_count"] is None
-    assert got[5]["n_samples"] is None
+    nulls = {"n_samples": None, "clip_count": None, "max_abs": None,
+             "clip_share": None}
+    for k in (4, 5, 6, 7, 8):
+        assert {c: got[k][c] for c in nulls} == nulls, (k, got[k])
 
 
 def test_synth_wav_tone_payload_matches_recurrence(spark):
