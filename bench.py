@@ -15,11 +15,12 @@ driver's ~2 kB tail capture):
 Consumers that hold both lines must prefer the LARGER queries map
 (scripts/compare_bench.py does).
 
-Each query is executed to FULL materialization via the noop sink
-(df.write.format("noop") computes every output column; a count() would
-let Catalyst prune projections on map-only queries and under-measure
-them — BENCH_NOTES round 2). A warm-up pass on sf0.001 triggers
-JVM/codegen warm-up so timings measure the plan, not classloading.
+Each query runs through ``big_data_streaming_spark.measure.run_key``:
+FULL materialization via the noop sink (a count() would let Catalyst
+prune projections on map-only queries and under-measure them —
+BENCH_NOTES round 2), after a warm-up pass on sf0.001 so timings measure
+the plan, not classloading. The detail line also carries each query's
+warm-run job/stage/task and byte counts (``counts``).
 """
 
 from __future__ import annotations
@@ -186,85 +187,36 @@ assert len(HEADLINE) <= 100, "headline capped at 100 — swap, don't grow"
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from big_data_streaming_spark import measure
     from big_data_streaming_spark.session import get_spark
-    from big_data_streaming_spark.workload import QUERIES
 
     spark = get_spark("bdss-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def run_full(name: str, d: str) -> None:
-        QUERIES[name](spark, d).write.format("noop").mode("overwrite").save()
-
-    # Warm-up at the smallest SF: one batch query (JIT/codegen/Arrow init)
-    # and one streaming query (streaming engine + state-store classload) —
-    # so timings measure plan execution, not first-use class loading.
-    run_full("q_flagship", "/root/testdata/sf0.001")
-    run_full("q_stream_window_tumbling", "/root/testdata/sf0.001")
+    measure.warm_up(spark)
 
     # Box-drift probe (VERDICT r7 task 4): a FIXED 3-query workload timed
     # best-of-3 at bench start, recorded beside the per-query detail.
     # Round-over-round headline deltas divide by this probe's total to
     # separate "the code got slower" from "the box was slower that day"
     # (the r6→r7 +21% took real forensics to attribute to box drift).
+    # Its plans are pinned to the pre-r12 shape (measure.box_probe).
     # Side effect, documented: these three keys are warmed here, so their
     # "cold" entries below are steady-state from round 8 on (~1 s of the
     # cold total; BENCH_NOTES.md round 8).
-    # Probe protocol re-baseline (round 12, VERDICT r11 task 3): the probe
-    # keys q_tpch_q1/q_groupby_agg now use the scan rebalance in the
-    # HEADLINE loop (they were frozen un-optimized through r11 precisely
-    # to keep this probe comparable). The probe itself runs with the
-    # rebalance DISABLED so it still measures the identical un-rebalanced
-    # plans every prior round's probe measured — cross-round
-    # probe-normalization stays valid with no discontinuity. Documented
-    # in OPTIMIZATION_r12.md + BENCH_NOTES.md; the env flag is read per
-    # query construction (sources/catalog.py), so scoping it around the
-    # probe loop is exact.
-    # The probe also pins spark.sql.shuffle.partitions to 32, the value
-    # every earlier round's probe ran with before partitions followed
-    # SPARK_GRAFT_CPUS (2x cores), so probe normalization stays valid at
-    # any core count; restored afterwards like the rebalance flag.
-    probe_members = ("q_tpch_q1", "q_topk", "q_groupby_agg")
-    probe: dict[str, float] = {}
-    prev_rebalance = os.environ.get("SPARK_GRAFT_SCAN_REBALANCE")
-    prev_partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    os.environ["SPARK_GRAFT_SCAN_REBALANCE"] = "off"
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        for name in probe_members:
-            best = float("inf")
-            for _ in range(3):
-                start = time.perf_counter()
-                run_full(name, sf_dir)
-                best = min(best, time.perf_counter() - start)
-            probe[name] = round(best, 3)
-    finally:
-        if prev_rebalance is None:
-            del os.environ["SPARK_GRAFT_SCAN_REBALANCE"]
-        else:
-            os.environ["SPARK_GRAFT_SCAN_REBALANCE"] = prev_rebalance
-        spark.conf.set("spark.sql.shuffle.partitions", prev_partitions)
+    probe = measure.box_probe(spark, sf_dir)
 
     # Two runs per query, report the min: run 1 pays one-time plan/codegen
     # compilation for that query shape; run 2 is steady-state execution —
-    # the number that scales with data volume.
+    # the number that scales with data volume. Run 2's job/stage/task and
+    # byte counts go to the detail line.
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
-    from big_data_streaming_spark.plans.rank import release_persisted
-
+    counts: dict[str, dict[str, int]] = {}
     for name in HEADLINE:
-        best = float("inf")
-        for i in range(2):
-            start = time.perf_counter()
-            run_full(name, sf_dir)
-            elapsed = time.perf_counter() - start
-            if i == 0:
-                cold[name] = round(elapsed, 3)
-            best = min(best, elapsed)
-        timings[name] = round(best, 3)
-        # Free global_order consistency pins OUTSIDE the timed region so
-        # one query's cache release isn't billed to the next (ADVICE r6:
-        # unbounded persist accumulation over a 100-query session).
-        release_persisted()
+        first, warm = measure.runs(spark, name, sf_dir, 2)
+        cold[name] = round(first["wall_s"], 3)
+        timings[name] = round(min(first["wall_s"], warm["wall_s"]), 3)
+        counts[name] = {k: warm[k] for k in measure.COUNTS}
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -298,15 +250,16 @@ def main() -> None:
         "total_best_sec": round(sum(probe.values()), 3),
         # Probe plans are pinned to the pre-r12 shape (scan rebalance
         # off, 32 shuffle partitions) so probe normalization is
-        # comparable across ALL rounds; see the probe loop above.
+        # comparable across ALL rounds; see measure.box_probe.
         "scan_rebalance": "off",
         "shuffle_partitions": 32,
         # These keys run 3x in the probe BEFORE the headline loop, so
         # their queries_cold entries above are steady-state, not cold —
         # cross-round cold comparisons must exclude them mechanically
         # (ADVICE r8; BENCH_NOTES.md round 8).
-        "warmed_by_probe": list(probe_members),
+        "warmed_by_probe": list(measure.PROBE_KEYS),
     }
+    detail["counts"] = counts
     detail["date"] = time.strftime("%Y-%m-%d")
     # Provenance (VERDICT r10 task 3): the tree SHA + UTC timestamp at
     # generation time live INSIDE the artifact, so closing-tree

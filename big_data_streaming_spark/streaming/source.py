@@ -124,7 +124,7 @@ def raw_text_file_stream(
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.text(path).withColumnRenamed("value", "value")
+    return reader.text(path)
 
 
 def parquet_file_stream(

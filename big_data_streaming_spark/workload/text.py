@@ -865,7 +865,8 @@ def q_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     # tr: the Python pass otherwise runs inside the single scan task
-    # (round-11 A/B: 1.96 -> 0.97 s; no-op at production row-group counts).
+    # (round-11 A/B: 1.96 -> 0.97 s; no-op at production row-group counts,
+    # and at sf0.01, whose documents file is under the 256 KiB floor).
     return (
         tr(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -6348,7 +6349,8 @@ def q_audio_clip_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # tr: WAV synthesis + the Arrow audio kernel otherwise run inside the
     # single scan task (2 tasks total, ~1.1 s/task — round-11 A/B:
-    # 2.17 -> 1.08 s; no-op at production row-group counts).
+    # 2.17 -> 1.08 s; no-op at production row-group counts, and at sf0.01,
+    # whose documents file is under the 256 KiB floor).
     d = tr(spark, sf_dir, "documents").select(
         "doc_id",
         synth_wav_tone_payload(

@@ -26,6 +26,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from tests.oracle_harness import driver_match, driver_rows
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -51,23 +52,12 @@ def main() -> None:
     rc = 0
     for name in keys:
         s = qs[name](spark, sf_dir).toPandas()
-        # Columns in case-insensitive order on both sides, as the column-set
-        # check below compares them: a case difference in one name must not
-        # misalign the value lists.
-        sv = sorted(map(str, s[sorted(s.columns, key=str.lower)].astype(str).values.tolist()))
         if name not in oracles:
-            h = hashlib.md5("\n".join(sv).encode()).hexdigest()[:16]
+            h = hashlib.md5("\n".join(driver_rows(s)).encode()).hexdigest()[:16]
             print(json.dumps({"key": name, "rows": len(s), "row_hash": h,
                               "status": "rows-only"}))
             continue
-        o = con.execute(oracles[name]).fetch_df()
-        ov = sorted(map(str, o[sorted(o.columns, key=str.lower)].astype(str).values.tolist()))
-        ok = (
-            len(s) == len(o)
-            and sorted(c.lower() for c in s.columns)
-            == sorted(c.lower() for c in o.columns)
-            and sv == ov
-        )
+        ok = driver_match(s, con.execute(oracles[name]).fetch_df())
         print(json.dumps({"key": name, "rows": len(s),
                           "status": "green" if ok else "MISMATCH"}))
         if not ok:

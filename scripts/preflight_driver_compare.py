@@ -5,9 +5,10 @@ column-name set, order-insensitive stringified-value hash) at sf0.01,
 and write PREFLIGHT_r{N}.json (N from $SPARK_GRAFT_ROUND, else
 "latest").
 
-This is deliberately NOT tests/oracle_harness.compare (which
-canonicalizes dtypes and compares floats bit-for-bit — stricter in some
-ways): it replicates the DRIVER's stringified hash, so a key that is
+The compare is tests/oracle_harness.driver_match, deliberately NOT
+tests/oracle_harness.compare (which canonicalizes dtypes and compares
+floats bit-for-bit — stricter in some ways): it replicates the DRIVER's
+stringified hash, so a key that is
 green here is expected to be green in CORRECTNESS_r{N}.json whenever
 the rotation window reaches it. The committed artifact gives every
 never-driver-checked key a per-key, re-runnable preflight status.
@@ -33,6 +34,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from tests.oracle_harness import driver_match
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -69,19 +71,7 @@ def main() -> None:
             continue
         try:
             s = qs[name](spark, sf_dir).toPandas()
-            o = con.execute(oracles[name]).fetch_df()
-            sv = sorted(
-                map(str, s[sorted(s.columns)].astype(str).values.tolist())
-            )
-            ov = sorted(
-                map(str, o[sorted(o.columns)].astype(str).values.tolist())
-            )
-            ok = (
-                len(s) == len(o)
-                and sorted(c.lower() for c in s.columns)
-                == sorted(c.lower() for c in o.columns)
-                and sv == ov
-            )
+            ok = driver_match(s, con.execute(oracles[name]).fetch_df())
             out[name] = {
                 "status": "green" if ok else "MISMATCH",
                 "rows": len(s),

@@ -1,15 +1,20 @@
 #!/usr/bin/env python
-"""Structural profiler for optimization work (round 11): per query key,
-report the DETERMINISTIC cost metrics host-load noise cannot touch —
-Spark job count, stage count, task count, executor-summed run time,
-shuffle bytes read/written, input bytes — plus wall clock for reference.
+"""Structural profiler: per query key, report the DETERMINISTIC cost
+metrics host-load noise cannot touch — Spark job count, stage count,
+task count, executor-summed run time, shuffle bytes read/written, input
+bytes — plus wall clock for reference.
 
 Wall-clock on a contended box swings 3-5x between runs; job/stage/task
 counts and shuffle bytes are plan properties, stable across runs, and are
 exactly what the 100 TB scaling argument rides on (guide §1/§2: fewer
-passes, fewer shuffles, fewer bytes). Usage:
+passes, fewer shuffles, fewer bytes). Each key runs twice through
+``big_data_streaming_spark.measure.run_key``: run 1 is cold (plan and
+codegen compile), run 2 warm; the counts printed are run 2's, and the
+final JSON line holds both records. With no key arguments every registry
+key runs. Usage:
 
-    python scripts/profile_keys.py q_a q_b ...      # default sf0.1
+    python scripts/profile_keys.py                  # every key, sf0.1
+    python scripts/profile_keys.py q_a q_b ...
     SPARK_GRAFT_SF_DIR=... python scripts/profile_keys.py q_a
 """
 
@@ -18,81 +23,31 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    keys = sys.argv[1:]
+    from big_data_streaming_spark import measure
     from big_data_streaming_spark.session import get_spark
     from big_data_streaming_spark.workload import QUERIES
-    from big_data_streaming_spark.plans.rank import release_persisted
 
     spark = get_spark("profile-keys")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    def run_full(name: str, d: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, d).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # warm-up (same protocol as bench.py)
-    run_full("q_flagship", "/root/testdata/sf0.001")
-    if any(k.startswith("q_stream") for k in keys):
-        run_full("q_stream_window_tumbling", "/root/testdata/sf0.001")
-
-    store = sc._jsc.sc().statusStore()
-    jvm, gw = sc._jvm, sc._gateway
-
-    def snapshot() -> dict[str, float]:
-        jobs = store.jobsList(None)
-        stages = store.stageList(
-            jvm.java.util.ArrayList(),
-            False,
-            False,
-            gw.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
-        )
-        tot = {
-            "jobs": jobs.size(),
-            "stages": stages.size(),
-            "tasks": 0,
-            "run_ms": 0,
-            "sh_read": 0,
-            "sh_write": 0,
-            "input": 0,
-        }
-        it = stages.iterator()
-        while it.hasNext():
-            s = it.next()
-            tot["tasks"] += s.numCompleteTasks()
-            tot["run_ms"] += s.executorRunTime()
-            tot["sh_read"] += s.shuffleReadBytes()
-            tot["sh_write"] += s.shuffleWriteBytes()
-            tot["input"] += s.inputBytes()
-        return tot
+    measure.warm_up(spark)
 
     out = {}
-    for name in keys:
-        # steady-state run first (plan/codegen warm), then measure run 2
-        run_full(name, sf_dir)
-        release_persisted()
-        before = snapshot()
-        wall = run_full(name, sf_dir)
-        release_persisted()
-        after = snapshot()
-        d = {k: after[k] - before[k] for k in before}
-        d["wall_s"] = round(wall, 3)
-        d["run_ms"] = int(d["run_ms"])
-        out[name] = d
+    for name in sys.argv[1:] or QUERIES:
+        cold, warm = measure.runs(spark, name, sf_dir, 2)
+        out[name] = {"cold": cold, "warm": warm}
         print(
-            f"{name:26s} wall={wall:7.3f} jobs={d['jobs']:3.0f} "
-            f"stages={d['stages']:3.0f} tasks={d['tasks']:5.0f} "
-            f"exec_ms={d['run_ms']:7d} shR={d['sh_read']/1e6:8.2f}MB "
-            f"shW={d['sh_write']/1e6:8.2f}MB in={d['input']/1e6:8.2f}MB",
+            f"{name:26s} cold={cold['wall_s']:7.3f} wall={warm['wall_s']:7.3f} "
+            f"jobs={warm['jobs']:3d} stages={warm['stages']:3d} "
+            f"tasks={warm['tasks']:5d} exec_ms={warm['executor_run_ms']:7d} "
+            f"shR={warm['shuffle_read_bytes']/1e6:8.2f}MB "
+            f"shW={warm['shuffle_write_bytes']/1e6:8.2f}MB "
+            f"in={warm['input_bytes']/1e6:8.2f}MB",
             flush=True,
         )
     print(json.dumps(out))

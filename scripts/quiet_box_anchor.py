@@ -8,11 +8,11 @@ it to ``QUIET_BOX_ANCHOR.json`` at the repo root (merged per-round, keyed
 by round number) so cross-round bench comparisons have a standing
 absolute reference:
 
-* ``probe``: best-of-3 of the bench.py box-drift probe members
-  (q_tpch_q1, q_topk, q_groupby_agg) — same keys, same best-of-3 protocol
-  as ``bench.py``'s ``box_probe``, so ``BENCH_DETAIL_r{N}.json:
-  box_probe.total_best_sec / anchor.probe_total_best_sec`` is the box
-  factor at driver-bench time vs quiet time.
+* ``probe``: ``measure.box_probe``, the very probe ``bench.py`` records
+  as ``box_probe`` (same keys, best-of-3, scan rebalance off, 32 shuffle
+  partitions), so ``BENCH_DETAIL_r{N}.json: box_probe.total_best_sec /
+  anchor.probe_total_best_sec`` is the box factor at driver-bench time
+  vs quiet time.
 * ``anchor10``: best-of-3 of 10 FIXED headline keys (never change this
   list — the anchor is only useful if it measures the same work every
   round). Includes the keys that drifted >=1.9x in r8 on untouched code
@@ -30,7 +30,6 @@ import os
 import sys
 import time
 
-PROBE = ("q_tpch_q1", "q_topk", "q_groupby_agg")
 # FIXED forever — see module docstring.
 ANCHOR10 = (
     "q_flagship",
@@ -62,46 +61,25 @@ def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    global _stamp
-    from provenance import stamp as _stamp
+    from provenance import stamp
+    from big_data_streaming_spark import measure
     from big_data_streaming_spark.session import get_spark
-    from big_data_streaming_spark.workload import QUERIES
 
     spark = get_spark("bdss-quiet-box-anchor")
     spark.sparkContext.setLogLevel("ERROR")
+    measure.warm_up(spark)
 
-    def run_full(name: str, d: str) -> float:
-        start = time.perf_counter()
-        QUERIES[name](spark, d).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - start
-
-    # Same warm-up protocol as bench.py: JIT/codegen + streaming engine.
-    run_full("q_flagship", "/root/testdata/sf0.001")
-    run_full("q_stream_window_tumbling", "/root/testdata/sf0.001")
-
-    from big_data_streaming_spark.plans.rank import release_persisted
-
-    def best_of(names: tuple[str, ...], n: int) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name in names:
-            best = min(run_full(name, sf_dir) for _ in range(n))
-            out[name] = round(best, 3)
-            release_persisted()
-        return out
-
-    probe = best_of(PROBE, 3)
-    anchor = best_of(ANCHOR10, 3)
-
+    probe = measure.box_probe(spark, sf_dir)
+    anchor = {name: measure.best_wall_s(spark, name, sf_dir, 3) for name in ANCHOR10}
     # Streaming tail: 1 discarded warm-up + 3 recorded warm runs each.
-    tail: dict[str, list[float]] = {}
-    for name in STREAM_TAIL:
-        run_full(name, sf_dir)
-        tail[name] = [round(run_full(name, sf_dir), 3) for _ in range(3)]
-        release_persisted()
+    tail = {
+        name: [round(r["wall_s"], 3) for r in measure.runs(spark, name, sf_dir, 4)[1:]]
+        for name in STREAM_TAIL
+    }
 
     blob = {
         "date": time.strftime("%Y-%m-%d %H:%M"),
-        **_stamp(),  # tree SHA + UTC (VERDICT r10 task 3)
+        **stamp(),  # tree SHA + UTC (VERDICT r10 task 3)
         "round": os.environ.get("SPARK_GRAFT_ROUND"),
         "sf_dir": sf_dir,
         "probe": probe,

@@ -39,6 +39,26 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
         con.close()
 
 
+def driver_rows(pdf: pd.DataFrame) -> list[str]:
+    """The grading driver's view of a result: each row stringified with
+    its columns in case-insensitive name order, then sorted. The
+    lower-cased order keeps two results whose column names differ only
+    in case aligned."""
+    cols = sorted(pdf.columns, key=str.lower)
+    return sorted(map(str, pdf[cols].astype(str).values.tolist()))
+
+
+def driver_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> bool:
+    """The driver's comparison: row count, case-insensitive column-name
+    set and order-insensitive stringified values."""
+    return (
+        len(spark_pdf) == len(oracle_pdf)
+        and sorted(c.lower() for c in spark_pdf.columns)
+        == sorted(c.lower() for c in oracle_pdf.columns)
+        and driver_rows(spark_pdf) == driver_rows(oracle_pdf)
+    )
+
+
 def _canon_cell(v: Any, atol: float) -> Any:
     if v is None:
         return None

@@ -16,6 +16,8 @@ import pytest
 
 duckdb = pytest.importorskip("duckdb")
 
+from tests.oracle_harness import driver_rows  # noqa: E402
+
 
 def _compare(spark, sf_dir: str, key: str) -> tuple[list, list]:
     import __spark_entry__ as e
@@ -31,9 +33,7 @@ def _compare(spark, sf_dir: str, key: str) -> tuple[list, list]:
                 f"FROM read_parquet('{sf_dir}/{name}.parquet')"
             )
     o = con.execute(e.oracle_sql()[key]).fetch_df()
-    sv = sorted(map(str, s[sorted(s.columns)].astype(str).values.tolist()))
-    ov = sorted(map(str, o[sorted(o.columns)].astype(str).values.tolist()))
-    return sv, ov
+    return driver_rows(s), driver_rows(o)
 
 
 def _write(path: str, cols: dict) -> None:

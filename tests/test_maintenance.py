@@ -1,13 +1,12 @@
 """Maintenance + observability + decimal-path tests: small-file
 compaction, dynamic-partition-overwrite idempotence, streaming progress
-listener, exact-decimal kline parsing."""
+records, exact-decimal kline parsing."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
-import time
 from decimal import Decimal
 
 from pyspark.sql import functions as F
@@ -17,7 +16,6 @@ from big_data_streaming_spark.operators.maintenance import (
     overwrite_partitions_dynamic,
 )
 from big_data_streaming_spark.schemas import KLINE_DECIMAL_SCHEMA
-from big_data_streaming_spark.streaming.metrics import ProgressCollector
 from big_data_streaming_spark.streaming.parse import parse_json_stream
 from big_data_streaming_spark.streaming.source import raw_text_file_stream
 from tests.test_streaming import COINS, make_kline, write_jsonl
@@ -63,26 +61,20 @@ def test_dynamic_partition_overwrite_is_idempotent(spark, tmp_path):
 
 
 def test_streaming_progress_listener(spark, tmp_path):
+    """The engine's own progress records count every input row; they are
+    kept on the query, so no listener and no polling is needed."""
     src = str(tmp_path / "src")
     write_jsonl(src, "a.jsonl", [make_kline(c, m) for c in COINS for m in range(25)])
-    collector = ProgressCollector().install(spark)
-    try:
-        parsed = parse_json_stream(raw_text_file_stream(spark, src))
-        q = (
-            parsed.writeStream.format("memory")
-            .queryName("metered")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # listener events are delivered asynchronously
-        deadline = time.time() + 10
-        while time.time() < deadline and collector.total_rows("metered") < 100:
-            time.sleep(0.2)
-        assert collector.total_rows("metered") == 100
-    finally:
-        collector.uninstall(spark)
+    parsed = parse_json_stream(raw_text_file_stream(spark, src))
+    q = (
+        parsed.writeStream.format("memory")
+        .queryName("metered")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 100
 
 
 def test_kline_decimal_schema_exact_money(spark):

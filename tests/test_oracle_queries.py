@@ -11,9 +11,18 @@ import os
 import pytest
 
 from big_data_streaming_spark.workload import ORACLES, QUERIES
-from tests.oracle_harness import compare, run_oracle
+from tests.oracle_harness import compare, driver_match, run_oracle
 
 SF_DIR = os.environ.get("BDSS_ORACLE_SF", "/root/testdata/sf0.001")
+
+
+def test_driver_match_orders_columns_case_insensitively():
+    import pandas as pd
+
+    a = pd.DataFrame({"a": [1, 3], "B": [2, 4]})
+    b = pd.DataFrame({"A": [3, 1], "b": [4, 2]})
+    assert driver_match(a, b)
+    assert not driver_match(a, pd.DataFrame({"A": [3, 1], "b": [2, 4]}))
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

@@ -22,6 +22,15 @@ from big_data_streaming_spark.sources.catalog import load_table
 from big_data_streaming_spark.workload import QUERIES
 
 
+def test_plans_md_has_a_section_per_key():
+    """PLANS.md (``scripts/dump_plans.py``) covers exactly the registry."""
+    import pathlib
+    import re
+
+    text = (pathlib.Path(__file__).resolve().parent.parent / "PLANS.md").read_text()
+    assert set(re.findall(r"^## (\S+)", text, re.M)) == set(QUERIES)
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_small):
     df = QUERIES["q_scan_table"](spark, sf_small)
     pushed = " ".join(pushed_filters(df))

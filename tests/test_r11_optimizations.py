@@ -42,19 +42,17 @@ def test_rebalance_fires_only_below_floor(spark):
 
 
 def test_rebalance_value_neutral_where_it_fires(spark):
-    # At sf0.01 the documents file crosses the size floor, so tr() adds
-    # the round-robin exchange — rows must be identical either way.
-    # (Renamed from *_at_sf01 — ADVICE r11: the old name said sf0.1 but
-    # the test runs sf0.01, which is where the floor is first crossed.)
+    # sf0.1 documents (one row group, 594,568 B) is above the 256 KiB size
+    # floor, so tr() adds the round-robin exchange (sf0.01's 65,049 B file
+    # is below it, where tr() is a no-op) — rows must be identical either
+    # way.
     from big_data_streaming_spark.workload.common import t, tr
 
-    sf = "/root/testdata/sf0.01"
-    a = sorted(
-        map(tuple, t(spark, sf, "documents").select("doc_id", "lang").collect())
-    )
-    b = sorted(
-        map(tuple, tr(spark, sf, "documents").select("doc_id", "lang").collect())
-    )
+    sf = "/root/testdata/sf0.1"
+    reb = tr(spark, sf, "documents")
+    assert "Repartition" in reb._jdf.queryExecution().optimizedPlan().toString()
+    a = sorted(map(tuple, t(spark, sf, "documents").select("doc_id", "lang").collect()))
+    b = sorted(map(tuple, reb.select("doc_id", "lang").collect()))
     assert a == b
 
 
