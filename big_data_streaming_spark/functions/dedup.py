@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from big_data_streaming_spark.plans.rank import track_persist
+
 _SEED = 42
 
 
@@ -267,18 +269,10 @@ def minhash_dedup_clusters(
     # aggregate and the join below; without persist the source is scanned
     # (and every signature recomputed) twice — the partial-agg node makes
     # the two exchanges non-identical, so ReuseExchange can't dedup them.
-    # MEMORY_AND_DISK keeps the win bounded at scale (spills, no OOM).
-    from pyspark import StorageLevel
-
-    sigs = _band_hashes(df, id_col, text_col, num_hashes, bands).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    exploded = sigs
-    bucket_rep = exploded.groupBy("band", "bh").agg(
-        F.min(id_col).alias("bucket_rep")
-    )
+    sigs = track_persist(_band_hashes(df, id_col, text_col, num_hashes, bands))
+    bucket_rep = sigs.groupBy("band", "bh").agg(F.min(id_col).alias("bucket_rep"))
     rep = (
-        exploded.join(bucket_rep, ["band", "bh"])
+        sigs.join(bucket_rep, ["band", "bh"])
         .groupBy(id_col)
         .agg(F.min("bucket_rep").alias("cluster_rep"))
     )

@@ -89,7 +89,9 @@ def run_key(spark: SparkSession, name: str, sf_dir: str) -> dict:
     """Construct registry key ``name`` on ``sf_dir``, run it through the
     noop sink and return one record: ``construct_s``, ``execute_s`` and
     ``wall_s`` (their sum) plus the ``COUNTS`` of every job both phases
-    ran. ``plans.rank`` pins are released after the timed region."""
+    ran. The relations the key pinned (``plans.rank.track_persist``)
+    are released after the timed region, so no run reads a cache left
+    by the one before it."""
     job_hw = _last_job_id(spark)
     t0 = time.perf_counter()
     df = QUERIES[name](spark, sf_dir)

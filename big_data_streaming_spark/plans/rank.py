@@ -58,33 +58,37 @@ from pyspark.sql.window import Window
 #: 8 keeps the offset relation readable in test plans.
 DEFAULT_RANGES = 8
 
-#: Handles persisted by the sampled path, pending release. The pin must
-#: outlive the caller's action (two lineage branches share it — see the
-#: module docstring), but the helper cannot see that action, so handles
-#: accumulate here and ``release_persisted()`` frees them BETWEEN
-#: queries: the workload registry wrapper calls it before constructing
-#: the next query, and bench.py/tests call it after each materialize.
-#: Without this, a long session (full suite, bench, the driver's 50-key
-#: gate) pins one fact-sized cache per sampled call for its lifetime
-#: (ADVICE r6).
+#: Every relation a query pins, pending release. This module owns the
+#: cache lifetime of the whole package (a lint in
+#: tests/test_cache_lifetime.py keeps every other persist call out of
+#: it): a pin lives for ONE query. It must outlive the query's action,
+#: which the pinning code cannot see, so handles accumulate here and
+#: ``release_persisted()`` frees them BETWEEN queries: the workload
+#: registry wrapper calls it before constructing the next query,
+#: ``measure.run_key`` and the test fixtures after each materialize. A
+#: pin kept past its query would pile up over a long session and, worse,
+#: be swapped by Spark's CacheManager into the next identical plan: a
+#: warm run would read the previous run's rows, even after the source
+#: files were rewritten. Batch-scoped caching in ``foreachBatch``
+#: callbacks is ``streaming.router.persisted``'s.
 _PERSISTED: list[DataFrame] = []
 
 
 def track_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register the handle for ``release_persisted``.
+    """Persist ``df`` for the current query and register the handle for
+    ``release_persisted``.
 
     For query plans whose lineage fans out (a relation consumed by
     several branches, each of which would re-evaluate the same
-    sort/aggregate chain): persist once, share the evaluation, and let
-    the between-queries release discipline free it — the same lifecycle
-    the sampled ranker uses for its consistency pin."""
+    sort/aggregate chain): persist once and share the evaluation within
+    the query; the sampled ranker's consistency pin is one such use."""
     handle = df.persist()
     _PERSISTED.append(handle)
     return handle
 
 
 def release_persisted() -> None:
-    """Unpersist every relation the sampled path has pinned so far.
+    """Unpersist every relation pinned so far.
 
     Call ONLY between queries — after one query's output materialized
     and before the next is constructed. Releasing a handle whose action
@@ -167,8 +171,7 @@ def global_order(
     if sampled:
         # see module docstring: pin ONE evaluation of the sampled range
         # assignment for both the offsets branch and the output branch
-        ranked = ranked.persist()
-        _PERSISTED.append(ranked)
+        ranked = track_persist(ranked)
     sizes = ranked.groupBy("_rng").agg(
         F.max("_intra").alias("_n"),
         *[F.sum(src).alias(f"_t_{out}") for out, src in cum_sums.items()],

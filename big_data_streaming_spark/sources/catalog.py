@@ -74,22 +74,30 @@ def _parquet_files(path: str) -> list[str]:
     )
 
 
+def file_fingerprint(path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(file, size, mtime_ns)`` of every parquet file under ``path``,
+    the rule ``staging.fingerprint_cached_dir`` uses: it changes when a
+    file is rewritten in place, added or removed, and reading it starts
+    no Spark job."""
+    return tuple(
+        (f, st.st_size, st.st_mtime_ns)
+        for f in _parquet_files(path)
+        for st in [os.stat(f)]
+    )
+
+
 def table_facts(spark: SparkSession, path: str) -> TableFacts:
     """What a read of the parquet file or directory ``path`` needs to know
     before it runs, inferred once per file fingerprint.
 
-    The cache key is the path, the ``(size, mtime_ns)`` of every parquet
-    file under it (the rule ``staging.fingerprint_cached_dir`` uses), and
-    the session's ``_TYPE_CONFS``. On first sight Spark infers the schema
+    The cache key is the path, its ``file_fingerprint`` and the session's
+    ``_TYPE_CONFS``. On first sight Spark infers the schema
     (one Spark job) and the footers give the NANOS columns and the scan
     units; a later call on unchanged files under the same confs starts no
     job and reads no footer, and a file rewritten in place, added or
     removed is inferred again. Call after ``_ensure_session_confs``."""
-    files = _parquet_files(path)
-    stats = [os.stat(f) for f in files]
-    fingerprint = tuple(
-        (f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats)
-    )
+    fingerprint = file_fingerprint(path)
+    files = [f for f, _size, _mtime in fingerprint]
     key = (path, tuple(spark.conf.get(c, None) for c in _TYPE_CONFS))
     hit = _FACTS.get(key)
     if hit is not None and hit[0] == fingerprint:
@@ -104,7 +112,7 @@ def table_facts(spark: SparkSession, path: str) -> TableFacts:
             if str(f.type) == "timestamp[ns]"
         ),
         scan_units=(
-            sum(st.st_size for st in stats),
+            sum(size for _f, size, _mtime in fingerprint),
             sum(pq.read_metadata(f).num_row_groups for f in files),
         ),
     )

@@ -103,6 +103,74 @@ def build_create_table(
     return f"CREATE TABLE {qualified} ({', '.join(cols)})"
 
 
+def jdbc_connection(
+    spark: SparkSession, url: str, driver: str | None, options: dict[str, str]
+):
+    """A driver-side JVM JDBC connection (no extra Python deps) carrying
+    the caller's driver class, credentials and other options."""
+    jvm = spark._jvm
+    props = jvm.java.util.Properties()
+    if driver:
+        props.setProperty("driver", driver)
+        jvm.java.lang.Class.forName(driver)
+    for k, v in options.items():
+        props.setProperty(k, v)
+    return jvm.java.sql.DriverManager.getConnection(url, props)
+
+
+def table_exists(conn, table: str) -> bool:
+    """Whether ``table`` (optionally ``schema.table``) exists, by an exact
+    name match in the connection's catalog metadata.
+
+    Metadata patterns are case-sensitive, so the common catalog casings
+    are probed (Derby/Oracle upper, Postgres lower, MySQL as-is), each
+    schema-qualified when the name is: an unqualified probe would match
+    a same-named table in ANOTHER schema. ``getTables`` treats its
+    arguments as LIKE patterns: '_' matches any single character, so a
+    probe for 'prov_t' would also match an existing 'provXt' (ADVICE
+    r3). '_'/'%' are escaped with the driver's escape string where one
+    exists (Derby reports an EMPTY escape string, so escaping alone is
+    not sufficient) and every candidate is verified by exact TABLE_NAME /
+    TABLE_SCHEM equality — wildcard matches are then only extra
+    candidates, never false positives."""
+    parts = table.split(".")
+    schema_name = parts[-2] if len(parts) > 1 else None
+    table_name = parts[-1]
+    meta = conn.getMetaData()
+    esc = meta.getSearchStringEscape() or ""
+
+    def _like_quote(name: str) -> str:
+        if not esc:
+            return name
+        return name.replace(esc, esc + esc).replace("_", esc + "_").replace(
+            "%", esc + "%"
+        )
+
+    for pat in {table_name.upper(), table_name.lower(), table_name}:
+        sp = None
+        if schema_name is not None:
+            sp = (
+                schema_name.upper()
+                if pat == table_name.upper()
+                else schema_name.lower()
+                if pat == table_name.lower()
+                else schema_name
+            )
+        rs = meta.getTables(
+            None, _like_quote(sp) if sp is not None else None, _like_quote(pat), None
+        )
+        try:
+            while rs.next():
+                if rs.getString("TABLE_NAME") != pat:
+                    continue
+                if sp is not None and rs.getString("TABLE_SCHEM") != sp:
+                    continue
+                return True
+        finally:
+            rs.close()
+    return False
+
+
 def ensure_table(
     spark: SparkSession,
     url: str,
@@ -124,65 +192,11 @@ def ensure_table(
     race safely.
     """
     ddl = build_create_table(table, schema, string_length=string_length)
-    parts = table.split(".")
-
-    jvm = spark._jvm
-    props = jvm.java.util.Properties()
-    if driver:
-        props.setProperty("driver", driver)
-        jvm.java.lang.Class.forName(driver)
-    for k, v in options.items():
-        props.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, props)
+    schema_name = table.split(".")[-2] if "." in table else None
+    conn = jdbc_connection(spark, url, driver, options)
     try:
-        meta = conn.getMetaData()
-        schema_name = parts[-2] if len(parts) > 1 else None
-        table_name = parts[-1]
-        # Case-sensitive metadata patterns: probe the common catalog
-        # casings (Derby/Oracle upper, Postgres lower, MySQL as-is).
-        # getTables treats its arguments as LIKE patterns: '_' matches any
-        # single character, so a probe for 'prov_t' would also match an
-        # existing 'provXt' and falsely skip creation (ADVICE r3). Escape
-        # '_'/'%' with the driver's escape string where one exists (Derby
-        # reports an EMPTY escape string, so escaping alone is not
-        # sufficient) and ALWAYS verify candidates by exact TABLE_NAME /
-        # TABLE_SCHEM equality — wildcard matches are then only extra
-        # candidates, never false positives.
-        esc = meta.getSearchStringEscape() or ""
-
-        def _like_quote(name: str) -> str:
-            if not esc:
-                return name
-            return name.replace(esc, esc + esc).replace("_", esc + "_").replace(
-                "%", esc + "%"
-            )
-
-        for pat in {table_name.upper(), table_name.lower(), table_name}:
-            sp = None
-            if schema_name is not None:
-                sp = (
-                    schema_name.upper()
-                    if pat == table_name.upper()
-                    else schema_name.lower()
-                    if pat == table_name.lower()
-                    else schema_name
-                )
-            rs = meta.getTables(
-                None,
-                _like_quote(sp) if sp is not None else None,
-                _like_quote(pat),
-                None,
-            )
-            try:
-                while rs.next():
-                    if rs.getString("TABLE_NAME") != pat:
-                        continue
-                    if sp is not None and rs.getString("TABLE_SCHEM") != sp:
-                        continue
-                    return False
-            finally:
-                rs.close()
-
+        if table_exists(conn, table):
+            return False
         stmt = conn.createStatement()
         try:
             if schema_name is not None:

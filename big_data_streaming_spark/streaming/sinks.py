@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from big_data_streaming_spark.streaming.ddl import jdbc_connection, table_exists
 from big_data_streaming_spark.streaming.router import (
     foreach_batch_router,
     persisted,
@@ -155,48 +156,15 @@ def write_jdbc_idempotent(
     """
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
     stamped = df.withColumn("_batch_id", F.lit(batch_id))
-    # Driver-side delete via JVM JDBC (no extra Python deps). Credentials
-    # and other connection options must reach this path too, not just the
-    # DataFrame insert below.
-    jvm = spark._jvm
-    props = jvm.java.util.Properties()
-    if driver:
-        props.setProperty("driver", driver)
-        jvm.java.lang.Class.forName(driver)
-    for k, v in options.items():
-        props.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, props)
+    # The delete runs on the driver with the same connection options as
+    # the insert below. Only a genuinely-missing table may skip it; any
+    # other failure (lock timeout, lost connection, permissions) must
+    # abort the batch — silently degrading to plain append would
+    # duplicate rows on replay, defeating the idempotence contract.
+    conn = jdbc_connection(df.sparkSession, url, driver, options)
     try:
-        # Only a genuinely-missing table may skip the delete; any other
-        # failure (lock timeout, lost connection, permissions) must abort
-        # the batch — silently degrading to plain append would duplicate
-        # rows on replay, defeating the idempotence contract. The probe is
-        # schema-qualified: an unfiltered catalog enumeration matched a
-        # same-named table in ANOTHER schema, wedging the stream on a
-        # DELETE against a table Spark's append had yet to create.
-        parts = table.split(".")
-        schema_pat = parts[-2].upper() if len(parts) > 1 else None
-        table_pat = parts[-1].upper()
-        meta = conn.getMetaData()
-        # JDBC metadata patterns are case-sensitive; probe the common
-        # casings (Derby/Oracle store upper, Postgres lower, MySQL as-is).
-        exists = False
-        for pat in {table_pat, table_pat.lower(), parts[-1]}:
-            sp = None
-            if schema_pat is not None:
-                sp = schema_pat if pat == table_pat else (
-                    schema_pat.lower() if pat == table_pat.lower() else parts[-2]
-                )
-            rs = meta.getTables(None, sp, pat, None)
-            try:
-                if rs.next():
-                    exists = True
-                    break
-            finally:
-                rs.close()
-        if exists:
+        if table_exists(conn, table):
             # Quote the column per dialect: MySQL default mode rejects
             # ANSI double quotes (Spark's own writer backticks there).
             q = "`" if url.startswith("jdbc:mysql") else '"'

@@ -93,13 +93,13 @@ for _m in _MODULES:
 def _with_cache_release(
     fn: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """Free the previous query's global_order consistency pins.
+    """Free the previous query's ``plans.rank.track_persist`` pins.
 
-    plans/rank.py's sampled path persists the ranked relation (the pin
-    must outlive the caller's action, so the helper cannot unpersist it
-    itself — ADVICE r6). Harnesses run registry queries sequentially
-    (driver gate, bench, pytest), so the construction of query N+1 is
-    the first moment query N's pins are provably past their action.
+    A pin must outlive the caller's action, so the code that persists
+    cannot unpersist it itself (ADVICE r6). Harnesses run registry
+    queries sequentially (driver gate, bench, pytest), so the
+    construction of query N+1 is the first moment query N's pins are
+    provably past their action.
     Intra-query multi-use (q_rfm calls global_order 3×) stays pinned:
     release fires once, before the wrapped function body runs. Module-
     level dicts stay unwrapped, so nested composition (q_seasonal_

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_streaming_spark.plans.rank import track_persist
 from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import registry, t
 
@@ -303,7 +304,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The iterated relation is O(nations) rows: localCheckpoint-free loop,
     # each round one broadcast join + one tiny aggregate.
-    norm = norm.persist()
+    norm = track_persist(norm)
     nodes = n.select(F.col("n_nationkey").alias("node"), "n_name")
     n_nodes = float(nodes.count())  # bounded scalar (collect rule §4.3.8)
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("r"))
@@ -505,7 +506,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "customer")
     s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
-    edges = (
+    edges = track_persist(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -513,11 +514,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             s.s_nationkey.alias("src"), c.c_nationkey.alias("dst")
         )
         .distinct()
-        # persisted for the 3 frontier joins in this one action; like the
-        # suite's other tiny-relation persists (norm, the co-occurrence
-        # lattice) it stays cached for the session — bounded at O(nations²)
-        # rows, a deliberate trade against re-deriving the fact joins.
-        .persist()
+        # pinned for the 3 frontier joins of this query's one action
     )
     # Frontier loop promoted to functions/graph.py:bfs_hops (round-2
     # library surface; property-tested against a pure-Python BFS).
@@ -593,7 +590,7 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "customer")
     s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
-    edges = (
+    edges = track_persist(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -601,7 +598,6 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             s.s_nationkey.alias("src"), c.c_nationkey.alias("dst")
         )
         .agg(F.min("l_quantity").cast("bigint").alias("w"))
-        .persist()
     )
     # Relaxation rounds promoted to functions/graph.py:bellman_ford_hops
     # (property-tested against a pure-Python min-plus reference).
@@ -673,7 +669,7 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t(spark, sf_dir, "customer")
     s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
-    lanes = (
+    lanes = track_persist(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -683,7 +679,6 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(s.s_nationkey, c.c_nationkey).alias("b"),
         )
         .distinct()
-        .persist()
     )
     regions = F.broadcast(
         n.select(F.col("n_nationkey").alias("node"), F.col("n_regionkey").alias("region"))
@@ -1175,11 +1170,10 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
     stats = edges.agg(F.avg(F.col("w").cast("double")).alias("avg_w"))
-    kept = (
+    kept = track_persist(
         edges.crossJoin(F.broadcast(stats))
         .where(F.col("w").cast("double") > F.col("avg_w"))
         .select("src", "dst")
-        .persist()
     )
     rev = kept.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     recip = kept.join(
@@ -1284,11 +1278,10 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
     stats = edges.agg(F.avg(F.col("w").cast("double")).alias("avg_w"))
-    kept = (
+    kept = track_persist(
         edges.crossJoin(F.broadcast(stats))
         .where(F.col("w").cast("double") > F.col("avg_w"))
         .select("src", "dst")
-        .persist()
     )
     outd = kept.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("od")
@@ -1412,7 +1405,7 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
     )
     outdeg = edges.groupBy("src").agg(F.sum("w").alias("wout"))
-    norm = (
+    norm = track_persist(
         edges.join(outdeg, "src")
         .select(
             "src",
@@ -1421,7 +1414,6 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "p"
             ),
         )
-        .persist()
     )
     nodes = n.select(F.col("n_nationkey").alias("node"), "n_name")
     seeds = (
@@ -1552,7 +1544,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
 
-    eset = (
+    eset = track_persist(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -1560,7 +1552,6 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .distinct()
-        .persist()
     )
     nodes = n.select(F.col("n_nationkey").alias("node"), "n_name")
     import math
@@ -1894,8 +1885,6 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ud.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         ud.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    from big_data_streaming_spark.plans.rank import track_persist
-
     # e feeds every iteration (3 consumers) — persist once, released
     # between queries by the plans/rank.py lifecycle.
     e = track_persist(e)

@@ -50,6 +50,7 @@ from big_data_streaming_spark.plans.rank import (
     global_ntile,
     global_order,
     global_rank,
+    track_persist,
 )
 from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import (
@@ -748,10 +749,9 @@ def q_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The basket lattice feeds four consumers (both self-join sides,
     # singles, tot): persist it so the scan+distinct runs once, not 4×
     # (same shared-relation fix that took q_triangles 62 → 12 exchanges).
-    ut = (
+    ut = track_persist(
         ev.select("user_id", F.date_trunc("day", "ts").alias("day"), "event_type")
         .distinct()
-        .persist()
     )
     a = ut.alias("a")
     b = ut.alias("b")
@@ -1306,12 +1306,12 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer re-derives the scan + split/sort/md5 pipeline (the most
     # expensive expression here) — same shared-relation policy as
     # q_bigram_lm / q_triangles.
-    f = d.select(
+    f = track_persist(d.select(
         "doc_id",
         F.md5(
             F.array_join(F.array_sort(F.array_distinct(F.split("text", " "))), " ")
         ).alias("fp"),
-    ).persist()
+    ))
     corpus = f.where(F.col("doc_id") % 10 != 0).select("fp").distinct()
     inc = f.where(F.col("doc_id") % 10 == 0)
     return (
@@ -1421,7 +1421,9 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # policy as q_triangles / minhash band-hash). The persisted relation
     # is the distinct-bigram counts — vocabulary-bounded, far smaller
     # than the corpus.
-    bc = bg.groupBy("cur", "nxt").agg(F.count(F.lit(1)).alias("c_bigram")).persist()
+    bc = track_persist(
+        bg.groupBy("cur", "nxt").agg(F.count(F.lit(1)).alias("c_bigram"))
+    )
     cc = bc.groupBy("cur").agg(F.sum("c_bigram").cast("bigint").alias("c_cur"))
     return (
         bc.join(cc, "cur")
@@ -2418,14 +2420,13 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist so the fact scan+aggregate runs once (the shared-relation
     # policy of q_bigram_lm / q_triangles); the persisted frame is the
     # O(types × hours) aggregate, not the raw table.
-    hourly = (
+    hourly = track_persist(
         e.groupBy(
             "event_type",
             F.date_trunc("hour", "ts").alias("hr"),
             F.hour("ts").cast("int").alias("hod"),
         )
         .agg(dec_sum("value", "hour_value"))
-        .persist()
     )
     profile = hourly.groupBy("event_type", "hod").agg(
         F.percentile("hour_value", 0.5).alias("med"),
@@ -2856,7 +2857,7 @@ def q_s_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
     )
-    edges = (
+    edges = track_persist(
         tok.alias("a")
         .join(
             tok.alias("b"),
@@ -2865,7 +2866,6 @@ def q_s_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("a.token").alias("u"), F.col("b.token").alias("v"))
         .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
     )
     # strength is consumed twice per round (threshold + keep filter) and
     # edges three times across rounds — without truncation the plan tree
@@ -3313,11 +3313,10 @@ _AR_LIFT = (
 def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pt = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = (
+    baskets = track_persist(
         li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
         .groupBy(F.col("l_orderkey").alias("basket"))
         .agg(F.collect_set("p_brand").alias("items"))
-        .persist()
     )
     # Two chained explodes beat the flatten(transform(transform)) struct
     # nest by ~35% at sf0.1 (measured): same in-row fan-out bound, less
@@ -3806,11 +3805,10 @@ def q_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersisted, each side re-pays the scan + cap window (the
     # q_triangles shared-edge-relation discipline). The capped frame is
     # <=_TS_CAP rows/user — far smaller than the input it replaces.
-    e = (
+    e = track_persist(
         e.withColumn("srn", F.row_number().over(wcap))
         .where(F.col("srn") <= _TS_CAP)
         .drop("srn")
-        .persist()
     )
     a, b = e.alias("a"), e.alias("b")
     p = a.join(
@@ -5847,7 +5845,7 @@ def q_symspell_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("lev") <= 1)
     # hit is the bounded verified pair set; count it once via a 1-row
     # aggregate joined back (never a per-row subquery at scale)
-    hit = hit.persist()
+    hit = track_persist(hit)
     n_total = hit.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs_total")
     )
@@ -12385,7 +12383,7 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wc = Window.partitionBy("daypart", "event_type")
-    cell = (
+    cell = track_persist(
         base.select(
             "daypart",
             "event_type",
@@ -12398,7 +12396,6 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist: the 20-row grid feeds every sweep's lineage; without
         # it each s/p frame re-derives the events rank window (the
         # q_theilsen shared-relation discipline).
-        .persist()
     )
 
     def rowmed(df: DataFrame, val: str, part: str, other: str, out: str) -> DataFrame:
@@ -12422,7 +12419,7 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("med") - F.col("rm")).alias("resid"),
         F.col("rm").alias("row_eff"),
     )
-    p1 = p1.persist()
+    p1 = track_persist(p1)
     s1c = rowmed(p1, "resid", "event_type", "daypart", "cm")
     p2 = p1.join(F.broadcast(s1c), "event_type").select(
         "daypart",
@@ -12432,7 +12429,7 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row_eff",
         F.col("cm").alias("col_eff"),
     )
-    p2 = p2.persist()
+    p2 = track_persist(p2)
     s2r = rowmed(p2, "resid", "daypart", "event_type", "rm")
     p3 = p2.join(F.broadcast(s2r), "daypart").select(
         "daypart",
@@ -12442,7 +12439,7 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("row_eff") + F.col("rm")).alias("row_eff"),
         "col_eff",
     )
-    p3 = p3.persist()
+    p3 = track_persist(p3)
     s2c = rowmed(p3, "resid", "event_type", "daypart", "cm")
     return p3.join(F.broadcast(s2c), "event_type").select(
         "daypart",
@@ -14027,11 +14024,10 @@ def q_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ud = (
+    ud = track_persist(
         t(spark, sf_dir, "events")
         .selectExpr("user_id", "unix_micros(ts) div 86400000000 AS d")
         .distinct()
-        .persist()
     )
     days = ud.select("d").distinct()
     bounds = ud.agg(F.min("d").cast("bigint").alias("dmin"))
@@ -14088,11 +14084,10 @@ def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dau_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ud = (
+    ud = track_persist(
         t(spark, sf_dir, "events")
         .selectExpr("user_id", "unix_micros(ts) div 86400000000 AS d")
         .distinct()
-        .persist()
     )
     dau = ud.groupBy("d").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     a, b = ud.alias("a"), ud.alias("b")
@@ -15242,8 +15237,6 @@ def q_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_streaming_spark.plans.rank import global_order, track_persist
-
     e = t(spark, sf_dir, "events").select(
         "user_id",
         F.floor(F.unix_timestamp("ts")).cast("bigint").alias("s"),

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_streaming_spark.plans.rank import global_rank
+from big_data_streaming_spark.plans.rank import global_rank, track_persist
 from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import registry, t, tr
 
@@ -457,12 +457,8 @@ def q_lm_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from raw occurrences to distinct pairs, and the per-doc distinct
     # count becomes a plain COUNT instead of a count_distinct re-shuffle.
     # Measured 5.2 s → ~1.3 s at sf0.1.
-    from pyspark import StorageLevel
-
-    per_doc = (
-        bg.groupBy("doc_id", "bigram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    per_doc = track_persist(
+        bg.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("cnt"))
     )
     cc = per_doc.groupBy("bigram").agg(F.sum("cnt").alias("c"))
     return (
@@ -553,17 +549,16 @@ def q_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HERE so the persisted relation is (doc_id, source, fp) — the text
     # itself never enters the cache (shared-relation policy of
     # q_bigram_lm / minhash band-hash).
-    d = (
+    d = track_persist(
         t(spark, sf_dir, "documents")
         .join(kept_ids, "doc_id")
         .select("doc_id", "source", F.md5("text").alias("fp"))
-        .persist()
     )
     # Stage 2: exact dedup — min doc_id per content fingerprint; only
     # (doc_id, source) survive past here.
     reps = d.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    docs2 = (
-        d.join(reps.select("doc_id"), "doc_id").select("doc_id", "source").persist()
+    docs2 = track_persist(
+        d.join(reps.select("doc_id"), "doc_id").select("doc_id", "source")
     )
     # Stage 3: domain-mixture cap (division-free BIGINT rate test).
     counts = docs2.groupBy("source").agg(F.count(F.lit(1)).alias("n_source"))
@@ -1722,11 +1717,11 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.ascii(F.substring(F.col("bg"), 1, 1)) * 7
         + F.ascii(F.expr("substr(bg, length(bg), 1)"))
     )
-    hashed = bg.select(
+    hashed = track_persist(bg.select(
         "doc_id",
         "lang",
         F.pmod(hv, F.lit(_DSIR_B)).cast("int").alias("bucket"),
-    ).persist()
+    ))
     raw_b = hashed.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("cr")
     )

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_streaming_spark.plans.rank import global_order, global_rank
+from big_data_streaming_spark.plans.rank import global_order, global_rank, track_persist
 from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import (
     dec_avg,
@@ -794,34 +794,33 @@ def q_udf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the rewrite is idempotent (mode=overwrite).
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import hashlib
-
-    from big_data_streaming_spark.plans.layout import write_bucketed
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    li_tab, ord_tab = f"li_bkt_{tag}", f"ord_bkt_{tag}"
-    # Bucketing is a one-time layout investment: if this session already
-    # built both tables and they match the source row counts (testdata is
-    # immutable), reuse them — subsequent invocations measure the join,
-    # not the rewrite. Count probes on bucketed parquet are metadata-cheap.
-    if spark.catalog.tableExists(li_tab) and spark.catalog.tableExists(ord_tab):
-        try:
-            if (
-                spark.table(li_tab).count() == t(spark, sf_dir, "lineitem").count()
-                and spark.table(ord_tab).count()
-                == t(spark, sf_dir, "orders").count()
-            ):
-                return li_tab, ord_tab
-        except Exception:
-            # Catalog entry with missing/partial files (another local
-            # process rebuilt the warehouse dir under us, or a killed
-            # earlier run left debris) — fall through and rebuild.
-            pass
-    # A fresh session's metastore may not know the table while its
-    # warehouse location survives from an earlier session — drop both.
+    import pathlib
     import shutil
     from urllib.parse import urlparse
 
+    from big_data_streaming_spark.plans.layout import write_bucketed
+    from big_data_streaming_spark.sources.catalog import file_fingerprint
+
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    li_tab, ord_tab = f"li_bkt_{tag}", f"ord_bkt_{tag}"
+    # Bucketing is a one-time layout investment: reuse the tables this
+    # session built while the source files are unchanged (their
+    # ``file_fingerprint``, which starts no Spark job), so later calls
+    # measure the join, not the rewrite. The marker is written only once
+    # both tables are complete.
+    sources = [os.path.join(sf_dir, f"{n}.parquet") for n in ("lineitem", "orders")]
+    fingerprint = repr([file_fingerprint(p) for p in sources])
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    marker = os.path.join(wh, ord_tab, "_source_fingerprint")
+    if (
+        spark.catalog.tableExists(li_tab)
+        and spark.catalog.tableExists(ord_tab)
+        and os.path.isfile(marker)
+        and pathlib.Path(marker).read_text() == fingerprint
+    ):
+        return li_tab, ord_tab
+    # A fresh session's metastore may not know the table while its
+    # warehouse location survives from an earlier session — drop both.
     for tab in (li_tab, ord_tab):
         spark.sql(f"DROP TABLE IF EXISTS {tab}")
         loc = os.path.join(wh, tab)
@@ -843,6 +842,7 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         num_buckets=8,
         sort_col="o_orderkey",
     )
+    pathlib.Path(marker).write_text(fingerprint)
     return li_tab, ord_tab
 
 
@@ -1349,9 +1349,9 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the unpersisted plan vs 7 with persist) — at 100 TB that is seven
     # redundant scans+shuffles of the fact table. Same policy as
     # functions/dedup.py:minhash band-hash persist.
-    os_ = li.select("l_orderkey", "l_suppkey").distinct().persist()
+    os_ = track_persist(li.select("l_orderkey", "l_suppkey").distinct())
     a, b = os_.alias("a"), os_.alias("b")
-    ew = (
+    ew = track_persist(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1362,7 +1362,6 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
     )
     # Adaptive strong-tie cut: one 1-row aggregate over the weighted edge
     # relation, broadcast into the filter — no driver collect. The
@@ -1371,11 +1370,10 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = ew.agg(
         (F.lit(1.5) * (F.sum("w").cast("double") / F.count(F.lit(1)))).alias("cut")
     )
-    e = (
+    e = track_persist(
         ew.crossJoin(F.broadcast(cut))
         .filter(F.col("w") > F.col("cut"))
         .select("u", "v")
-        .persist()
     )
     deg = (
         e.select(F.col("u").alias("node"))
@@ -1395,10 +1393,10 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = e_deg.select(
+    oriented = track_persist(e_deg.select(
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("ou"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("ov"),
-    ).persist()
+    ))
     o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
     wedges = o1.join(o2, F.col("o1.ov") == F.col("o2.ou")).select(
         F.col("o1.ou").alias("x"), F.col("o1.ov").alias("y"), F.col("o2.ov").alias("z")
@@ -4053,9 +4051,9 @@ def q_join_skew_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
-    os_ = li.select("l_orderkey", "l_suppkey").distinct().persist()
+    os_ = track_persist(li.select("l_orderkey", "l_suppkey").distinct())
     a, b = os_.alias("a"), os_.alias("b")
-    ew = (
+    ew = track_persist(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -4064,18 +4062,16 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.l_suppkey").alias("u"), F.col("b.l_suppkey").alias("v"))
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
     )
     cut = ew.agg(
         (F.lit(1.5) * (F.sum("w").cast("double") / F.count(F.lit(1)))).alias(
             "thr"
         )
     )
-    e = (
+    e = track_persist(
         ew.crossJoin(F.broadcast(cut))
         .where(F.col("w") > F.col("thr"))
         .select("u", "v")
-        .persist()
     )
     deg = (
         e.select(F.col("u").alias("node"))

@@ -55,6 +55,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_streaming_spark.plans.rank import track_persist
 from big_data_streaming_spark.sources.catalog import (
     _ensure_session_confs,
     local_rows,
@@ -1097,14 +1098,12 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_streaming_spark.operators.asof import asof_join
 
-    marks = (
+    marks = track_persist(
         t(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
         .agg(dec_sum("value", "mark_value"))
         .select("user_id", F.col("w.start").alias("mts"), "mark_value")
-        .persist()
     )
-    marks.count()  # materialize once; every micro-batch reuses it
     out_dir, ckpt_dir = pid_scratch_dirs("stream_asof", sf_dir)
     sdf = _stream(spark, sf_dir, n_parts=4)
 
@@ -1127,7 +1126,6 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     _drain(sdf, batch=enrich, checkpoint=ckpt_dir)
-    marks.unpersist()
     return spark.read.parquet(os.path.join(out_dir, "batch_*"))
 
 

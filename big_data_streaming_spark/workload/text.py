@@ -25,7 +25,7 @@ from big_data_streaming_spark.functions.dedup import (
     ngram_jaccard_pairs,
     simhash64,
 )
-from big_data_streaming_spark.plans.rank import global_ntile, global_rank
+from big_data_streaming_spark.plans.rank import global_ntile, global_rank, track_persist
 from big_data_streaming_spark.sources import local_rows
 from big_data_streaming_spark.workload.common import registry, t, tr
 
@@ -2849,14 +2849,13 @@ def q_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("df").between(_LS_DF_MIN, _LS_DF_MAX))
         .select("shingle")
     )
-    edges = (
+    edges = track_persist(
         sh.join(rare, "shingle")
         .select(F.col("doc_id").alias("a"), "shingle")
         .join(sh.select(F.col("doc_id").alias("b"), "shingle"), "shingle")
         .where(F.col("a") != F.col("b"))
         .select("a", "b")
         .distinct()
-        .persist()
     )
     labels = d.where(F.col("doc_id") % _LS_SEED_MOD == 0).select(
         "doc_id",
@@ -2955,7 +2954,7 @@ def _mg_partition(batches):
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     toks = F.split("text", " ")
-    bi = (
+    bi = track_persist(
         d.select(toks.alias("toks"))
         .where(F.size("toks") >= 2)
         .select(
@@ -2970,7 +2969,6 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("bigram")
         )
-        .persist()
     )
     exact = bi.groupBy("bigram").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
@@ -3218,7 +3216,7 @@ def _maxcover_oracle() -> str:
 def q_maxcover_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     toks = F.split("text", " ")
-    sh = (
+    sh = track_persist(
         d.select("doc_id", toks.alias("toks"))
         .where(F.size("toks") >= 8)
         .select(
@@ -3233,7 +3231,6 @@ def q_maxcover_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("shingle"),
         )
         .distinct()
-        .persist()
     )
     picked: list[int] = []
     rows = []
@@ -3432,7 +3429,7 @@ def q_lsh_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("df").between(_WP_DF_MIN, _WP_DF_MAX))
         .select("fp")
     )
-    capped = fps.join(dfc, "fp").persist()
+    capped = track_persist(fps.join(dfc, "fp"))
     perdoc = capped.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("nf")
     )

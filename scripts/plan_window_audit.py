@@ -46,7 +46,6 @@ def main() -> None:
     carts: dict[str, object] = {}
     for name, fn in QUERIES.items():
         try:
-            spark.catalog.clearCache()
             df = fn(spark, "/root/testdata/sf0.001")
             c = unpartitioned_window_count(df)
             if c:

@@ -344,3 +344,24 @@ def test_ensure_table_underscore_is_not_a_wildcard(spark, derby_url):
     # both now exist; both re-ensures are no-ops
     assert not ensure_table(spark, derby_url, "wildxt", schema, driver=DRIVER)
     assert not ensure_table(spark, derby_url, "wild_t", schema, driver=DRIVER)
+
+
+def test_jdbc_idempotent_underscore_is_not_a_wildcard(spark, derby_url):
+    """The idempotent writer's existence probe is the exact-name probe of
+    ``ensure_table``: with 'wipxt' present, a first write to the missing
+    'wip_t' must not take 'wipxt' for it and DELETE from a table that
+    does not exist."""
+    from big_data_streaming_spark.streaming.sinks import write_jdbc_idempotent
+
+    _write(spark.range(3).selectExpr("id", "0 AS _batch_id"), derby_url, "wipxt")
+    src = spark.range(5).select("id")
+    write_jdbc_idempotent(src, derby_url, "wip_t", 0, driver=DRIVER)
+    write_jdbc_idempotent(src, derby_url, "wip_t", 0, driver=DRIVER)  # replay
+    back = (
+        spark.read.format("jdbc")
+        .option("url", derby_url)
+        .option("dbtable", "wip_t")
+        .option("driver", DRIVER)
+        .load()
+    )
+    assert back.count() == 5
