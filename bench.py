@@ -190,20 +190,24 @@ def main() -> None:
     from big_data_streaming_spark import measure
     from big_data_streaming_spark.session import get_spark
 
+    # Provenance (VERDICT r10 task 3): the tree SHA + UTC timestamp live
+    # INSIDE the artifact, so closing-tree chronology is provable rather
+    # than narrated from mtimes. Stamped before the first key runs, so
+    # ``tree_dirty`` describes the tree this run imported, not a file
+    # edited while it ran.
+    try:
+        sys.path.insert(
+            0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
+        )
+        from provenance import stamp
+
+        provenance = stamp()
+    except Exception:
+        provenance = {}  # a bare checkout without git still benches
+
     spark = get_spark("bdss-bench")
     spark.sparkContext.setLogLevel("ERROR")
     measure.warm_up(spark)
-
-    # Box-drift probe (VERDICT r7 task 4): a FIXED 3-query workload timed
-    # best-of-3 at bench start, recorded beside the per-query detail.
-    # Round-over-round headline deltas divide by this probe's total to
-    # separate "the code got slower" from "the box was slower that day"
-    # (the r6→r7 +21% took real forensics to attribute to box drift).
-    # Its plans are pinned to the pre-r12 shape (measure.box_probe).
-    # Side effect, documented: these three keys are warmed here, so their
-    # "cold" entries below are steady-state from round 8 on (~1 s of the
-    # cold total; BENCH_NOTES.md round 8).
-    probe = measure.box_probe(spark, sf_dir)
 
     # Two runs per query, report the min: run 1 pays one-time plan/codegen
     # compilation for that query shape; run 2 is steady-state execution —
@@ -245,34 +249,9 @@ def main() -> None:
     detail["shuffle_partitions"] = int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
-    detail["box_probe"] = {
-        "queries": probe,
-        "total_best_sec": round(sum(probe.values()), 3),
-        # Probe plans are pinned to the pre-r12 shape (scan rebalance
-        # off, 32 shuffle partitions) so probe normalization is
-        # comparable across ALL rounds; see measure.box_probe.
-        "scan_rebalance": "off",
-        "shuffle_partitions": 32,
-        # These keys run 3x in the probe BEFORE the headline loop, so
-        # their queries_cold entries above are steady-state, not cold —
-        # cross-round cold comparisons must exclude them mechanically
-        # (ADVICE r8; BENCH_NOTES.md round 8).
-        "warmed_by_probe": list(measure.PROBE_KEYS),
-    }
     detail["counts"] = counts
     detail["date"] = time.strftime("%Y-%m-%d")
-    # Provenance (VERDICT r10 task 3): the tree SHA + UTC timestamp at
-    # generation time live INSIDE the artifact, so closing-tree
-    # chronology is provable rather than narrated from mtimes.
-    try:
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
-        )
-        from provenance import stamp
-
-        detail.update(stamp())
-    except Exception:
-        pass  # a bare checkout without git still benches
+    detail.update(provenance)
     print(json.dumps(detail))
     # Persist the full per-query map: BENCH_DETAIL.json (latest), plus a
     # per-round snapshot BENCH_DETAIL_r{N}.json when SPARK_GRAFT_ROUND is

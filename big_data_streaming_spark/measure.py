@@ -12,13 +12,11 @@ skips (their shuffle output already exists) are not counted: their
 number varies from run to run of one key, that of the stages that ran
 does not.
 
-``bench.py``, ``scripts/profile_keys.py`` and
-``scripts/quiet_box_anchor.py`` all measure through this module.
+``bench.py`` and ``scripts/profile_keys.py`` measure through this module.
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import SparkSession
@@ -27,8 +25,6 @@ from big_data_streaming_spark.plans.rank import release_persisted
 from big_data_streaming_spark.workload import QUERIES
 
 WARMUP_SF_DIR = "/root/testdata/sf0.001"
-# The box-drift probe: a fixed 3-key workload timed best-of-3.
-PROBE_KEYS = ("q_tpch_q1", "q_topk", "q_groupby_agg")
 
 COUNTS = (
     "jobs",
@@ -112,11 +108,6 @@ def runs(spark: SparkSession, name: str, sf_dir: str, n: int) -> list[dict]:
     return [run_key(spark, name, sf_dir) for _ in range(n)]
 
 
-def best_wall_s(spark: SparkSession, name: str, sf_dir: str, n: int) -> float:
-    """Best-of-``n`` wall seconds of one key, rounded to ms."""
-    return round(min(r["wall_s"] for r in runs(spark, name, sf_dir, n)), 3)
-
-
 def warm_up(spark: SparkSession) -> None:
     """One batch key (JIT, codegen, Arrow) and one streaming key (stream
     engine and state-store classes) at sf0.001, so later timings measure
@@ -124,24 +115,3 @@ def warm_up(spark: SparkSession) -> None:
     run_key(spark, "q_flagship", WARMUP_SF_DIR)
     run_key(spark, "q_stream_window_tumbling", WARMUP_SF_DIR)
 
-
-def box_probe(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Best-of-3 wall seconds of each ``PROBE_KEYS`` member.
-
-    The probe keeps the plans every round's probe measured: the scan
-    rebalance off (``SPARK_GRAFT_SCAN_REBALANCE`` is read per query
-    construction, so scoping it here is exact) and 32 shuffle partitions,
-    the value used before partitions followed ``SPARK_GRAFT_CPUS``. Both
-    are restored afterwards."""
-    prev_rebalance = os.environ.get("SPARK_GRAFT_SCAN_REBALANCE")
-    prev_partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    os.environ["SPARK_GRAFT_SCAN_REBALANCE"] = "off"
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        return {name: best_wall_s(spark, name, sf_dir, 3) for name in PROBE_KEYS}
-    finally:
-        if prev_rebalance is None:
-            del os.environ["SPARK_GRAFT_SCAN_REBALANCE"]
-        else:
-            os.environ["SPARK_GRAFT_SCAN_REBALANCE"] = prev_rebalance
-        spark.conf.set("spark.sql.shuffle.partitions", prev_partitions)

@@ -199,10 +199,11 @@ def _rebalance_unsplittable(
     loader-level rebalance was measured first and rejected — it wins
     big on compute-bound keys (q_embed_neardup 3.8 → 1.5 s) but taxes
     every cheap scan-shaped key ~0.3-0.5 s for the extra stage, a net
-    loss across a 100-key bench. ``SPARK_GRAFT_SCAN_REBALANCE=off``
-    disables it globally (A/B measurement and plan-shape comparisons)."""
-    if os.environ.get("SPARK_GRAFT_SCAN_REBALANCE", "auto") == "off":
-        return df
+    loss across a 100-key bench. Alternating without/with pairs on 4
+    cores keep the per-key opt-in: on the same 1 MB ``lineitem`` one
+    key halves its wall time and another gains nothing, so a rule on
+    the table alone cannot pick the keys (BENCH_NOTES.md, "Probe
+    normalization retired")."""
     total_bytes, total_rgs = _scan_units(spark, path)
     if total_bytes < _REBALANCE_MIN_BYTES:
         return df

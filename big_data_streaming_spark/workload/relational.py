@@ -82,8 +82,7 @@ def q_scan_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tr(): same single-fused-scan-task decimal aggregation as q_tpch_q1
-    # (round-11 profiler), unfrozen in round 12 under the re-baselined
-    # box probe (bench.py pins probe runs to rebalance-off).
+    # (round-11 profiler).
     li = tr(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))

@@ -73,11 +73,8 @@ def _ts(s: str) -> F.Column:
 )
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tr(): the widest decimal aggregation in the suite ran as ONE fused
-    # scan task on the single-row-group bench layout (round-11 profiler);
-    # frozen through r11 because this is a box-probe key — round 12
-    # re-baselined the probe (bench.py pins the probe runs to
-    # rebalance-off), unfreezing the win. No-op at production row-group
-    # counts (guide §2.5/§6).
+    # scan task on the single-row-group bench layout (round-11 profiler).
+    # No-op at production row-group counts (guide §2.5/§6).
     li = tr(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     charge = disc_price * (F.lit(1.0) + F.col("l_tax"))

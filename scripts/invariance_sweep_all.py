@@ -27,6 +27,9 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from provenance import stamp  # noqa: E402
 
 CONF_A = {
     "spark.sql.shuffle.partitions": "5",
@@ -118,6 +121,8 @@ def main() -> None:
             for k, v in prev.items():
                 spark.conf.set(k, v)
 
+    # Stamped before the first key runs: the tree this run imported.
+    provenance = stamp()
     out: dict[str, dict] = {}
     t0 = time.time()
     names = [n for n in QUERIES if only is None or n in only]
@@ -149,12 +154,9 @@ def main() -> None:
         tag += f"_{axis}"
     path = os.path.join(REPO, f"INVARIANCE_r{tag}.json")
     with open(path, "w") as fh:
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from provenance import stamp
-
         json.dump(
             {
-                **stamp(),  # tree SHA + UTC (VERDICT r10 task 3)
+                **provenance,  # tree SHA + UTC (VERDICT r10 task 3)
                 "sf_dir": sf_dir,
                 "axes": {"aqe": "AQE on vs off (fixed partitioning)", "ansi": "ANSI mode on vs off (fixed partitioning)", "codegen": "whole-stage codegen on vs fully interpreted", "partitioning": "shuffle.partitions 5 vs 32 AND maxPartitionBytes 128MiB vs 1MiB"}[axis],
                 "n_keys": len(names),

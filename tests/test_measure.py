@@ -4,7 +4,6 @@ and its one-home property."""
 from __future__ import annotations
 
 import ast
-import os
 import pathlib
 
 import pytest
@@ -42,27 +41,6 @@ def test_run_key_counts_construction_and_action_jobs(spark, monkeypatch):
     }
     assert rec["shuffle_write_bytes"] > 0
     assert rec["shuffle_read_bytes"] == rec["shuffle_write_bytes"]
-
-
-def test_box_probe_pins_plans_and_restores(spark, monkeypatch):
-    seen = []
-
-    def probe_key(spark, sf_dir):
-        seen.append((
-            os.environ.get("SPARK_GRAFT_SCAN_REBALANCE"),
-            spark.conf.get("spark.sql.shuffle.partitions"),
-        ))
-        return spark.range(1)
-
-    monkeypatch.setitem(QUERIES, "q_measure_probe", probe_key)
-    monkeypatch.setattr(measure, "PROBE_KEYS", ("q_measure_probe",))
-    monkeypatch.delenv("SPARK_GRAFT_SCAN_REBALANCE", raising=False)
-    partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    probe = measure.box_probe(spark, "unused")
-    assert list(probe) == ["q_measure_probe"]
-    assert seen == [("off", "32")] * 3
-    assert "SPARK_GRAFT_SCAN_REBALANCE" not in os.environ
-    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
 
 
 def test_only_measure_runs_keys_or_reads_the_status_store():

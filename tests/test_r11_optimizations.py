@@ -31,14 +31,16 @@ def test_rebalance_fires_only_below_floor(spark):
     )
 
     # documents at sf0.001 is a single-row-group file well under the
-    # size floor -> rebalance=True must still be a no-op there.
+    # size floor -> rebalance=True must still be a no-op there. The
+    # precondition is asserted, so a larger fixture fails here instead
+    # of passing without checking anything.
     path = os.path.join(SF, "documents.parquet")
     total_bytes, total_rgs = _scan_units(spark, path)
     assert total_rgs >= 1
+    assert total_bytes < _REBALANCE_MIN_BYTES
     plain = load_table(spark, SF, "documents")
     reb = load_table(spark, SF, "documents", rebalance=True)
-    if total_bytes < _REBALANCE_MIN_BYTES:
-        assert reb.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
+    assert reb.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
 
 
 def test_rebalance_value_neutral_where_it_fires(spark):
