@@ -27,12 +27,12 @@ from big_data_streaming_spark.plans.rank import track_persist
 _SEED = 42
 
 
-def token_hashes(tokens: Column, seed: int = _SEED) -> Column:
+def token_hashes(tokens: Column) -> Column:
     """64-bit hash per distinct token (xxhash64, JVM-side)."""
-    return F.transform(F.array_distinct(tokens), lambda tk: F.xxhash64(tk, F.lit(seed)))
+    return F.transform(F.array_distinct(tokens), lambda tk: F.xxhash64(tk, F.lit(_SEED)))
 
 
-def minhash_signature(tokens: Column, num_hashes: int = 32, seed: int = _SEED) -> Column:
+def minhash_signature(tokens: Column, num_hashes: int = 32) -> Column:
     """MinHash signature: array of ``num_hashes`` minima of independent hash
     families.
 
@@ -49,7 +49,7 @@ def minhash_signature(tokens: Column, num_hashes: int = 32, seed: int = _SEED) -
     argument to the ELEMENT INDEX — families must close over ``i`` via a
     factory, never a default argument.
     """
-    return minhash_signature_from_hashes(token_hashes(tokens, seed), num_hashes)
+    return minhash_signature_from_hashes(token_hashes(tokens), num_hashes)
 
 
 def minhash_signature_from_hashes(base_hashes: Column, num_hashes: int = 32) -> Column:
@@ -70,8 +70,8 @@ def minhash_signature_from_hashes(base_hashes: Column, num_hashes: int = 32) -> 
     return F.array(*mins)
 
 
-def simhash64(tokens: Column, num_bits: int = 64, seed: int = _SEED) -> Column:
-    """SimHash as a ``num_bits``-char bitstring ('0'/'1').
+def simhash64(tokens: Column) -> Column:
+    """SimHash as a 64-char bitstring ('0'/'1').
 
     Classic Charikar construction: each token votes +1/-1 per bit of its
     64-bit hash; the sign of the per-bit tally is the fingerprint bit.
@@ -79,17 +79,17 @@ def simhash64(tokens: Column, num_bits: int = 64, seed: int = _SEED) -> Column:
     63 while staying groupable and human-debuggable.
 
     Cost shape: ONE fold over the token-hash array accumulating a
-    ``num_bits``-wide tally vector (``aggregate`` + ``zip_with``). The
+    64-wide tally vector (``aggregate`` + ``zip_with``). The
     previous form ran one ``aggregate`` per bit — 64 folds, each
     re-evaluating the tokenize→distinct→hash chain inside the same
     projection (measured 4.6 s → 1.9 s on 5 k docs at sf0.1)."""
-    hashes = token_hashes(tokens, seed)
+    hashes = token_hashes(tokens)
 
     def votes(h: Column) -> Column:
         # +1/-1 per bit, via literal masks (bit 63 = sign: 1<<63 would
         # overflow the signed long literal)
         vs = []
-        for b in range(num_bits):
+        for b in range(64):
             if b == 63:
                 bit_set = h < 0
             else:
@@ -99,7 +99,7 @@ def simhash64(tokens: Column, num_bits: int = 64, seed: int = _SEED) -> Column:
 
     tallies = F.aggregate(
         hashes,
-        F.array_repeat(F.lit(0), num_bits),
+        F.array_repeat(F.lit(0), 64),
         lambda acc, h: F.zip_with(acc, votes(h), lambda a, v: a + v),
     )
     return F.array_join(

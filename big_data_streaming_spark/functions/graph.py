@@ -24,9 +24,7 @@ def minhash_dedup_components(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 32,
     bands: int = 4,
-    max_iter: int = 20,
 ) -> DataFrame:
     """Near-dup clustering with TRUE transitive closure: star edges
     (doc → per-bucket min doc) from the LSH bands, then connected
@@ -39,7 +37,7 @@ def minhash_dedup_components(
 
     from big_data_streaming_spark.functions.dedup import _band_hashes
 
-    bh = _band_hashes(df, id_col, text_col, num_hashes, bands)
+    bh = _band_hashes(df, id_col, text_col, 32, bands)
     # Per-bucket representative via a window MIN over (band, bh) instead
     # of groupBy + join-back (round 12, guide §2.4): the join form
     # evaluated the whole minhash band-hash subtree TWICE (once per join
@@ -54,7 +52,7 @@ def minhash_dedup_components(
         .select(F.col(id_col).alias("src"), F.col("rep").alias("dst"))
         .distinct()
     )
-    cc = connected_components_star(star, max_iter=max_iter)
+    cc = connected_components_star(star, max_iter=20)
     all_docs = df.select(F.col(id_col))
     return (
         all_docs.join(cc, all_docs[id_col] == cc.node, "left")
@@ -68,12 +66,11 @@ def minhash_dedup_components(
 
 def connected_components_star(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 25,
     persist_edges: bool = False,
 ) -> DataFrame:
-    """(node, component) via alternating large-star / small-star rounds
+    """(node, component) of the ``src``/``dst`` edge relation via
+    alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     O(log n) rounds on ANY graph shape, where min-label propagation needs
     O(diameter). The 100 TB form for deep/chainy graphs:
@@ -100,7 +97,7 @@ def connected_components_star(
     # 2.35 s), while cheap subtrees pay more for the cache write + read
     # than the recompute costs (q_dbscan_grid 5.3 → 7.1 s WITH persist,
     # q_dedup_components likewise negative).
-    base = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    base = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     if persist_edges:
         from big_data_streaming_spark.plans.rank import track_persist
 
@@ -215,11 +212,9 @@ def bfs_hops(
     edges: DataFrame,
     source,
     hops: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
-    """(node, dist) for every node within ``hops`` directed edges of
-    ``source`` — bounded-frontier BFS as iterated join + min-aggregate.
+    """(node, dist) for every node within ``hops`` directed ``src`` →
+    ``dst`` edges of ``source`` — bounded-frontier BFS as iterated join + min-aggregate.
 
     Each round expands the CURRENT reach set along the edge relation and
     folds with MIN(dist); ``hops`` rounds compute exact min-hop distances
@@ -229,15 +224,15 @@ def bfs_hops(
     derived edge relation should persist it — it is probed every round.
     """
     reach = (
-        edges.select(F.col(src).alias("node"))
+        edges.select(F.col("src").alias("node"))
         .limit(0)
         .withColumn("dist", F.lit(0))
     )
     reach = local_rows(edges.sparkSession, [(source, 0)], reach.schema)
     for _ in range(hops):
         expanded = edges.join(
-            F.broadcast(reach), F.col(src) == F.col("node")
-        ).select(F.col(dst).alias("node"), (F.col("dist") + 1).alias("dist"))
+            F.broadcast(reach), F.col("src") == F.col("node")
+        ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
         # Truncate lineage each round (as connected_components_star
         # does): without it, round i re-executes all previous rounds' join+agg
         # under the re-broadcast — O(hops²) recompute and ever-deeper
@@ -255,28 +250,26 @@ def bellman_ford_hops(
     edges: DataFrame,
     source,
     hops: int,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
 ) -> DataFrame:
     """(node, dist) min-PLUS relaxation: exact cheapest path of at most
     ``hops`` edges from ``source`` over a weighted directed edge relation
+    (``src``, ``dst``, weight ``w``)
     — the weighted twin of :func:`bfs_hops` (same broadcast-frontier
     rounds; the fold is min over dist + w instead of min over hop
     counts). Negative weights are fine within the hop bound (no cycles
     complete in < hops relaxations by construction)."""
     reach = (
-        edges.select(F.col(src).alias("node"))
+        edges.select(F.col("src").alias("node"))
         .limit(0)
         .withColumn("dist", F.lit(0).cast("bigint"))
     )
     reach = local_rows(edges.sparkSession, [(source, 0)], reach.schema)
     for _ in range(hops):
         expanded = edges.join(
-            F.broadcast(reach), F.col(src) == F.col("node")
+            F.broadcast(reach), F.col("src") == F.col("node")
         ).select(
-            F.col(dst).alias("node"),
-            (F.col("dist") + F.col(weight)).alias("dist"),
+            F.col("dst").alias("node"),
+            (F.col("dist") + F.col("w")).alias("dist"),
         )
         reach = (
             reach.unionByName(expanded)

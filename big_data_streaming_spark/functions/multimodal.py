@@ -70,7 +70,7 @@ MEDIA_FEATURES_SCHEMA = StructType(
 )
 
 
-def decode_media(df: DataFrame, *, fake: bool = False, feature_dim: int = 4) -> DataFrame:
+def decode_media(df: DataFrame, *, fake: bool = False) -> DataFrame:
     """Feature-extract media payloads via Arrow-batched ``mapInPandas``.
 
     ``fake=False`` raises ``NotImplementedError`` from inside the UDF on
@@ -101,19 +101,15 @@ def decode_media(df: DataFrame, *, fake: bool = False, feature_dim: int = 4) -> 
             for buf in payloads:
                 b = bytes(buf) if buf is not None else b""
                 n = len(b)
-                head = b[:32]  # fixed probe window: dims don't change base feats
-                vec = [
-                    float(n),
-                    float(sum(head) % 997),
-                    float(head[0]) if head else 0.0,
-                    float(n % 251),
-                ][:feature_dim]
-                # feature_dim > 4 extends with deterministic derived
-                # components instead of silently capping at 4.
-                vec += [
-                    float((n * (i + 1)) % 1013) for i in range(len(vec), feature_dim)
-                ]
-                feats.append(vec)
+                head = b[:32]  # fixed probe window
+                feats.append(
+                    [
+                        float(n),
+                        float(sum(head) % 997),
+                        float(head[0]) if head else 0.0,
+                        float(n % 251),
+                    ]
+                )
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -307,10 +303,6 @@ def resize_raster(
     df: DataFrame,
     out_width: int,
     out_height: int,
-    *,
-    width_col: str = "width",
-    height_col: str = "height",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """North-star 'resize' kernel — genuinely functional, no codec needed:
     nearest-neighbor resampling of raw single-channel rasters
@@ -332,7 +324,7 @@ def resize_raster(
         for pdf in batches:
             out_rows = {"doc_id": [], "out_width": [], "out_height": [], "payload": []}
             for doc_id, w, h, payload in zip(
-                pdf["doc_id"], pdf[width_col], pdf[height_col], pdf[payload_col]
+                pdf["doc_id"], pdf["width"], pdf["height"], pdf["payload"]
             ):
                 # NULL/NaN dims arrive from header parsers on unknown
                 # signatures — corrupt-raster policy covers them too.
@@ -355,20 +347,14 @@ def resize_raster(
                 out_rows["payload"].append(resized.tobytes())
             yield pd.DataFrame(out_rows)
 
-    narrow = df.select("doc_id", width_col, height_col, payload_col)
+    narrow = df.select("doc_id", "width", "height", "payload")
     return narrow.mapInPandas(run, RESIZED_SCHEMA)
 
 
 DHASH_SCHEMA = "doc_id bigint, dhash_hi bigint, dhash_lo bigint"
 
 
-def dhash_raster(
-    df: DataFrame,
-    *,
-    width_col: str = "width",
-    height_col: str = "height",
-    payload_col: str = "payload",
-) -> DataFrame:
+def dhash_raster(df: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) of single-channel rasters —
     the image analogue of the text near-dup fingerprints: bit k of the
     hash is 1 iff pixel (i, j) < pixel (i, j+1) on a (w, h) grayscale
@@ -397,7 +383,7 @@ def dhash_raster(
         for pdf in batches:
             out = {"doc_id": [], "dhash_hi": [], "dhash_lo": []}
             for doc_id, w, h, payload in zip(
-                pdf["doc_id"], pdf[width_col], pdf[height_col], pdf[payload_col]
+                pdf["doc_id"], pdf["width"], pdf["height"], pdf["payload"]
             ):
                 if payload is None or w is None or h is None:
                     continue
@@ -422,7 +408,7 @@ def dhash_raster(
                 out["dhash_lo"].append(val & 0xFFFFFFFF)
             yield pd.DataFrame(out)
 
-    narrow = df.select("doc_id", width_col, height_col, payload_col)
+    narrow = df.select("doc_id", "width", "height", "payload")
     return narrow.mapInPandas(run, DHASH_SCHEMA)
 
 
@@ -435,18 +421,16 @@ BYTE_HISTOGRAM_SCHEMA = StructType(
 )
 
 
-def byte_histogram(df: DataFrame, *, payload_col: str = "media.payload", n_bins: int = 16) -> DataFrame:
-    """Arrow-batched payload byte histogram: bin = byte_value // (256 //
-    n_bins). The luminance-histogram shape of image triage (dark/blank/
+def byte_histogram(df: DataFrame) -> DataFrame:
+    """Arrow-batched ``media.payload`` byte histogram in 16 bins: bin =
+    byte_value // 16. The luminance-histogram shape of image triage (dark/blank/
     over-exposed detection) run on the raw payload bytes — one
     vectorized np.bincount per row, no codec required. Only (doc_id,
     payload) cross the Arrow boundary; zero-count bins are not emitted.
     At 100 TB: mapInPandas over a narrow projection, O(bytes) per row,
-    output O(n_bins) per row."""
+    output O(16) per row."""
     import numpy as np
     import pandas as pd
-
-    width = 256 // n_bins
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -455,14 +439,14 @@ def byte_histogram(df: DataFrame, *, payload_col: str = "media.payload", n_bins:
                 if payload is None:
                     continue
                 arr = np.frombuffer(payload, dtype=np.uint8)
-                counts = np.bincount(arr // width, minlength=n_bins)
+                counts = np.bincount(arr // 16, minlength=16)
                 for b in np.nonzero(counts)[0]:
                     out["doc_id"].append(doc_id)
                     out["bin"].append(int(b))
                     out["n_bytes"].append(int(counts[b]))
             yield pd.DataFrame(out)
 
-    narrow = df.select("doc_id", F.col(payload_col).alias("payload"))
+    narrow = df.select("doc_id", F.col("media.payload").alias("payload"))
     return narrow.mapInPandas(run, BYTE_HISTOGRAM_SCHEMA)
 
 

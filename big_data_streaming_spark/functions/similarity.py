@@ -55,8 +55,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int | None = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact brute-force top-k cosine neighbors for each query vector.
 
@@ -68,11 +66,11 @@ def cosine_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
         )
     )
     scored = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+        corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
         .join(q, F.col("neighbor_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -124,8 +122,6 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cluster_col: str = "label",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -137,9 +133,9 @@ def ivf_topk(
     over a full scan. Pass prebuilt ``centroids`` to amortize the
     quantizer across queries (the index-build-once pattern)."""
     if centroids is None:
-        centroids = build_centroids(corpus, cluster_col, vec_col)
+        centroids = build_centroids(corpus, cluster_col)
     centroids = F.broadcast(centroids)
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     routed = (
         q.crossJoin(centroids)
         .select(
@@ -159,8 +155,8 @@ def ivf_topk(
     )
     hits = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
             F.col(cluster_col).alias("centroid_id"),
         )
         .join(F.broadcast(routed), "centroid_id")
@@ -209,21 +205,19 @@ def fixed_hyperplanes(dim: int, n: int = 8, seed: int = 42) -> list[list[float]]
 def hyperplane_lsh_neardup(
     corpus: DataFrame,
     min_cosine: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via hyperplane-LSH bucketing +
     exact cosine verification. Returns (vec_a, vec_b, cosine ≥ min_cosine)."""
-    dim = corpus.select(F.size(vec_col).alias("d")).first()["d"]
-    sig = hyperplane_signature(F.col(vec_col), fixed_hyperplanes(dim, n_planes))
+    dim = corpus.select(F.size("embedding").alias("d")).first()["d"]
+    sig = hyperplane_signature(F.col("embedding"), fixed_hyperplanes(dim, n_planes))
     tagged = corpus.select(
-        F.col(id_col), F.col(vec_col).alias("v"), sig.alias("bucket")
+        F.col("vec_id"), F.col("embedding").alias("v"), sig.alias("bucket")
     )
     a = tagged.select(
-        F.col(id_col).alias("vec_a"), F.col("v").alias("va"), "bucket"
+        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), "bucket"
     )
-    b = tagged.select(F.col(id_col).alias("vec_b"), F.col("v").alias("vb"), "bucket")
+    b = tagged.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), "bucket")
     return (
         a.join(b, ["bucket"])
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -236,8 +230,6 @@ def kmeans_assign(
     corpus: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic Lloyd's k-means with a FIXED iteration count,
     unrolled into one static plan — no driver-side loop state, no
@@ -259,11 +251,11 @@ def kmeans_assign(
     (id, cid, d2) — assignment after the last iteration and the squared
     L2 distance to the winning centroid.
     """
-    emb = corpus.select(id_col, vec_col)
-    assigned = emb.withColumn("cid", (F.col(id_col) % k).cast("int"))
+    emb = corpus.select("vec_id", "embedding")
+    assigned = emb.withColumn("cid", (F.col("vec_id") % k).cast("int"))
     for _ in range(iters):
         dims = assigned.select(
-            "cid", F.posexplode(_as_double(F.col(vec_col))).alias("i", "x")
+            "cid", F.posexplode(_as_double(F.col("embedding"))).alias("i", "x")
         )
         cent = dims.groupBy("cid", "i").agg(
             (
@@ -280,7 +272,8 @@ def kmeans_assign(
         # once before the k-way cross, not once per candidate pair. The
         # values are bit-identical to inline evaluation, so the oracle
         # (which writes the dot products inline) still matches exactly.
-        crossed = emb.withColumn("_xx", dot(F.col(vec_col), F.col(vec_col))).crossJoin(
+        xx = dot(F.col("embedding"), F.col("embedding"))
+        crossed = emb.withColumn("_xx", xx).crossJoin(
             F.broadcast(
                 cvec.select(
                     F.col("cid").alias("_cc"),
@@ -290,37 +283,35 @@ def kmeans_assign(
             )
         )
         d2 = (
-            F.col("_xx") - F.lit(2.0) * dot(F.col(vec_col), F.col("centroid"))
+            F.col("_xx") - F.lit(2.0) * dot(F.col("embedding"), F.col("centroid"))
         ) + F.col("_cc2")
         assigned = (
             crossed.select(
-                id_col,
+                "vec_id",
                 F.col("_cc").alias("cid"),
-                F.col(vec_col),
+                F.col("embedding"),
                 d2.alias("d2"),
             )
-            .groupBy(id_col)
+            .groupBy("vec_id")
             .agg(
                 F.min(
-                    F.struct(F.col("d2"), F.col("cid"), F.col(vec_col).alias("_v"))
+                    F.struct(F.col("d2"), F.col("cid"), F.col("embedding").alias("_v"))
                 ).alias("_m")
             )
             .select(
-                id_col,
+                "vec_id",
                 F.col("_m.cid").alias("cid"),
-                F.col("_m._v").alias(vec_col),
+                F.col("_m._v").alias("embedding"),
                 F.col("_m.d2").alias("d2"),
             )
         )
-    return assigned.select(id_col, "cid", "d2")
+    return assigned.select("vec_id", "cid", "d2")
 
 
 def kmeans_ivf_index(
     corpus: DataFrame,
     k: int = 4,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """Build a GEOMETRIC IVF index: deterministic k-means assigns each
     vector to a cluster, and the per-cluster means become the coarse
@@ -336,11 +327,11 @@ def kmeans_ivf_index(
     assignment is the partitionBy column on write, so probing = partition
     pruning; the k-means pass is the index build, run once per corpus
     version."""
-    km = kmeans_assign(corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
+    km = kmeans_assign(corpus, k=k, iters=iters)
     indexed = corpus.join(
-        km.select(id_col, F.col("cid").alias("ivf_cluster")), id_col
+        km.select("vec_id", F.col("cid").alias("ivf_cluster")), "vec_id"
     )
-    centroids = build_centroids(indexed, cluster_col="ivf_cluster", vec_col=vec_col)
+    centroids = build_centroids(indexed, cluster_col="ivf_cluster")
     return indexed, centroids
 
 
@@ -348,8 +339,6 @@ def maxsim_topk(
     emb: DataFrame,
     query_filter: Column,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_chunks: int = 4,
     k: int = 3,
     scale: int = 10_000,
@@ -372,7 +361,7 @@ def maxsim_topk(
     """
     if n_chunks < 1:
         raise ValueError(f"maxsim_topk: n_chunks must be >= 1, got {n_chunks}")
-    dim_expr = F.size(vec_col)
+    dim_expr = F.size("embedding")
     # Contract: dim must split into n_chunks equal token vectors. With
     # dim < n_chunks the old code computed _cw = 0 and the /0 and pmod-0
     # downstream yielded NULL chunk ids — silently empty scores; a
@@ -392,9 +381,9 @@ def maxsim_topk(
         emb.withColumn("_isq", query_filter)
         .withColumn("_cw", _cw_expr)
         .select(
-            F.col(id_col).alias("_vid"),
+            F.col("vec_id").alias("_vid"),
             "_isq",
-            F.posexplode(vec_col).alias("_i", "_f"),
+            F.posexplode("embedding").alias("_i", "_f"),
             "_cw",
         )
         .select(
@@ -509,13 +498,13 @@ def cov_matrix(
 # Shared SQL expression texts for exact-integer vector arithmetic (used
 # by the RRF and MMR retrieval queries; single source so accumulator
 # fixes cannot drift between call sites).
-def quantize_int_expr(vec_col: str, scale: int = 127) -> str:
-    """SQL text: per-element floor(x*scale + 0.5) quantization of an
+def quantize_int_expr(vec_col: str) -> str:
+    """SQL text: per-element floor(x*127 + 0.5) quantization of an
     array<float> column to array<bigint> — the exact-integer domain all
     cross-engine dot products run in."""
     return (
         f"transform({vec_col}, e ->"
-        f" CAST(floor(CAST(e AS DOUBLE) * {scale} + 0.5) AS BIGINT))"
+        f" CAST(floor(CAST(e AS DOUBLE) * 127 + 0.5) AS BIGINT))"
     )
 
 

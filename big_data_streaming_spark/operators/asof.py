@@ -153,11 +153,10 @@ def asof_join(
     left_ts: str = "ts",
     right_ts: str = "ts",
     right_payload: Sequence[str] = (),
-    suffix: str = "_right",
     tolerance: str | datetime.timedelta | None = None,
 ) -> DataFrame:
     """Backward-inclusive as-of join. Returns every left row plus
-    ``<payload><suffix>`` columns from the latest right row at or before
+    ``<payload>_right`` columns from the latest right row at or before
     its timestamp (nulls when no right row precedes it).
 
     ``tolerance`` (a ``datetime.timedelta`` or a strict ``"<int> <unit>"``
@@ -195,7 +194,7 @@ def asof_join(
     if tolerance is None:
         return out.select(
             *lcols,
-            *[F.col(f"_carry.{c}").alias(f"{c}{suffix}") for c in right_payload],
+            *[F.col(f"_carry.{c}").alias(f"{c}_right") for c in right_payload],
         )
     fresh = F.col("_carry._rts") >= (
         F.col(left_ts) - _tolerance_interval(tolerance)
@@ -203,7 +202,7 @@ def asof_join(
     return out.select(
         *lcols,
         *[
-            F.when(fresh, F.col(f"_carry.{c}")).alias(f"{c}{suffix}")
+            F.when(fresh, F.col(f"_carry.{c}")).alias(f"{c}_right")
             for c in right_payload
         ],
     )
@@ -216,7 +215,6 @@ def asof_join_forward(
     left_ts: str = "ts",
     right_ts: str = "ts",
     right_payload: Sequence[str] = (),
-    suffix: str = "_right",
 ) -> DataFrame:
     """Forward-inclusive as-of join: every left row plus the payload of
     the EARLIEST right row at or after its timestamp ("the next quote
@@ -244,7 +242,7 @@ def asof_join_forward(
     )
     return carried.filter(F.col("_side") == 0).select(
         *lcols,
-        *[F.col(f"_carry.{c}").alias(f"{c}{suffix}") for c in right_payload],
+        *[F.col(f"_carry.{c}").alias(f"{c}_right") for c in right_payload],
     )
 
 
@@ -255,7 +253,6 @@ def asof_join_nearest(
     left_ts: str = "ts",
     right_ts: str = "ts",
     right_payload: Sequence[str] = (),
-    suffix: str = "_right",
 ) -> DataFrame:
     """Nearest as-of join: every left row plus the payload of whichever
     right row is CLOSEST in time (either direction) within the key —
@@ -267,7 +264,7 @@ def asof_join_nearest(
     windows over the same (keys) partitioning and (ts, side) ordering,
     so Catalyst plans a single exchange feeding two window frames. The
     choice between carries is a per-row expression. Adds a
-    ``direction<suffix>`` column ('backward'/'forward', NULL when no
+    ``direction_right`` column ('backward'/'forward', NULL when no
     right row exists for the key). Right rows sort before left rows at
     equal timestamps (left_side=1): the backward leg is inclusive, the
     forward leg strict — an exact-timestamp match wins via backward at
@@ -315,9 +312,9 @@ def asof_join_nearest(
         .select(
             *lcols,
             *[
-                F.col(f"_chosen.{c}").alias(f"{c}{suffix}")
+                F.col(f"_chosen.{c}").alias(f"{c}_right")
                 for c in right_payload
             ],
-            direction.alias(f"direction{suffix}"),
+            direction.alias("direction_right"),
         )
     )

@@ -17,9 +17,8 @@ def compact_partition(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
 ) -> int:
-    """Rewrite one partition directory into ~target-sized files.
+    """Rewrite one parquet partition directory into ~target-sized files.
 
     Returns the file count written. Uses a size-derived coalesce — no
     shuffle, just fewer output tasks; safe to run while readers are
@@ -59,8 +58,8 @@ def compact_partition(
         part_keys.append(os.path.basename(subdirs[0]).split("=", 1)[0])
         probe = subdirs[0]
 
-    df = spark.read.format(fmt).load(path)
-    writer = df.coalesce(n_files).write.format(fmt).mode("overwrite")
+    df = spark.read.parquet(path)
+    writer = df.coalesce(n_files).write.format("parquet").mode("overwrite")
     if part_keys:
         writer = writer.partitionBy(*part_keys)
     writer.save(path + "_compacted")
@@ -82,18 +81,17 @@ def overwrite_partitions_dynamic(
     df: DataFrame,
     path: str,
     partition_keys: tuple[str, ...],
-    fmt: str = "parquet",
 ) -> None:
-    """Idempotent partition rewrite: only the partitions present in ``df``
-    are replaced (dynamic partition overwrite), the rest of the table is
-    untouched. This is the batch-side exactly-once story: a re-run of a
-    failed day/coin slice converges to the same state."""
+    """Idempotent parquet partition rewrite: only the partitions present
+    in ``df`` are replaced (dynamic partition overwrite), the rest of the
+    table is untouched. This is the batch-side exactly-once story: a
+    re-run of a failed day/coin slice converges to the same state."""
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         (
-            df.write.format(fmt)
+            df.write.format("parquet")
             .mode("overwrite")
             .partitionBy(*partition_keys)
             .save(path)

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,25 +29,18 @@ def salted_sum(
     value_col: str,
     alias: str,
     buckets: int = 16,
-    exact_decimal: bool = True,
 ) -> DataFrame:
-    """Two-stage salted SUM (optionally decimal-exact). Result is
-    identical to a direct groupBy — including bit-identical doubles when
-    ``exact_decimal`` — but no reducer ever sees more than ~1/buckets of
-    a hot key's rows."""
-    v = F.col(value_col)
-    if exact_decimal:
-        v = v.cast("decimal(38,6)")
+    """Two-stage decimal-exact salted SUM. Result is identical to a
+    direct groupBy — including bit-identical doubles — but no reducer
+    ever sees more than ~1/buckets of a hot key's rows."""
+    v = F.col(value_col).cast("decimal(38,6)")
     salt = (F.xxhash64(*[F.col(k) for k in keys], F.monotonically_increasing_id()) % buckets).alias("_salt")
     partial = (
         df.select(*keys, v.alias("_v"), salt)
         .groupBy(*keys, "_salt")
         .agg(F.sum("_v").alias("_partial"))
     )
-    out_expr: Column = F.sum("_partial")
-    if exact_decimal:
-        out_expr = out_expr.cast("double")
-    return partial.groupBy(*keys).agg(out_expr.alias(alias))
+    return partial.groupBy(*keys).agg(F.sum("_partial").cast("double").alias(alias))
 
 
 def salted_count(

@@ -77,7 +77,6 @@ def merge_upsert(
     keys: Sequence[str],
     partition_keys: Sequence[str] = (),
     order_col: str | None = None,
-    fmt: str = "parquet",
 ) -> None:
     """Upsert ``updates`` into the dataset at ``target_path`` by ``keys``.
 
@@ -89,13 +88,13 @@ def merge_upsert(
 
     if not os.path.exists(target_path):
         # first load: nothing to merge
-        writer = updates.write.format(fmt).mode("overwrite")
+        writer = updates.write.format("parquet").mode("overwrite")
         if partition_keys:
             writer = writer.partitionBy(*partition_keys)
         writer.save(target_path)
         return
 
-    target = spark.read.format(fmt).load(target_path)
+    target = spark.read.parquet(target_path)
     # align column order to the target so unions and rewrites are stable
     updates = updates.select(*target.columns)
 
@@ -105,15 +104,12 @@ def merge_upsert(
         merged = updates.unionByName(
             scoped.join(updates.select(*keys), keys, "anti")
         )
-        overwrite_partitions_dynamic(
-            merged, target_path, tuple(partition_keys), fmt
-        )
+        overwrite_partitions_dynamic(merged, target_path, tuple(partition_keys))
         return
 
     merged = updates.unionByName(target.join(updates.select(*keys), keys, "anti"))
     staged = target_path + "_merged"
-    writer = merged.write.format(fmt).mode("overwrite")
-    writer.save(staged)
+    merged.write.format("parquet").mode("overwrite").save(staged)
 
     old = target_path + "_old"
     if os.path.exists(old):

@@ -22,14 +22,13 @@ def write_bucketed(
     bucket_col: str,
     num_buckets: int = 64,
     sort_col: str | None = None,
-    fmt: str = "parquet",
 ) -> None:
-    """Bucketed catalog table: joins/aggregations on ``bucket_col`` between
+    """Bucketed parquet catalog table: joins/aggregations on ``bucket_col`` between
     tables bucketed the same way need NO shuffle (Catalyst sees the
     hash-distribution requirement already satisfied). ``num_buckets``
     should divide evenly into cluster cores; 64 suits local[32] tests,
     clusters want O(cores)."""
-    writer = df.write.format(fmt).bucketBy(num_buckets, bucket_col)
+    writer = df.write.format("parquet").bucketBy(num_buckets, bucket_col)
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.mode("overwrite").saveAsTable(table)
@@ -40,7 +39,6 @@ def write_with_bloom_filters(
     path: str,
     bloom_cols: Sequence[str],
     ndv: int = 100_000,
-    mode: str = "overwrite",
 ) -> None:
     """Parquet column-level bloom filters for point-lookup pruning.
 
@@ -60,7 +58,7 @@ def write_with_bloom_filters(
     appear exactly where they help (high-cardinality chunks that fell
     back to plain encoding).
     """
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     for c in bloom_cols:
         writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         writer = writer.option(f"parquet.bloom.filter.expected.ndv#{c}", str(ndv))

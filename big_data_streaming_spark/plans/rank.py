@@ -261,7 +261,6 @@ def global_ntile(
     n_buckets: int,
     *,
     bucket_col: str = "bucket",
-    num_ranges: int = DEFAULT_RANGES,
 ) -> DataFrame:
     """Append ``bucket_col`` = ``ntile(n_buckets) OVER (ORDER BY ...)``
     computed from the distributed global rank via ntile's exact
@@ -270,13 +269,7 @@ def global_ntile(
     ``(g-1) div (q+1) + 1`` inside the first ``r*(q+1)`` rows and
     ``r + (g - r*(q+1) - 1) div q + 1`` after. Bit-identical to SQL
     ntile for any total order (asserted in tests/test_rank.py)."""
-    ranked = global_order(
-        df,
-        order_cols,
-        rank_col="_gr",
-        total_col="_tot",
-        num_ranges=num_ranges,
-    )
+    ranked = global_order(df, order_cols, rank_col="_gr", total_col="_tot")
     k = int(n_buckets)
     bucket = F.expr(
         f"""CASE

@@ -23,7 +23,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def interleave_bits(cols: Sequence[Column], bits: int = 8) -> Column:
@@ -72,9 +71,8 @@ def write_zordered(
     cols: Sequence[str],
     bits: int = 8,
     n_files: int = 8,
-    fmt: str = "parquet",
 ) -> None:
-    """Write ``df`` clustered along the Z-curve of ``cols``: range-split
+    """Write ``df`` as parquet clustered along the Z-curve of ``cols``: range-split
     the z-value into ``n_files`` contiguous slices, sort within each, one
     file per slice → every file covers a compact hyper-rectangle of the
     key space (verified quantitatively in tests/test_zorder.py)."""
@@ -83,7 +81,7 @@ def write_zordered(
         zdf.repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.format(fmt)
+        .write.format("parquet")
         .mode("overwrite")
         .save(path)
     )

@@ -133,12 +133,12 @@ def _avro_type(dt: T.DataType):
     raise TypeError(f"avro fallback: unsupported Spark type {dt.simpleString()}")
 
 
-def avro_schema_json(schema: T.StructType, name: str = "spark_row") -> str:
+def avro_schema_json(schema: T.StructType) -> str:
     fields = [
         {"name": f.name, "type": ["null", _avro_type(f.dataType)]}
         for f in schema.fields
     ]
-    return json.dumps({"type": "record", "name": name, "fields": fields})
+    return json.dumps({"type": "record", "name": "spark_row", "fields": fields})
 
 
 def _spark_type_from_avro(at) -> T.DataType:

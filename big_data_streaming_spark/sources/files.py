@@ -27,16 +27,12 @@ def read_json(
 
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    *,
-    header: bool = True,
-    **options: str,
+    spark: SparkSession, path: str, schema: StructType, **options: str
 ) -> DataFrame:
+    """CSV with a header line."""
     return (
         spark.read.schema(schema)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .options(**options)
         .csv(path)
     )
@@ -59,16 +55,16 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
         return avro_fallback.read_avro(spark, path)
 
 
-def write(df: DataFrame, path: str, fmt: str, mode: str = "overwrite", **options: str) -> None:
-    """Uniform writer. For avro, the spark-avro datasource is tried first;
-    when the jar is absent the spec-compliant pure-Python fallback writes
-    the container files instead (see avro_fallback.py — files are
-    readable by the Java reference implementation)."""
+def write(df: DataFrame, path: str, fmt: str, **options: str) -> None:
+    """Uniform overwriting writer. For avro, the spark-avro datasource is
+    tried first; when the jar is absent the spec-compliant pure-Python
+    fallback writes the container files instead (see avro_fallback.py —
+    files are readable by the Java reference implementation)."""
     try:
-        df.write.format(fmt).mode(mode).options(**options).save(path)
+        df.write.format(fmt).mode("overwrite").options(**options).save(path)
     except Exception as e:  # depends on classpath
         from big_data_streaming_spark.sources import avro_fallback
 
         if fmt != "avro" or not avro_fallback.spark_avro_missing(e):
             raise
-        avro_fallback.write_avro(df, path, mode=mode)
+        avro_fallback.write_avro(df, path)

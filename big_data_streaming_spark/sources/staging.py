@@ -8,10 +8,13 @@ regenerated fixture at the same path would otherwise serve stale rows,
 and a crash mid-write would leave a partial dir that "exists" (round-2
 review finding). The contract here: the staged dir is valid iff every
 wanted file exists AND a ``_source_fingerprint`` marker — written ONLY
-after the build completes — records the source's current (size,
-mtime_ns). One implementation, shared by every staging site, so the
-validity invariant cannot drift between copies (round-3 review
-finding).
+after the build completes — records the source's current
+``catalog.file_fingerprint``: (file, size, mtime_ns) of every parquet
+file under it, so a file rewritten in place inside a directory source
+invalidates the copy although the directory's own stat is unchanged.
+One implementation, shared by every staging site, so the validity
+invariant cannot drift between copies (round-3 review finding); the
+same rule keys ``catalog.table_facts``.
 
 Mutable per-run scratch (streaming checkpoints, sink dirs, round-trip
 writes) lives beside it, in ``pid_scratch_dirs``."""
@@ -24,14 +27,15 @@ import shutil
 import tempfile
 from collections.abc import Callable
 
+from big_data_streaming_spark.sources.catalog import file_fingerprint
+
 
 def fingerprint_cached_dir(
     src: str, dst: str, want: list[str], build: Callable[[], None]
 ) -> str:
     """Return ``dst``, rebuilding it via ``build()`` unless every path in
     ``want`` exists and the marker matches ``src``'s fingerprint."""
-    st = os.stat(src)
-    fingerprint = f"{st.st_size}:{int(st.st_mtime_ns)}"
+    fingerprint = repr(file_fingerprint(src))
     marker = os.path.join(dst, "_source_fingerprint")
     if (
         all(os.path.isfile(p) for p in want)

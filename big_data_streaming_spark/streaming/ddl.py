@@ -178,7 +178,6 @@ def ensure_table(
     schema: StructType,
     *,
     driver: str | None = None,
-    string_length: int = 4000,
     **options: str,
 ) -> bool:
     """Idempotently provision ``table`` (optionally ``schema.table``) with
@@ -191,7 +190,7 @@ def ensure_table(
     the dialect's "already exists" SQLStates, so concurrent provisioners
     race safely.
     """
-    ddl = build_create_table(table, schema, string_length=string_length)
+    ddl = build_create_table(table, schema)
     schema_name = table.split(".")[-2] if "." in table else None
     conn = jdbc_connection(spark, url, driver, options)
     try:

@@ -95,22 +95,21 @@ def run_live_topk(
     )
 
 
-def drain_until_idle(
-    q: StreamingQuery, *, idle_batches: int = 2, timeout: float = 180.0
-) -> None:
-    """Block until the live query has gone idle — ``idle_batches``
-    consecutive zero-input micro-batches after at least one data batch —
-    then stop it. The trailing no-data batches are load-bearing: they are
-    what advances the watermark past the final data and flushes the last
-    finalized windows out of state (noDataMicroBatches, on by default).
+def drain_until_idle(q: StreamingQuery) -> None:
+    """Block until the live query has gone idle — two consecutive
+    zero-input micro-batches after at least one data batch — then stop it
+    (``TimeoutError`` after 180 s). The trailing no-data batches are
+    load-bearing: they are what advances the watermark past the final
+    data and flushes the last finalized windows out of state
+    (noDataMicroBatches, on by default).
     The engine schedules no-data batches only while the watermark still
     needs advancing — after the flush it goes quiet for good, so the
-    default threshold is exactly the two no-data batches the flush takes;
-    demand more and the wait never returns.
+    threshold is exactly the two no-data batches the flush takes; demand
+    more and the wait never returns.
     """
     import time
 
-    deadline = time.monotonic() + timeout
+    deadline = time.monotonic() + 180.0
     seen_data = False
     counted: set[int] = set()
     idle = 0
@@ -118,7 +117,7 @@ def drain_until_idle(
         # recentProgress, not lastProgress: the two trailing no-data flush
         # batches can both complete within one 0.2 s poll interval, and a
         # lastProgress sample would observe only the second — idle would
-        # never reach idle_batches and a healthy drain would time out
+        # never reach two and a healthy drain would time out
         # (ADVICE r3). recentProgress retains a window of completed
         # batches; dedupe by batchId so each is counted exactly once.
         for p in q.recentProgress:
@@ -133,7 +132,7 @@ def drain_until_idle(
                 idle = 0
             elif seen_data:
                 idle += 1
-                if idle >= idle_batches:
+                if idle >= 2:
                     q.stop()
                     q.awaitTermination()
                     return

@@ -12,7 +12,7 @@ Here the same dataflow is a checkpointed Structured Streaming query:
 * offsets/watermark live in the **checkpoint**, not a JSON file — crash
   and restart resumes exactly where it stopped;
 * ``Trigger.ProcessingTime("60 seconds")`` replaces the sleep loop,
-  ``Trigger.AvailableNow`` replaces the bootstrap full-load;
+  ``{"availableNow": True}`` replaces the bootstrap full-load;
 * late data is governed by ``withWatermark`` with a declared tolerance
   instead of being silently dropped.
 
@@ -28,6 +28,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from big_data_streaming_spark.streaming.sinks import start_file_sink
+
 
 def start_incremental_copy(
     spark: SparkSession,
@@ -37,24 +39,17 @@ def start_incremental_copy(
     schema: StructType,
     *,
     fmt: str = "parquet",
-    partition_by: tuple[str, ...] = (),
-    poll_seconds: int | None = 60,
-    available_now: bool = False,
+    trigger: dict | None = None,
 ) -> StreamingQuery:
-    """Continuously (or once, with ``available_now``) copy newly-arrived
-    source files into the curated layout. Exactly-once: file-source offsets
-    + file-sink manifest both live in the checkpoint."""
+    """Copy newly-arrived source files into the curated parquet layout
+    through :func:`start_file_sink`, every 60 s unless ``trigger`` says
+    otherwise (``{"availableNow": True}`` copies the backlog once).
+    Exactly-once: file-source offsets + file-sink manifest both live in
+    the checkpoint."""
     sdf = spark.readStream.schema(schema).format(fmt).load(source_dir)
-    writer = (
-        sdf.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_file_sink(
+        sdf,
+        target_dir,
+        checkpoint,
+        trigger=trigger or {"processingTime": "60 seconds"},
     )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif poll_seconds:
-        writer = writer.trigger(processingTime=f"{poll_seconds} seconds")
-    return writer.start()

@@ -15,11 +15,9 @@ from big_data_streaming_spark.schemas import KLINE_WIRE_SCHEMA
 
 
 def parse_json_stream(
-    raw: DataFrame,
-    schema: StructType = KLINE_WIRE_SCHEMA,
-    value_col: str = "value",
+    raw: DataFrame, schema: StructType = KLINE_WIRE_SCHEMA
 ) -> DataFrame:
-    """A2+A3+A4: binary/string JSON value → typed flat columns.
+    """A2+A3+A4: binary/string JSON ``value`` → typed flat columns.
 
     PERMISSIVE parse (malformed rows → nulls) matching the reference's
     implicit policy (spark/streaming-shorttime.py:54); callers wanting a
@@ -27,25 +25,25 @@ def parse_json_stream(
     schema and filter it into a dead-letter sink.
     """
     return raw.select(
-        F.from_json(F.col(value_col).cast("string"), schema).alias("data")
+        F.from_json(F.col("value").cast("string"), schema).alias("data")
     ).select("data.*")
 
 
-def with_event_time(
-    df: DataFrame, cols: tuple[str, ...] = ("timestamp", "close_time")
-) -> DataFrame:
-    """A5: epoch-ms longs → TIMESTAMP via timestamp_millis (exact; the
-    reference divides by 1000 and casts — same semantics, ms precision,
-    reference spark/streaming-shorttime.py:58-59)."""
-    for c in cols:
+def with_event_time(df: DataFrame) -> DataFrame:
+    """A5: epoch-ms ``timestamp`` and ``close_time`` longs → TIMESTAMP
+    via timestamp_millis (exact; the reference divides by 1000 and casts
+    — same semantics, ms precision, reference
+    spark/streaming-shorttime.py:58-59)."""
+    for c in ("timestamp", "close_time"):
         df = df.withColumn(c, F.timestamp_millis(F.col(c)))
     return df
 
 
-def with_date_parts(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
-    """A6: derive the partition keys the curated layout is laid out by."""
-    return df.withColumn("year", F.year(ts_col)).withColumn(
-        "month", F.month(ts_col)
+def with_date_parts(df: DataFrame) -> DataFrame:
+    """A6: derive the partition keys the curated layout is laid out by
+    from ``timestamp``."""
+    return df.withColumn("year", F.year("timestamp")).withColumn(
+        "month", F.month("timestamp")
     )
 
 
@@ -60,7 +58,6 @@ CORRUPT_COL = "_corrupt_record"
 def parse_json_with_dead_letter(
     raw: DataFrame,
     schema: StructType = KLINE_WIRE_SCHEMA,
-    value_col: str = "value",
     keep: tuple[str, ...] = (),
 ) -> tuple[DataFrame, DataFrame]:
     """Explicit corrupt-record policy (SURVEY.md §1.2): returns
@@ -87,9 +84,9 @@ def parse_json_with_dead_letter(
     )
     parsed = raw.select(
         *[F.col(c) for c in keep],
-        F.col(value_col).cast("string").alias("_raw"),
+        F.col("value").cast("string").alias("_raw"),
         F.from_json(
-            F.col(value_col).cast("string"),
+            F.col("value").cast("string"),
             schema_with_corrupt,
             {"columnNameOfCorruptRecord": CORRUPT_COL},
         ).alias("data"),

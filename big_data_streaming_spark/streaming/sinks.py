@@ -118,7 +118,6 @@ def write_jdbc_append(
     *,
     user: str,
     password: str,
-    batchsize: int = 10_000,
 ) -> None:
     """A18: JDBC append. For exactly-once under retries the target table
     needs a natural key (coin, interval, timestamp) with upsert semantics;
@@ -130,7 +129,7 @@ def write_jdbc_append(
         .option("dbtable", table)
         .option("user", user)
         .option("password", password)
-        .option("batchsize", str(batchsize))
+        .option("batchsize", "10000")
         .mode("append")
         .save()
     )
@@ -200,7 +199,6 @@ def read_jdbc_partitioned(
     lower_bound,
     upper_bound,
     num_partitions: int = 16,
-    schema=None,
     **options: str,
 ):
     """A14 with the single-task fix: bound-partitioned JDBC scan (the
@@ -217,8 +215,6 @@ def read_jdbc_partitioned(
     )
     for k, v in options.items():
         reader = reader.option(k, v)
-    if schema is not None:
-        reader = reader.schema(schema)
     return reader.load()
 
 
@@ -234,9 +230,7 @@ def start_upsert_sink(
     checkpoint: str,
     *,
     keys: tuple[str, ...],
-    partition_keys: tuple[str, ...] = (),
     order_col: str | None = None,
-    fmt: str = "parquet",
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Streaming CDC upsert: every micro-batch is MERGEd into the parquet
@@ -247,9 +241,9 @@ def start_upsert_sink(
     twice is a no-op, so foreachBatch's at-least-once contract yields an
     exactly-once *table state*.
 
-    At 100 TB pass ``partition_keys`` so each micro-batch rewrites only
-    the partitions it touches (dynamic partition overwrite), not the
-    table."""
+    Each micro-batch rewrites the whole target through the full-snapshot
+    merge; a partition-scoped sink would call ``merge_upsert`` with
+    ``partition_keys`` from its own ``start_foreach_batch`` callback."""
     from big_data_streaming_spark.operators.upsert import merge_upsert
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
@@ -261,9 +255,7 @@ def start_upsert_sink(
                 target_path,
                 batch,
                 keys=keys,
-                partition_keys=partition_keys,
                 order_col=order_col,
-                fmt=fmt,
             )
 
     return start_foreach_batch(df, merge_batch, checkpoint, trigger=trigger)

@@ -6,8 +6,9 @@
   envelope-preserving option. Requires the spark-sql-kafka package on the
   classpath; this test container doesn't ship it, so construction is
   attempted lazily and errors carry the remedy.
-* ``json_file_stream`` / ``parquet_file_stream`` — the test/CI transport:
-  identical downstream plan, file listing instead of broker offsets.
+* ``kafka_envelope_file_stream`` / ``raw_text_file_stream`` — the
+  test/CI transport: JSON lines read as text, so the same parse chain
+  runs over a file listing instead of broker offsets.
 
 At 100 TB-scale ingestion the knobs that matter: ``maxOffsetsPerTrigger``
 bounds the first batch after downtime (the reference sets none and would
@@ -19,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def kafka_stream(
@@ -70,7 +70,6 @@ def kafka_envelope_file_stream(
     *,
     topic: str = "fixture",
     keep_envelope: bool = False,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-backed stand-in with the EXACT Kafka source schema.
 
@@ -83,9 +82,7 @@ def kafka_envelope_file_stream(
     (monotonic ids aren't allowed in streaming plans); they exist to
     exercise envelope-dependent logic, not to be checkpoint keys.
     """
-    raw = raw_text_file_stream(
-        spark, path, max_files_per_trigger=max_files_per_trigger
-    )
+    raw = raw_text_file_stream(spark, path)
     df = raw.select(
         F.lit(None).cast("binary").alias("key"),
         F.col("value").cast("binary").alias("value"),
@@ -100,21 +97,6 @@ def kafka_envelope_file_stream(
     return df
 
 
-def json_file_stream(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """JSON-lines directory as a stream — the fixture replay transport
-    (SURVEY.md §5.3). One JSON object per line ≙ one Kafka record value."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)
-
-
 def raw_text_file_stream(
     spark: SparkSession, path: str, *, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -126,15 +108,3 @@ def raw_text_file_stream(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.text(path)
 
-
-def parquet_file_stream(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)

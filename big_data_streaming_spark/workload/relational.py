@@ -81,9 +81,10 @@ def q_scan_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # tr(): same single-fused-scan-task decimal aggregation as q_tpch_q1
-    # (round-11 profiler).
-    li = tr(spark, sf_dir, "lineitem")
+    # t(), not tr(): the scan-parallelism floor doubled the tasks
+    # (4 -> 8 at sf0.1) and won 1 of 10 interleaved pairs on 4 CPUs
+    # (1.66 -> 1.89 s median; TR_PAIRS_r16.json).
+    li = t(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")

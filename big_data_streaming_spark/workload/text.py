@@ -4368,9 +4368,10 @@ _COL_LIFT = (
 def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    # tr(): bigram transform + explode fused into the single scan task
-    # (round-12 sweep); A/B 2.8 -> 2.0 s at sf0.1.
-    d = tr(spark, sf_dir, "documents")
+    # t(), not tr(): the scan-parallelism floor more than doubled the
+    # tasks (11 -> 24 at sf0.1) and won 4 of 10 interleaved pairs on
+    # 4 CPUs (5.07 -> 5.17 s median; TR_PAIRS_r16.json).
+    d = t(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     bg = d.select(
         F.explode(

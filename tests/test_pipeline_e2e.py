@@ -56,7 +56,7 @@ def test_full_pipeline_klines_to_product_query(spark, tmp_path):
         curated_dir,
         str(tmp_path / "ckpt_cur"),
         schema=spark.read.parquet(raw_dir).schema,
-        available_now=True,
+        trigger={"availableNow": True},
     )
     q2.awaitTermination()
 

@@ -207,7 +207,8 @@ def test_checkpoint_resume_no_duplicates(spark, tmp_path, kline_batch):
     write_jsonl(src, "b1.jsonl", kline_batch[: len(kline_batch) // 2])
     q = start_incremental_copy(
         spark, src, out, ckpt,
-        schema=spark.read.text(src).schema, fmt="text", available_now=True,
+        schema=spark.read.text(src).schema, fmt="text",
+        trigger={"availableNow": True},
     )
     q.awaitTermination()
     n1 = spark.read.parquet(out).count()
@@ -217,7 +218,8 @@ def test_checkpoint_resume_no_duplicates(spark, tmp_path, kline_batch):
     write_jsonl(src, "b2.jsonl", kline_batch[len(kline_batch) // 2 :])
     q = start_incremental_copy(
         spark, src, out, ckpt,
-        schema=spark.read.text(src).schema, fmt="text", available_now=True,
+        schema=spark.read.text(src).schema, fmt="text",
+        trigger={"availableNow": True},
     )
     q.awaitTermination()
     n2 = spark.read.parquet(out).count()
